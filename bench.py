@@ -580,7 +580,7 @@ def main() -> None:
         med = runs[1] if len(runs) == 3 else (runs[0] + runs[1]) / 2
         return round(med, 3), n
 
-    def timed_median3(run, single_pass_above=None) -> tuple[float, int, float]:
+    def timed_median3(run, single_pass_above=None) -> tuple[float, int, float | None]:
         """sf1-tier protocol (VERDICT r10 item 9 / r9 item 7): exact
         median-of-3 like the sf0.1 suite, because the sf1 rows feed the
         convergence tables and adaptive-2 left them noisier than the
@@ -588,7 +588,7 @@ def main() -> None:
         spread) where spread = max-min across the passes — the recorded
         variance.  A first pass above `single_pass_above` seconds is
         still recorded as-is (same wall-bound rationale as
-        timed_adaptive)."""
+        timed_adaptive), with spread None: one pass measures none."""
         runs, n = [], 0
         for _ in range(3):
             release_blocks()
@@ -596,7 +596,7 @@ def main() -> None:
             n = run()
             runs.append(time.perf_counter() - t0)
             if len(runs) == 1 and single_pass_above and runs[0] > single_pass_above:
-                return round(runs[0], 3), n, 0.0
+                return round(runs[0], 3), n, None
         runs.sort()
         return round(runs[1], 3), n, round(runs[-1] - runs[0], 3)
 
@@ -663,7 +663,7 @@ def main() -> None:
             from tools.make_scale_tier import make_scale_tier
 
             make_scale_tier(10, sf_dir, SF1_DIR)
-        sf1_spread: dict[str, float] = {}
+        sf1_spread: dict[str, float | None] = {}
         sf1, sf1_growth = run_tier("sf1", SF1_DIR, SF1_QUERIES, 5,
                                     single_pass_above=90, median3=True,
                                     spread_out=sf1_spread)
@@ -741,10 +741,10 @@ def main() -> None:
         # so the driver's low-core scaling pass can never clobber the
         # headline record again (VERDICT r10 item 2: the committed
         # BENCH_local.json turned out to be the c8 run).  BENCH_local.json
-        # itself is only (re)written by the full-core-count run.
+        # itself is only (re)written by a run on every core of the host.
         _repo = os.path.dirname(os.path.abspath(__file__))
         targets = [os.path.join(_repo, f"BENCH_local_c{_CPUS}.json")]
-        if _CPUS >= 32 or _CPUS == os.cpu_count():
+        if _CPUS == os.cpu_count():
             targets.append(os.path.join(_repo, "BENCH_local.json"))
         for target in targets:
             try:

@@ -23,6 +23,9 @@ truncate lineage.
 
 from __future__ import annotations
 
+import math
+import warnings
+
 from pyspark.sql import DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
@@ -2265,7 +2268,8 @@ def betweenness_centrality(
     sum rescaled by n_seeds/k.  The estimate is unbiased and its
     relative standard error shrinks as 1/sqrt(k) (~1.6% at k=4096);
     results above the threshold are therefore an ESTIMATE, not the
-    exact sum.  Pass sample_sources=None to force the exact kernel at
+    exact sum, and the auto route says so with a UserWarning naming k, n
+    and the error.  Pass sample_sources=None to force the exact kernel at
     any seed count (the flag for clusters sized for quadratic state),
     or an int to set the target sample size.  At or below the
     threshold — including every declared gate query (<= 8 sources) —
@@ -2285,7 +2289,8 @@ def betweenness_centrality(
             F.lit(1.0).alias("sigma"),
         )
     )
-    if sample_sources == "auto":
+    auto = sample_sources == "auto"
+    if auto:
         sample_sources = (
             BETWEENNESS_EXACT_MAX_SOURCES
             if n_seeds > BETWEENNESS_EXACT_MAX_SOURCES
@@ -2301,6 +2306,16 @@ def betweenness_centrality(
         )
         if k:  # hash-degenerate empty sample: keep the exact route
             frontier, scale = sampled, float(n_seeds) / float(k)
+            if auto:
+                warnings.warn(
+                    f"betweenness_centrality: {n_seeds} sources exceed "
+                    f"BETWEENNESS_EXACT_MAX_SOURCES={BETWEENNESS_EXACT_MAX_SOURCES}"
+                    f"; returning the source-sampled estimate from k={k} of "
+                    f"n={n_seeds} sources (relative standard error "
+                    f"~1/sqrt(k) = {1 / math.sqrt(k):.1%}).  Pass "
+                    "sample_sources=None for the exact sum.",
+                    stacklevel=2,
+                )
     levels = [frontier]
     visited = frontier.select("src", "dst")
     level = 0

@@ -324,11 +324,9 @@ def bfs_distances(
     max_hops: int | None = None,
     track_paths: bool = False,
     num_partitions: int | None = None,
-    checkpoint_every: int = 1,
     k: int = 1,
     all_shortest: bool = False,
     max_rows: int | None = None,
-    hops_per_round: int = 1,
 ) -> DataFrame:
     """All-pairs-from-sources BFS: returns (src, dst, dist [, path]).
 
@@ -354,31 +352,6 @@ def bfs_distances(
     semantics because the k best walks to a vertex extend the k best walks
     to its predecessors; entries beyond k are pruned permanently, bounding
     state at k rows per pair regardless of cycles.
-
-    hops_per_round (length-only mode, i.e. track_paths=False/k=1): relax
-    this many adjacency steps lazily inside ONE checkpoint job per round
-    (hop j's min-deduped candidates feed hop j+1; all hops union into the
-    min-dist merge before the visited anti-join).  Correctness holds for
-    any value: every candidate dist is the length of a real walk (never
-    an underestimate), any pair first reachable at depth d has a
-    predecessor in the max-dist frontier, and `max_hops` still binds
-    exactly (the last round is clamped).  Tie-break modes (track_paths /
-    k>1 / all_shortest) need per-level candidate sets and stay
-    single-hop.
-
-    Default is 1 — a RECORDED NEGATIVE RESULT (round 5): hops_per_round=2
-    measured SLOWER across every BFS-backed query at sf0.1 (reachability
-    2.63→3.12 s, closeness 2.84→3.49 s, harmonic 2.70→3.47 s,
-    eccentricity 2.89→3.14 s; shortest_len a wash), because hop 2 expands
-    from hop 1's min-deduped candidates BEFORE the visited anti-join — on
-    the dense mid-BFS frontiers of these queries most hop-1 candidates
-    are already visited, so the second join is mostly wasted work, and
-    that waste grows (not shrinks) with data volume.  This differs from
-    temporal_reachability's fused multi-hop (a label-improvement lattice:
-    re-relaxing a label is never wasted if it improves) where the same
-    trick measured ~2× faster.  Keep 1 unless the frontier is known
-    sparse at every level (e.g. long chains), where 2 halves the
-    job-latency floor.
 
     max_rows: cap on the ACCUMULATED result rows, intended for
     all_shortest (the other modes are bounded at k rows per (src, dst)
@@ -411,61 +384,9 @@ def bfs_distances(
         frontier = visited
         level = 0
         total_rows = 0
-        plain = not track_paths and k == 1 and not all_shortest
-        hpr = max(1, hops_per_round) if plain else 1
         while True:
             if max_hops is not None and level >= max_hops:
                 break
-            if plain and hpr > 1:
-                hops = hpr if max_hops is None else min(hpr, max_hops - level)
-                level += hops
-                cur = frontier.select("src", "dst", "dist")
-                laps = []
-                for _ in range(hops):
-                    cur = (
-                        cur.alias("f")
-                        .join(edges.alias("e"), F.col("f.dst") == F.col("e.src"))
-                        .select(
-                            F.col("f.src").alias("src"),
-                            F.col("e.dst").alias("dst"),
-                            (F.col("f.dist") + 1).alias("dist"),
-                        )
-                        # lazy per-hop min-dedup: stops frontier×edges
-                        # fan-out from compounding across hops (all inside
-                        # this round's one job)
-                        .groupBy("src", "dst")
-                        .agg(F.min("dist").alias("dist"))
-                    )
-                    laps.append(cur)
-                cand = laps[0]
-                for lap in laps[1:]:
-                    cand = cand.unionByName(lap)
-                if len(laps) > 1:
-                    cand = cand.groupBy("src", "dst").agg(
-                        F.min("dist").alias("dist")
-                    )
-                nxt = cand.join(
-                    visited.select("src", "dst"), ["src", "dst"], "left_anti"
-                )
-                nxt, n_new = checkpoint_with_count(nxt)
-                if n_new == 0:
-                    break
-                if max_rows is not None:
-                    total_rows = total_rows + n_new
-                    if total_rows > max_rows:
-                        raise PGQCapacityError(
-                            f"bfs_distances exceeded max_rows={max_rows} at "
-                            f"level {level} ({total_rows} rows accumulated). "
-                            "Bound the traversal with max_hops or restrict "
-                            "the source set."
-                        )
-                visited = visited.unionByName(nxt)
-                if level % 10 in (0, 1):
-                    visited = materialize(visited)
-                # interior hops' neighborhoods were fully explored inside
-                # this round — only the deepest rows can reach anything new
-                frontier = nxt.where(F.col("dist") == F.lit(level))
-                continue
             level += 1
             expanded = (
                 frontier.alias("f")
@@ -895,44 +816,111 @@ def bidirectional_length(
         bwd.unpersist()
 
 
+def _min_label_fixpoint(
+    dist: DataFrame,
+    label: str,
+    relax,
+    adjacency,
+    payload: tuple[str, ...] = (),
+    max_iters: int | None = None,
+) -> DataFrame:
+    """Label-correcting min fixpoint shared by Bellman-Ford and temporal
+    reachability: the reference's multi-lane Bellman-Ford
+    (cheapest_path_length.cpp:52-136) with the relax step supplied by the
+    caller.
+
+    `dist` is the seeded (src, dst, label[, *payload], __improved) frame.
+    Each round joins the improved-only frontier (alias `f`) to
+    `adjacency(bound)` (alias `e`) on f.dst = e.src, where `bound` is the
+    previous round's minimum improved label (None in round 1), and
+    `relax(joined)` turns the joined rows into raw candidate rows with
+    dist's columns minus __improved.
+
+    Merge: old rows and raw candidates flow into ONE groupBy(src, dst)
+    min, one Exchange per round (a full-outer merge pays two plus the
+    sort-merge join's two sorts); map-side partial aggregation reduces
+    the candidates.  Length-only labels keep a codegen HashAggregate:
+    min over everything is the new label, min over the old row's echo
+    (__oc, NULL on candidates) the previous one, and a pair improved
+    when it had no previous label or got a strictly smaller one.  With a
+    payload the min is over struct(label, *payload, __cand): at equal
+    label the smaller payload wins, at equal (label, payload) the old
+    row's 0 flag wins, so __cand=1 on the winner marks an improvement.
+    Candidates must then never carry a NULL label (struct ordering puts
+    NULLs first), so relax filters them.
+
+    The improved count and the bound ride the round's checkpoint job via
+    one Observation, so a round is one Spark job.  Stops when nothing
+    improved or after `max_iters` rounds.
+    """
+    keep = ["src", "dst", label, *payload]
+    rounds = 0
+    bound = None
+    while max_iters is None or rounds < max_iters:
+        rounds += 1
+        frontier = dist.where(F.col("__improved")).select(*keep)
+        cand = relax(
+            frontier.alias("f").join(
+                adjacency(bound).alias("e"), F.col("f.dst") == F.col("e.src")
+            )
+        )
+        if payload:
+            merged = (
+                dist.select(*keep)
+                .withColumn("__cand", F.lit(0))
+                .unionByName(cand.withColumn("__cand", F.lit(1)))
+                .groupBy("src", "dst")
+                .agg(F.min(F.struct(label, *payload, "__cand")).alias("m"))
+                .select(
+                    "src", "dst",
+                    *(F.col(f"m.{c}").alias(c) for c in (label, *payload)),
+                    (F.col("m.__cand") == 1).alias("__improved"),
+                )
+            )
+        else:
+            merged = (
+                dist.select(*keep, F.col(label).alias("__oc"))
+                .unionByName(
+                    cand.withColumn(
+                        "__oc", F.lit(None).cast(dist.schema[label].dataType)
+                    )
+                )
+                .groupBy("src", "dst")
+                .agg(F.min(label).alias(label), F.min("__oc").alias("__oc"))
+                .select(
+                    *keep,
+                    (
+                        F.col("__oc").isNull() | (F.col(label) < F.col("__oc"))
+                    ).alias("__improved"),
+                )
+            )
+        obs = Observation(f"__pgq_fix_{next(_obs_seq)}")
+        merged = merged.observe(
+            obs,
+            F.sum(F.col("__improved").cast("int")).alias("n"),
+            F.min(F.when(F.col("__improved"), F.col(label))).alias("lo"),
+        )
+        dist = materialize(merged)
+        if not obs.get["n"]:
+            break
+        bound = obs.get["lo"]
+    return dist.select(*keep)
+
+
 def cheapest_path_distances(
     edges: DataFrame,
     sources: DataFrame | None = None,
     max_iters: int | None = None,
     num_partitions: int | None = None,
     track_paths: bool = False,
-    hops_per_round: int = 1,
 ) -> DataFrame:
     """Weighted SSSP from every source: (src, dst, cost[, path]).
 
     Batched Bellman-Ford relaxation — all sources relax together in one
     join per round, converging in at most |V|-1 rounds (the reference's
-    multi-lane Bellman-Ford, cheapest_path_length.cpp:52-136).  Weights are
-    assumed non-negative (the reference makes the same assumption).
-
-    hops_per_round > 1 relaxes that many adjacency steps lazily inside
-    ONE merge + checkpoint job (hop k's min-aggregated candidates feed
-    hop k+1; all hops union into the merge); semantics are unchanged
-    (each round still certifies convergence via the improvement count,
-    and max_iters counts ROUNDS).  Default is 1 — a RECORDED NEGATIVE
-    RESULT (round 5, fresh-session medians-of-3 at sf0.1):
-    hops_per_round=2 measured cheapest_path_vertices 8.0→11.1 s and
-    match_cheapest 8.1→10.0 s (track_paths: the second hop re-shuffles
-    full path arrays through an extra struct-min groupBy), and
-    length-only cheapest_path 7.96→8.23 s (a wash — the relaxation
-    frontier is dense nearly every round, so hop 2's extra join buys few
-    rounds).  Contrast temporal_reachability's fused multi-hop, which
-    measured ~2× faster — its frontier shrinks to improved labels only.
-    The parameter stays for sparse-frontier graphs (long weighted
-    chains), where 2 halves the job-latency floor.  Re-measured at the
-    10x tier (r6, length-only, 3 sources, warm): hops 1/2/3 all land
-    18-21 s — the candidate join volume dominates and multi-hop does
-    not reduce it; still a wash.  Also tried and rejected (r6): a
-    persist-chain for dist (checkpoint every 5th round only, so the
-    full-outer join's (src,dst) hash partitioning survives between
-    rounds) — no measurable win, because the per-round cost is the
-    frontier x adjacency candidate join + min-agg, not the small
-    dist-side exchange.
+    multi-lane Bellman-Ford, cheapest_path_length.cpp:52-136), on the
+    shared _min_label_fixpoint.  Weights are assumed non-negative (the
+    reference makes the same assumption).
 
     track_paths=True (beyond-reference — the reference only returns the
     LENGTH, cheapest_path_length.cpp) additionally returns the path
@@ -996,139 +984,28 @@ def cheapest_path_distances(
             *([F.array(F.col("src")).alias("path")] if track_paths else []),
             F.lit(True).alias("__improved"),
         )
-        rounds = 0
-        while True:
-            rounds += 1
-            if max_iters is not None and rounds > max_iters:
-                break
-            # relax only from rows improved last round (the frontier is a
-            # zero-cost FILTER over the checkpointed dist, not a separate
-            # materialization).  Relaxation emits RAW candidate rows — the
-            # min-aggregation happens once, in the union merge below (or
-            # between hops when hops_per_round > 1, to bound row growth
-            # before the next adjacency join).
-            def _relax(frame):
-                relaxed = frame.alias("f").join(
-                    edges.alias("e"), F.col("f.dst") == F.col("e.src")
-                )
-                if track_paths:
-                    step = (
-                        F.array(F.col("e.edge_id"), F.col("e.dst"))
-                        if "edge_id" in edges.columns
-                        else F.array(F.col("e.dst"))
-                    )
-                    return relaxed.select(
-                        F.col("f.src").alias("src"),
-                        F.col("e.dst").alias("dst"),
-                        (F.col("f.cost") + F.col("e.weight").cast("double")).alias("cost"),
-                        F.concat(F.col("f.path"), step).alias("path"),
-                    )
-                return relaxed.select(
-                    F.col("f.src").alias("src"),
-                    F.col("e.dst").alias("dst"),
-                    (F.col("f.cost") + F.col("e.weight").cast("double")).alias("cost"),
-                )
-
-            def _agg_min(frame):
-                # struct min = (cost, path) lexicographic — the order with
-                # optimal substructure (see docstring)
-                if track_paths:
-                    return (
-                        frame.groupBy("src", "dst")
-                        .agg(F.min(F.struct("cost", "path")).alias("cp"))
-                        .select(
-                            "src", "dst", F.col("cp.cost").alias("cost"),
-                            F.col("cp.path").alias("path"),
-                        )
-                    )
-                return frame.groupBy("src", "dst").agg(F.min("cost").alias("cost"))
-
-            cur = dist.where(F.col("__improved")).select(
-                "src", "dst", "cost", *(["path"] if track_paths else [])
+        cols = [
+            F.col("f.src").alias("src"),
+            F.col("e.dst").alias("dst"),
+            (F.col("f.cost") + F.col("e.weight").cast("double")).alias("cost"),
+        ]
+        if track_paths:
+            step = (
+                F.array(F.col("e.edge_id"), F.col("e.dst"))
+                if "edge_id" in edges.columns
+                else F.array(F.col("e.dst"))
             )
-            n_hops = max(1, hops_per_round)
-            hops = []
-            for i in range(n_hops):
-                raw = _relax(cur)
-                hops.append(raw)
-                if i + 1 < n_hops:
-                    cur = _agg_min(raw)
-            cand = hops[0]
-            for h in hops[1:]:
-                cand = cand.unionByName(h)
-            # UNION merge: old rows and raw candidates flow into ONE
-            # groupBy(src, dst) min — one Exchange per round where the old
-            # full-outer formulation paid two (candidate pre-aggregation +
-            # dist re-shuffle) plus the sort-merge join's two sorts.
-            # Map-side partial aggregation performs the same candidate
-            # reduction the dropped pre-aggregation did.  The improvement
-            # count still rides the checkpoint job -> ONE Spark job/round.
-            if track_paths:
-                # Tie-break: struct min over (cost, path, __cand) — a
-                # strictly cheaper candidate wins; at equal cost a
-                # lexicographically smaller path wins; at equal (cost, path)
-                # the old row's 0 flag wins, so __cand=1 on the winner is
-                # exactly the old `better` predicate.  Candidate cost/path
-                # are never NULL here (frontier rows are non-NULL and
-                # weights are validated strictly positive above), so struct
-                # sort ordering's NULLS-FIRST quirk cannot pick a bogus
-                # winner the way an unmatched full-outer side could.
-                # NULL-cost candidates (possible only via NULL weights when
-                # max_iters skips the positive-weight validation) must LOSE
-                # as they did under the old explicit predicate — drop them
-                # before the min so NULLS-FIRST cannot crown one.
-                merged = (
-                    dist.select("src", "dst", "cost", "path")
-                    .withColumn("__cand", F.lit(0))
-                    .unionByName(
-                        cand.where(F.col("cost").isNotNull())
-                        .withColumn("__cand", F.lit(1))
-                    )
-                    .groupBy("src", "dst")
-                    .agg(F.min(F.struct("cost", "path", "__cand")).alias("m"))
-                    .select(
-                        "src", "dst",
-                        F.col("m.cost").alias("cost"),
-                        F.col("m.path").alias("path"),
-                        (F.col("m.__cand") == 1).alias("__improved"),
-                    )
-                )
-            else:
-                # Primitive-only aggregates keep this a codegen
-                # HashAggregate: min over everything gives the new cost;
-                # min over the old row's echo (__oc, NULL on candidates)
-                # gives the previous cost, and improvement is
-                # "no previous" or "strictly cheaper" — identical to the
-                # old `better` predicate including its NULL semantics.
-                merged = (
-                    dist.select(
-                        "src", "dst", "cost", F.col("cost").alias("__oc")
-                    )
-                    .unionByName(
-                        cand.withColumn("__oc", F.lit(None).cast("double"))
-                    )
-                    .groupBy("src", "dst")
-                    .agg(
-                        F.min("cost").alias("cost"),
-                        F.min("__oc").alias("__oc"),
-                    )
-                    .select(
-                        "src", "dst", "cost",
-                        (
-                            F.col("__oc").isNull()
-                            | (F.col("cost") < F.col("__oc"))
-                        ).alias("__improved"),
-                    )
-                )
-            obs = Observation(f"__pgq_bf_{next(_obs_seq)}")
-            merged = merged.observe(
-                obs, F.sum(F.col("__improved").cast("int")).alias("n")
-            )
-            dist = materialize(merged)
-            if not obs.get["n"]:
-                break
-        return dist.select(
-            "src", "dst", "cost", *(["path"] if track_paths else [])
+            cols.append(F.concat(F.col("f.path"), step).alias("path"))
+
+        def relax(joined):
+            cand = joined.select(*cols)
+            # NULL costs (only via NULL weights when max_iters skips the
+            # positive-weight check) must lose the struct min
+            return cand.where(F.col("cost").isNotNull()) if track_paths else cand
+
+        return _min_label_fixpoint(
+            dist, "cost", relax, lambda bound: edges,
+            payload=("path",) if track_paths else (), max_iters=max_iters,
         )
     finally:
         edges.unpersist()
@@ -1143,14 +1020,34 @@ def integral_keys(df: DataFrame, cols: list[str]) -> bool:
     return all(types.get(c.lower()) in _INTEGRAL_TYPES for c in cols)
 
 
+def _temporal_seeds(seeds: DataFrame, start_ts: int | None) -> DataFrame:
+    """Seeded dist frame for the temporal routes: every seed sits on itself
+    at `start_ts` (the epoch if unset)."""
+    t0 = F.lit(int(start_ts)) if start_ts is not None else F.lit(0)
+    return seeds.toDF("vid").distinct().select(
+        F.col("vid").alias("src"),
+        F.col("vid").alias("dst"),
+        t0.cast("long").alias("arrival"),
+        F.lit(True).alias("__improved"),
+    )
+
+
+def _relax_arrival(joined: DataFrame) -> DataFrame:
+    """Temporal relax step: an edge is taken only at or after the frontier
+    pair's arrival, and taking it arrives at the edge's timestamp."""
+    return joined.where(F.col("e.__ts") >= F.col("f.arrival")).select(
+        F.col("f.src").alias("src"),
+        F.col("e.dst").alias("dst"),
+        F.col("e.__ts").alias("arrival"),
+    )
+
+
 def temporal_reachability(
     edges: DataFrame,
     seeds: DataFrame,
     ts_col: str = "ts",
     start_ts: int | None = None,
     num_partitions: int | None = None,
-    hops_per_round: int = 1,
-    ts_prune: bool = False,
 ) -> DataFrame:
     """Time-respecting reachability (beyond-reference): earliest arrival
     time at every vertex reachable from each seed along edges whose
@@ -1164,55 +1061,19 @@ def temporal_reachability(
     like bfs_distances).
 
     Label-correcting relaxation on earliest-arrival (arrival times are
-    monotone along a walk, so the fixpoint is unique and order-free,
-    Bellman-Ford-style).  Two round-count levers make this the cheapest
-    shape we measured (r5; the r4 version ran TWO jobs per round and one
-    hop per round — 2x17 jobs at sf0.1):
-      - the per-pair min merge, the improvement flag and the convergence
-        count all ride ONE full-outer merge + checkpoint job per round
-        (the Bellman-Ford/Observation template cheapest_path uses);
-      - each round relaxes `hops_per_round` adjacency steps inside that
-        single job (candidates from hop 1 feed hop 2 lazily, each hop
-        min-aggregated to keep the join fan-in bounded), so the round
-        count is ceil(longest time-respecting path / hops_per_round).
-        Default 1 (re-measured round 10 on the r10 reference host,
-        median-of-3 fresh sessions): fused multi-hop is a NET LOSS here —
-        sf0.1 group wall 7.2 s (hops=1) vs 10.0 s (4) vs 12.9 s (2), sf1
-        temporal_reach solo 17.6 s (1) vs 30.3 s (4) — and hops>1 runs
-        are far noisier (single group runs up to 40 s: the deep fused
-        plan re-relaxes every hop-k candidate, not just improved pairs,
-        so candidate volume grows with reach instead of with the
-        improving frontier).  The knob stays for graphs whose frontier
-        SHRINKS with depth (long sparse temporal chains), where fusing
-        genuinely halves the merge count; an earlier host measured
-        hops=4 at 11.2 s vs 17.2 s (hops=2) at sf1 — the trade is
-        host- and graph-dependent, so the default is the stable end.
-
-    `ts_prune` (round 10, default off): per round, pre-filter the
-    adjacency to `ts >= min arrival over the improved frontier` — an
-    EXACT monotone-label bound (every frontier pair relaxes only edges
-    with ts >= its own arrival >= that minimum), whose scalar rides the
-    round's existing Observation for free.  Measured NEGATIVE at
-    in-memory bench scales — the changing per-round literal recompiles
-    the round's codegen, costing more than the cached-batch skipping
-    saves (sf0.1: 7.1 -> 11.0 s, sf1: 11.2 -> 11.7 s) — hence opt-in.
-    Turn it on when the adjacency is a ts-range-partitioned standing
-    table at real scale: there the same predicate is genuine partition
-    pruning (whole files never opened), a different cost regime from a
-    row-filter over an in-memory cache.  The cached adjacency is sorted
-    within partitions by ts either way, so the in-memory batch stats
-    are tight whenever the filter IS on.
-    Rounds remain frontier-driven: only pairs improved last round are
-    re-relaxed.  Same scale shape as cheapest_path: adjacency
-    checkpointed hash-partitioned by src, frontier-only shuffle.
+    monotone along a walk, so the fixpoint is unique and order-free):
+    the same _min_label_fixpoint as cheapest_path_distances, with the
+    relax step `arrival := ts when ts >= arrival` in place of `cost + w`.
+    Only pairs improved last round are re-relaxed, and a round is one
+    Spark job.
 
     Adjacency layout: `.persist()` (NOT localCheckpoint) on purpose — a
     checkpointed frame surfaces as `Scan ExistingRDD UnknownPartitioning`
     so every round re-shuffles the static edge set, while a persisted
     InMemoryRelation KEEPS its HashPartitioning(src) and Catalyst skips
-    the adjacency-side exchange in every hop join (only the small
-    frontier side shuffles).  Lineage depth is not a concern here: the
-    adjacency is a one-step projection, not an iterated frame.
+    the adjacency-side exchange in every join (only the small frontier
+    side shuffles).  Lineage depth is not a concern here: the adjacency
+    is a one-step projection, not an iterated frame.
     (Negative result, r5: broadcasting the adjacency instead was 1.5-6x
     SLOWER at sf0.1 — F.broadcast over a checkpointed frame re-collects
     and re-ships it on every round's query; do not retry.)
@@ -1221,25 +1082,13 @@ def temporal_reachability(
     adj = (
         edges.select("src", "dst", F.col(ts_col).cast("long").alias("__ts"))
         .repartition(parts, "src")
-        # Sorting each cached partition by __ts gives the in-memory
-        # columnar cache tight per-batch (min,max) __ts stats, so the
-        # per-round monotone-bound filter below (`__ts >= bound`) skips
-        # whole cached batches instead of row-filtering them — the
-        # in-memory analog of time-bucketed partition pruning.  An
-        # intra-partition sort: HashPartitioning(src) is preserved, the
-        # hop join still skips the adjacency-side exchange.
-        .sortWithinPartitions("__ts")
         .persist()
     )
-    t0 = F.lit(int(start_ts)) if start_ts is not None else F.lit(0)
-    dist = seeds.toDF("vid").distinct().select(
-        F.col("vid").alias("src"),
-        F.col("vid").alias("dst"),
-        t0.cast("long").alias("arrival"),
-        F.lit(True).alias("__improved"),
-    )
     try:
-        return _temporal_fixpoint(adj, dist, hops_per_round, ts_prune)
+        return _min_label_fixpoint(
+            _temporal_seeds(seeds, start_ts), "arrival", _relax_arrival,
+            lambda bound: adj,
+        )
     finally:
         adj.unpersist()
 
@@ -1256,12 +1105,12 @@ def write_temporal_index(
     temporal analog of similarity.write_ivf_index (layout paid once,
     every traversal afterwards amortizes it).
 
-    Why this layout: temporal_reachability's per-round monotone bound
-    (every frontier pair relaxes only edges with ts >= its own arrival
-    >= the round's minimum improved arrival) is EXACT, but as an
-    in-memory row filter it measured NEGATIVE in r10 (the changing
-    per-round literal recompiles the round's codegen for less than the
-    cached-batch skipping saves).  Against this standing table the same
+    Why this layout: the fixpoint's per-round monotone bound (every
+    frontier pair relaxes only edges with ts >= its own arrival >= the
+    round's minimum improved arrival) is EXACT, but as an in-memory row
+    filter it measured NEGATIVE in r10 (the changing per-round literal
+    recompiles the round's codegen for less than the cached-batch
+    skipping saves).  Against this standing table the same
     predicate becomes FILE-LEVEL partition pruning — bucket directories
     wholly below the bound are never opened (PartitionFilters in the
     scan, pinned by test_paths), plus a pushed min/max row-group filter
@@ -1333,7 +1182,7 @@ def temporal_reachability_from_index(
     opened — the second a pushed parquet filter that min/max-skips row
     groups inside the boundary bucket.  EXACT: every frontier pair
     (s, u, a) only relaxes edges with ts >= a >= bound, so no candidate
-    is lost (see _temporal_fixpoint).
+    is lost.
 
     Bucket metadata is contract-small standing state (one row), cached
     driver-side per (path, mtime) like the IVF centroid cache; non-local
@@ -1364,90 +1213,10 @@ def temporal_reachability_from_index(
     def adj_for_bound(bound):
         return _temporal_index_scan(spark, path, lo, width, bound, base=base)
 
-    t0 = F.lit(int(start_ts)) if start_ts is not None else F.lit(0)
-    dist = seeds.toDF("vid").distinct().select(
-        F.col("vid").alias("src"),
-        F.col("vid").alias("dst"),
-        t0.cast("long").alias("arrival"),
-        F.lit(True).alias("__improved"),
+    return _min_label_fixpoint(
+        _temporal_seeds(seeds, start_ts), "arrival", _relax_arrival,
+        adj_for_bound,
     )
-    return _temporal_fixpoint(None, dist, 1, adj_for_bound=adj_for_bound)
-
-
-def _temporal_fixpoint(adj, dist, hops_per_round, ts_prune=False,
-                       adj_for_bound=None):
-    # Monotone-label bound: every frontier pair (s, u, a) relaxes only
-    # edges with ts >= a >= (min arrival over the frontier), so the
-    # adjacency can be pre-filtered each round with that scalar — EXACT
-    # pruning (no candidate is lost), and the scalar rides the round's
-    # existing Observation for free.  Within a round's chained hops
-    # arrivals only grow, so one bound covers all hops.  Applied only
-    # under `ts_prune` (see temporal_reachability's docstring for the
-    # measured in-memory negative result and the partition-pruning
-    # regime it exists for).
-    bound = None
-    while True:
-        frontier = dist.where(F.col("__improved")).select("src", "dst", "arrival")
-        if adj_for_bound is not None:
-            # standing-index route: the bound becomes partition pruning on
-            # the ts-bucketed scan (see temporal_reachability_from_index)
-            adj_r = adj_for_bound(bound)
-        elif ts_prune and bound is not None:
-            adj_r = adj.where(F.col("__ts") >= F.lit(bound))
-        else:
-            adj_r = adj
-        hops = []
-        cur = frontier
-        for _ in range(max(1, hops_per_round)):
-            cur = (
-                cur.alias("f")
-                .join(adj_r.alias("e"), F.col("f.dst") == F.col("e.src"))
-                .where(F.col("e.__ts") >= F.col("f.arrival"))
-                .select(
-                    F.col("f.src").alias("src"),
-                    F.col("e.dst").alias("dst"),
-                    F.col("e.__ts").alias("arrival"),
-                )
-                .groupBy("src", "dst")
-                .agg(F.min("arrival").alias("arrival"))
-            )
-            hops.append(cur)
-        cand = hops[0]
-        for h in hops[1:]:
-            cand = cand.unionByName(h)
-        if len(hops) > 1:
-            cand = cand.groupBy("src", "dst").agg(F.min("arrival").alias("arrival"))
-        better = F.col("c.arrival").isNotNull() & (
-            F.col("d.arrival").isNull()
-            | (F.col("c.arrival") < F.col("d.arrival"))
-        )
-        merged = (
-            dist.select("src", "dst", "arrival").alias("d")
-            .join(
-                cand.alias("c"),
-                (F.col("d.src") == F.col("c.src"))
-                & (F.col("d.dst") == F.col("c.dst")),
-                "full_outer",
-            )
-            .select(
-                F.coalesce(F.col("d.src"), F.col("c.src")).alias("src"),
-                F.coalesce(F.col("d.dst"), F.col("c.dst")).alias("dst"),
-                F.when(better, F.col("c.arrival"))
-                .otherwise(F.col("d.arrival"))
-                .alias("arrival"),
-                better.alias("__improved"),
-            )
-        )
-        obs = Observation(f"__pgq_tr_{next(_obs_seq)}")
-        merged = merged.observe(
-            obs,
-            F.sum(F.col("__improved").cast("int")).alias("n"),
-            F.min(F.when(F.col("__improved"), F.col("arrival"))).alias("minarr"),
-        )
-        dist = materialize(merged)
-        if not obs.get["n"]:
-            return dist.select("src", "dst", "arrival")
-        bound = obs.get["minarr"]
 
 
 def temporal_latest_departure(
@@ -1455,7 +1224,7 @@ def temporal_latest_departure(
     targets: DataFrame,
     ts_col: str = "ts",
     horizon: int = 0,
-    **kw,
+    num_partitions: int | None = None,
 ) -> DataFrame:
     """Latest-departure dual of temporal_reachability: for each target,
     the LATEST time a walk may leave each vertex and still reach the
@@ -1465,17 +1234,18 @@ def temporal_latest_departure(
 
     Computed on the TIME-REVERSED graph (edges flipped, ts' =
     horizon - ts): earliest arrival there equals horizon minus the
-    latest departure here, so the verified earliest-arrival kernel does
+    latest departure here, so temporal_reachability's fixpoint does
     all the work.  Returns (target, vid, latest_departure); vertices
-    with no feasible route are absent.  Same cost model and levers
-    (hops_per_round) as temporal_reachability.
+    with no feasible route are absent.
     """
     rev = edges.select(
         F.col("dst").alias("src"),
         F.col("src").alias("dst"),
         (F.lit(int(horizon)) - F.col(ts_col)).alias("__rts"),
     )
-    ea = temporal_reachability(rev, targets, ts_col="__rts", **kw)
+    ea = temporal_reachability(
+        rev, targets, ts_col="__rts", num_partitions=num_partitions
+    )
     return ea.select(
         F.col("src").alias("target"),
         F.col("dst").alias("vid"),

@@ -1,11 +1,14 @@
 """Algorithm golden tests ported from the reference test/sql/scalar suite."""
 
+import os
+
 import pytest
 from pyspark.sql import Row
 
 from duckpgq_extension_spark import PGQSession
 
 from .conftest import rows
+from .test_snb import SNB
 
 
 def test_pagerank_reference_parity(pgq):
@@ -289,6 +292,7 @@ def test_personalized_pagerank_guards(spark):
         pagerank(edges, vertices, sources=vertices, phantom_vertices=2)
 
 
+@pytest.mark.skipif(not os.path.isdir(SNB), reason="SNB0.003 reference data absent")
 def test_summarize_snb_reference_golden(spark):
     """summarize_property_graph.test:22-27 golden on the bundled SNB0.003
     data: Person/Person_knows_person counts and degree stats.  The

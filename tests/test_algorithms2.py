@@ -844,3 +844,25 @@ def test_betweenness_sampled_estimator(spark):
         ).collect()
     }
     assert len(exact_full) >= len(sampled)
+
+
+def test_betweenness_auto_sampling_warns(spark, monkeypatch):
+    """The auto route's switch to the sampled estimate is never silent: a
+    warning names k, n and the ~1/sqrt(k) error above the threshold, and
+    at or below it the exact route runs without one."""
+    import warnings
+
+    monkeypatch.setattr(A, "BETWEENNESS_EXACT_MAX_SOURCES", 8)
+    edges = spark.createDataFrame(
+        [(i, (i + 1) % 12) for i in range(12)], "src long, dst long"
+    )
+    with pytest.warns(UserWarning, match=r"k=\d+ of n=12 sources .*1/sqrt\(k\)"):
+        A.betweenness_centrality(
+            edges, spark.createDataFrame([(v,) for v in range(12)], "vid long")
+        ).collect()
+    with warnings.catch_warnings(record=True) as caught:
+        warnings.simplefilter("always")
+        A.betweenness_centrality(
+            edges, spark.createDataFrame([(v,) for v in range(8)], "vid long")
+        ).collect()
+    assert not [w for w in caught if "betweenness" in str(w.message)]

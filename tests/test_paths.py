@@ -284,55 +284,33 @@ def test_cheapest_path_tracked_golden(spark):
         assert sum(wmap[(a, b)] for a, b in zip(path, path[1:])) == cost, k
 
 
-def test_multi_hop_rounds_match_single_hop(spark):
-    """hops_per_round is an opt-in plan knob, not a semantics knob: BFS
-    distances and Bellman-Ford costs must be identical for any value,
-    including exact max_hops clamping (quantifier upper bounds compile
-    to max_hops, so an off-by-one here corrupts `{l,u}` matches).
-
-    Defaults are 1 — hops_per_round=2 is a recorded NEGATIVE perf result
-    at sf0.1 (see PERF.md round 5) kept for sparse-frontier graphs; this
-    test keeps the opt-in path correct while it is off the hot path.
-    """
-    from duckpgq_extension_spark.operators.paths import (
-        bfs_distances,
-        cheapest_path_distances,
-    )
+def test_bfs_max_hops_clamps_exactly(spark):
+    """Quantifier upper bounds compile to max_hops, so an off-by-one here
+    corrupts `{l,u}` matches: every pair within max_hops keeps its exact
+    distance and nothing beyond it appears."""
+    from duckpgq_extension_spark.operators.paths import bfs_distances
 
     # chain + diamond + 2-cycle: exercises deep frontiers, ties, cycles
     el = [(i, i + 1) for i in range(9)] + [(0, 5), (5, 2), (7, 3), (3, 7)]
     edges = spark.createDataFrame(el, "src long, dst long")
     base = {(r.src, r.dst): r.dist for r in bfs_distances(edges).collect()}
-    for hpr in (2, 3):
-        got = {(r.src, r.dst): r.dist
-               for r in bfs_distances(edges, hops_per_round=hpr).collect()}
-        assert got == base, f"hops_per_round={hpr} changed BFS distances"
     for mh in (1, 2, 3):
         capped = {k: v for k, v in base.items() if v <= mh}
         got = {(r.src, r.dst): r.dist
-               for r in bfs_distances(edges, max_hops=mh,
-                                      hops_per_round=2).collect()}
-        assert got == capped, f"max_hops={mh} not exact under multi-hop"
+               for r in bfs_distances(edges, max_hops=mh).collect()}
+        assert got == capped, f"max_hops={mh} not exact"
 
-    wedges = spark.createDataFrame(
-        [(s, d, (s + d) % 4 + 1) for s, d in el],
-        "src long, dst long, weight long",
+
+def test_temporal_index_route_exact(spark, tmp_path):
+    """The standing-index route prunes each round's adjacency to
+    `ts >= min improved arrival`; that bound is exact, so it returns the
+    in-memory kernel's (src, dst, arrival) fixpoint, including equal-ts
+    chains right at the bound and multi-seed frontiers."""
+    from duckpgq_extension_spark.operators.paths import (
+        temporal_reachability,
+        temporal_reachability_from_index,
+        write_temporal_index,
     )
-    seeds = spark.createDataFrame([(0,), (7,)], "src long")
-    bcost = {(r.src, r.dst): r.cost
-             for r in cheapest_path_distances(wedges, sources=seeds).collect()}
-    got = {(r.src, r.dst): r.cost
-           for r in cheapest_path_distances(wedges, sources=seeds,
-                                            hops_per_round=2).collect()}
-    assert got == bcost, "hops_per_round=2 changed Bellman-Ford costs"
-
-
-def test_temporal_reachability_ts_prune_exact(spark):
-    """Round-10: the opt-in monotone-label bound (`ts_prune=True`) is
-    EXACT — identical (src, dst, arrival) fixpoint as the unpruned
-    kernel, including equal-ts chains right at the bound and multi-seed
-    frontiers, across hops_per_round settings."""
-    from duckpgq_extension_spark.operators.paths import temporal_reachability
 
     edges = spark.createDataFrame(
         [(1, 2, 5), (2, 3, 5), (3, 4, 4),   # equal-ts chain + dead drop
@@ -340,11 +318,78 @@ def test_temporal_reachability_ts_prune_exact(spark):
          (2, 5, 7), (5, 1, 8), (9, 1, 3)],
         "src long, dst long, ts long")
     seeds = spark.createDataFrame([(1,), (9,)], "vid long")
-    base = sorted(map(tuple, temporal_reachability(edges, seeds).collect()))
-    for hpr in (1, 2, 4):
-        pruned = sorted(map(tuple, temporal_reachability(
-            edges, seeds, hops_per_round=hpr, ts_prune=True).collect()))
-        assert pruned == base, hpr
+    want = sorted(map(tuple, temporal_reachability(edges, seeds).collect()))
+    for n_buckets in (2, 3):
+        idx = str(tmp_path / f"tidx{n_buckets}")
+        write_temporal_index(edges, idx, ts_col="ts", n_buckets=n_buckets)
+        got = sorted(map(tuple, temporal_reachability_from_index(
+            spark, idx, seeds).collect()))
+        assert got == want, n_buckets
+
+
+def _round_plans(monkeypatch, run):
+    """Executed plans of the fixpoint rounds `run()` materializes (the
+    frames carrying the round's Observation)."""
+    from duckpgq_extension_spark.operators import paths
+
+    plans = []
+    real = paths.materialize
+
+    def record(df, eager=True):
+        plans.append(df._jdf.queryExecution().executedPlan().toString())
+        return real(df, eager)
+
+    monkeypatch.setattr(paths, "materialize", record)
+    run()
+    return [p for p in plans if "CollectMetrics" in p]
+
+
+def _operator_names(plan):
+    import re
+
+    names = []
+    for line in plan.splitlines():
+        m = re.match(r"^[\s:+\-|]*(?:\*\(\d+\)\s*)?([A-Za-z]+)", line)
+        if m:
+            names.append(m.group(1))
+    return names
+
+
+def test_fixpoint_round_plans(spark, tmp_path, monkeypatch):
+    """Bellman-Ford and the temporal routes share one union/groupBy-min
+    merge: a temporal round has no FullOuter join, and a steady-state
+    length-only Bellman-Ford round keeps its shape of one sort-merge join
+    (2 Exchanges + 2 Sorts) plus the merge's single Exchange."""
+    from duckpgq_extension_spark.operators.paths import (
+        cheapest_path_distances,
+        temporal_reachability,
+        temporal_reachability_from_index,
+        write_temporal_index,
+    )
+
+    el = [(i, i + 1, (i * 3) % 5 + 1) for i in range(9)] + [
+        (0, 5, 2), (5, 2, 1), (7, 3, 4), (3, 7, 1)]
+    edges = spark.createDataFrame(el, "src long, dst long, ts long")
+    seeds = spark.createDataFrame([(0,), (7,)], "vid long")
+    idx = str(tmp_path / "tidx")
+    write_temporal_index(edges, idx, ts_col="ts", n_buckets=4)
+    for run in (
+        lambda: temporal_reachability(edges, seeds).collect(),
+        lambda: temporal_reachability_from_index(spark, idx, seeds).collect(),
+    ):
+        rounds = _round_plans(monkeypatch, run)
+        assert len(rounds) >= 2
+        for plan in rounds:
+            assert "FullOuter" not in plan, plan
+
+    wedges = edges.withColumnRenamed("ts", "weight")
+    rounds = _round_plans(monkeypatch, lambda: cheapest_path_distances(
+        wedges, sources=seeds.toDF("src")).collect())
+    assert len(rounds) >= 3
+    names = _operator_names(rounds[1])  # round 1 also plans the seed frame
+    assert names.count("Exchange") == 3, rounds[1]
+    assert names.count("Sort") == 2, rounds[1]
+    assert [n for n in names if n.endswith("Join")] == ["SortMergeJoin"], rounds[1]
 
 
 def test_temporal_index_roundtrip_and_pruning(spark, tmp_path):
@@ -425,3 +470,44 @@ def test_temporal_index_scan_prunes_files(spark, tmp_path):
     assert n_partitions(full) == 8
     assert n_partitions(pruned) == 4
     assert pruned.count() == edges.where(F.col("ts") >= 32).count()
+
+
+def test_standing_index_keyed_on_source_files(spark, tmp_path, monkeypatch):
+    """A standing index is keyed on the source files, not the directory
+    name: data regenerated under the same basename is served fresh, an
+    unchanged tier reuses its index, and no temporary build dir is left
+    behind after publishing."""
+    import os
+
+    from duckpgq_extension_spark import entry_queries as EQ
+    from duckpgq_extension_spark.operators import paths as P
+
+    monkeypatch.setattr(EQ, "STANDING_INDEX_ROOT", str(tmp_path / "idx"))
+    sf = tmp_path / "sf_x"
+    src = str(sf / "edges.parquet")
+    seeds = spark.createDataFrame([(1,)], "vid long")
+    builds = []
+
+    def build(path):
+        builds.append(path)
+        P.write_temporal_index(spark.read.parquet(src), path, n_buckets=2)
+
+    def generate(rows):
+        spark.createDataFrame(rows, "src long, dst long, ts long") \
+            .coalesce(1).write.mode("overwrite").parquet(src)
+
+    def reach():
+        path = EQ.standing_index("temporal", str(sf), build)
+        got = P.temporal_reachability_from_index(spark, path, seeds).collect()
+        return path, sorted(map(tuple, got))
+
+    generate([(1, 2, 1), (2, 3, 2)])
+    p1, r1 = reach()
+    assert r1 == [(1, 1, 0), (1, 2, 1), (1, 3, 2)]
+    assert reach()[0] == p1 and len(builds) == 1
+    generate([(1, 4, 1)])
+    p2, r2 = reach()
+    assert p2 != p1 and len(builds) == 2
+    assert r2 == [(1, 1, 0), (1, 4, 1)]
+    assert os.path.basename(p2).startswith("sf_x-")
+    assert not [n for n in os.listdir(os.path.dirname(p2)) if ".tmp-" in n]

@@ -15,6 +15,8 @@
   message subgraph not already covered by test_snb.py
 """
 
+import os
+
 import pytest
 from pyspark.sql import Row
 
@@ -24,6 +26,9 @@ from duckpgq_extension_spark.errors import PGQBinderError, PGQParseError
 from .conftest import rows
 
 SNB = "/root/reference/data/SNB0.003"
+requires_snb = pytest.mark.skipif(
+    not os.path.isdir(SNB), reason="SNB0.003 reference data absent"
+)
 
 
 @pytest.fixture(scope="module")
@@ -227,6 +232,7 @@ def snb_msg(spark):
     return s
 
 
+@requires_snb
 def test_is4_message_content(snb_msg):
     """snb_inheritance.test IS4: content of one message."""
     df = snb_msg.sql(
@@ -241,6 +247,7 @@ def test_is4_message_content(snb_msg):
     assert str(got[0]["creationDate"]).startswith("2012-01-11 16:17:04")
 
 
+@requires_snb
 def test_is5_message_creator(snb_msg):
     """snb_inheritance.test IS5: creator of one message."""
     df = snb_msg.sql(
@@ -252,6 +259,7 @@ def test_is5_message_creator(snb_msg):
     assert rows(df) == [(14, "Hossein", "Forouhar")]
 
 
+@requires_snb
 def test_is7_replies_by_known_authors(snb_msg):
     """snb_inheritance.test IS7: replies to a message whose authors know
     the original author — a 4-element chain plus a comma pattern sharing

@@ -2,10 +2,15 @@
 test/sql/snb/snb.test with its golden outputs (FIXTURES.md F6)."""
 
 import datetime as dt
+import os
 
 import pytest
 
 SNB = "/root/reference/data/SNB0.003"
+
+pytestmark = pytest.mark.skipif(
+    not os.path.isdir(SNB), reason="SNB0.003 reference data absent"
+)
 
 SNB_TABLES = {
     "Person": "person",

@@ -17,6 +17,8 @@ on the same parquet — a cross-engine oracle instead of the SF1 golden
 rows the file pins (those are for data we don't have).
 """
 
+import os
+
 import duckdb
 import pytest
 
@@ -25,6 +27,10 @@ from duckpgq_extension_spark import PGQSession
 from .conftest import rows
 
 SNB = "/root/reference/data/SNB0.003"
+
+pytestmark = pytest.mark.skipif(
+    not os.path.isdir(SNB), reason="SNB0.003 reference data absent"
+)
 
 
 def _duck(sql: str):
