@@ -428,7 +428,7 @@ def _min_label_fixpoint(graph: DataFrame) -> DataFrame:
 def _doubled_neighbors(edges: DataFrame) -> DataFrame:
     """Distinct both-direction neighbor pairs (src, dst), self-loops dropped
     — the undirected adjacency every triangle/clustering step works over.
-    Session-cached per edge plan (the _prep_edges checkpoint cache): lcc,
+    Session-cached per edge plan and files (the _prep_edges cache): lcc,
     global_clustering, assortativity and WCC all derive this same frame
     from the same edge set, so within a session it is built once.
     Checkpoint (not persist) by measurement: WCC reads this frame twice

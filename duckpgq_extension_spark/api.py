@@ -103,17 +103,19 @@ class PGQSession:
             self.spark.conf.set(RELIABLE_CHECKPOINT_CONF, "true")
 
     def clear_adjacency_cache(self) -> None:
-        """Invalidate this session's cached adjacency frames — the
-        reference's `delete_csr` analog (duckpgq_state.cpp:167-185).
+        """Invalidate this session's cached adjacency frames and MinHash
+        signatures — the reference's `delete_csr` analog
+        (duckpgq_state.cpp:167-185).
 
         The iterative kernels cache the shuffled/persisted edge frame per
-        (session, analyzed plan) so repeated queries over a standing graph
-        skip the re-shuffle, exactly like the reference keeps a built CSR
-        until delete_csr.  The cache key is the ANALYZED plan, so
-        re-registering a view over different files misses naturally; the
-        one case that serves a stale snapshot is REWRITING THE SAME FILES
-        in-session — call this after such a mutation (or set
-        SPARK_GRAFT_ADJ_CACHE=0 to disable caching outright)."""
+        (session, analyzed plan, file listing) so repeated queries over a
+        standing graph skip the re-shuffle, like the reference keeps a
+        built CSR until delete_csr.  A view over different files, or over
+        a directory a file was appended to, misses on its own; local files
+        also carry their sizes and mtimes.  The one case that serves a
+        stale snapshot is a file REWRITTEN IN PLACE on non-local storage
+        (same path, no mtime in the key) — call this after such a
+        mutation."""
         from .operators.paths import clear_prep_cache
 
         clear_prep_cache(self.spark)

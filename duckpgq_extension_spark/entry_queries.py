@@ -2688,8 +2688,9 @@ def standing_index(kind: str, sf_dir: str, build) -> str:
     """Directory of the standing `kind` index over the tables in `sf_dir`
     (under STANDING_INDEX_ROOT), calling `build(path)` on first use.
 
-    The directory is keyed on a fingerprint of the source files (relative
-    names, sizes, mtimes), so data regenerated under the same path gets a
+    The directory is keyed on the source files' fingerprint (paths,
+    sizes, mtimes: paths.file_fingerprint, the session cache's notion of
+    the same data), so data regenerated under the same path gets a
     fresh index instead of the stale one.  `build` writes into a
     temporary sibling that is published with os.rename: readers never
     see a half-written index, and when two first runs race the loser
@@ -2700,17 +2701,13 @@ def standing_index(kind: str, sf_dir: str, build) -> str:
     import uuid
 
     src = os.path.normpath(sf_dir)
-    fp = hashlib.sha1()
-    for root, dirs, files in os.walk(src):
-        dirs.sort()
-        for name in sorted(files):
-            st = os.stat(os.path.join(root, name))
-            rel = os.path.relpath(os.path.join(root, name), src)
-            fp.update(f"{rel}\0{st.st_size}\0{st.st_mtime_ns}\n".encode())
+    fp = pathops.file_fingerprint(
+        os.path.join(root, name) for root, _, files in os.walk(src) for name in files
+    )
     path = os.path.join(
         STANDING_INDEX_ROOT,
         f"duckpgq_{kind}_index",
-        f"{os.path.basename(src)}-{fp.hexdigest()[:16]}",
+        f"{os.path.basename(src)}-{hashlib.sha1(repr(fp).encode()).hexdigest()[:16]}",
     )
     if not os.path.isdir(path):
         tmp = f"{path}.tmp-{uuid.uuid4().hex}"

@@ -36,8 +36,6 @@ from . import paths as pathops
 # can embed the same numbers.
 MINHASH_PRIME = 2147483647  # 2^31 - 1
 
-# session-scoped signature cache (see minhash_signatures docstring)
-_SIG_CACHE: dict = {}
 _A0, _A_STEP = 1103515245, 12345
 _B0, _B_STEP = 1013904223, 2654435761
 
@@ -338,41 +336,37 @@ def minhash_signatures(
     16-separate-transforms variant was 6x worse again because each
     column re-inlined the tokenize->shingle->md5 subtree).
 
-    The signature frame is SESSION-CACHED per (input plan, n, num_perm,
-    max_doc_freq) — the _prep_edges pattern: at corpus scale signatures
-    are a standing column computed once and consumed by every downstream
-    dedup stage (pair generation, clustering, keep-longest, cross-corpus),
-    so within a session the tokenize->shingle->min aggregate runs once,
-    not once per operator.  Same snapshot semantics as the adjacency
-    cache (in-place mutation of the same files serves the cached frame;
-    a different plan or params is always a miss).
+    The signature frame is SESSION-CACHED per (input plan, input files,
+    n, num_perm, max_doc_freq) — paths.session_cached, shared with the
+    adjacency cache: at corpus scale signatures are a standing column
+    computed once and consumed by every downstream dedup stage (pair
+    generation, clustering, keep-longest, cross-corpus), so within a
+    session the tokenize->shingle->min aggregate runs once, not once per
+    operator.  A document appended to a local input directory changes
+    the file listing and gets a signature; a file rewritten in place on
+    other storage needs clear_prep_cache().
     """
     base = df.select(F.col(id_col), F.col(text_col))
     params = (int(n), int(num_perm), max_doc_freq, id_col, text_col)
-    entries, jplan = pathops._cache_probe(_SIG_CACHE, base)
-    if entries is not None:
-        h = jplan.semanticHash()
-        for ep, eh, epl, cached in entries:
-            if ep == params and eh == h and epl.sameResult(jplan):
-                return cached
-    sh = _shingles(df, id_col, text_col, n, max_doc_freq)
-    h31 = (F.col("sh") % MINHASH_PRIME).alias("h31")
-    # one SQL parse for all num_perm running minima (py4j plan-build cost;
-    # the array-of-aggregates form also folds away the m{i} projection)
-    sig_terms = ",".join(
-        f"min(({a} * h31 + {b}) % {MINHASH_PRIME})" for a, b in minhash_params(num_perm)
+
+    def build():
+        sh = _shingles(df, id_col, text_col, n, max_doc_freq)
+        h31 = (F.col("sh") % MINHASH_PRIME).alias("h31")
+        # one SQL parse for all num_perm running minima (py4j plan-build cost;
+        # the array-of-aggregates form also folds away the m{i} projection)
+        sig_terms = ",".join(
+            f"min(({a} * h31 + {b}) % {MINHASH_PRIME})" for a, b in minhash_params(num_perm)
+        )
+        return (
+            sh.select("id", h31)
+            .groupBy("id")
+            .agg(F.expr(f"array({sig_terms})").alias("sig"))
+        )
+
+    out = pathops.session_cached(
+        base, "minhash", params, 8, lambda: pathops.materialize(build())
     )
-    out = (
-        sh.select("id", h31)
-        .groupBy("id")
-        .agg(F.expr(f"array({sig_terms})").alias("sig"))
-    )
-    if entries is not None:
-        out = pathops.materialize(out)
-        entries.append((params, jplan.semanticHash(), jplan, out))
-        while len(entries) > 8:
-            entries.pop(0)
-    return out
+    return build() if out is None else out
 
 
 def _band_frame(sig: DataFrame, num_perm: int, bands: int) -> DataFrame:

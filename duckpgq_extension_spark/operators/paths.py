@@ -44,6 +44,9 @@ Scale notes (100 TB / 1000 executors):
 from __future__ import annotations
 
 import itertools
+import os
+import weakref
+from urllib.parse import unquote, urlparse
 
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
@@ -98,14 +101,17 @@ _CONNECT_PERSISTED: list = []
 _CONNECT_PERSIST_KEEP = 8
 
 
+def _release(df: DataFrame) -> None:
+    try:
+        df.unpersist()
+    except Exception:  # session already stopped; nothing to release
+        pass
+
+
 def _bound_connect_persist_residue(df: DataFrame) -> None:
     _CONNECT_PERSISTED.append(df)
     while len(_CONNECT_PERSISTED) > _CONNECT_PERSIST_KEEP:
-        old = _CONNECT_PERSISTED.pop(0)
-        try:
-            old.unpersist()
-        except Exception:  # session torn down; nothing to release
-            pass
+        _release(_CONNECT_PERSISTED.pop(0))
 
 
 def default_parallelism(spark) -> int:
@@ -190,63 +196,91 @@ def edge_frame(
     return edges
 
 
-# Session adjacency cache — the Spark analog of the reference's
-# session-lifetime CSR cache (DuckPGQ builds the CSR on first MATCH and
-# keeps it in DuckPGQState::csr_list until an explicit delete_csr,
-# /root/reference/src/duckpgq_state.cpp:167-185): every kernel call used to re-shuffle
-# and re-checkpoint the same edge set.  Keyed by the edge frame's ANALYZED
-# plan: a semanticHash probe confirmed by Catalyst's sameResult (the same
-# two-step Spark's own exchange-reuse does), so re-registering a view over
-# DIFFERENT files is a guaranteed miss (the file index lives in the plan)
-# while the same logical edges hit.  In-place mutation of the same files
-# within one session serves the cached snapshot — the reference's CSR has
-# identical semantics — clear_prep_cache() is the delete_csr analog.
-# Eviction drops OUR reference only (FIFO past _PREP_CACHE_MAX); blocks are
-# freed by the ContextCleaner once no live query references the frame, so
-# eviction can never break an in-flight query.
-_PREP_CACHE: dict[int, tuple] = {}  # id(session) -> (weakref(session), entries)
-_PERSIST_CACHE: dict[int, tuple] = {}  # same shape, persist-based frames
-_PREP_CACHE_MAX = 16
+# Session cache — the Spark analog of the reference's session-lifetime CSR
+# cache (DuckPGQ builds the CSR on first MATCH and keeps it in
+# DuckPGQState::csr_list until an explicit delete_csr,
+# duckpgq_state.cpp:167-185): adjacency frames and MinHash signatures are
+# built once and reused by every kernel in the session.  An entry is keyed
+# on (caller params, file fingerprint, analyzed plan); the plan is probed by
+# semanticHash and confirmed by Catalyst's same-result check (the two steps
+# Spark's own exchange reuse takes).  The plan alone is not enough: a parquet
+# relation over a directory compares equal by its root path, so a view
+# re-read after a file is appended to the directory matches the old plan,
+# while its file listing does not.  An entry whose plan matches but whose
+# fingerprint differs is unpersisted BEFORE the rebuild: Spark's
+# CacheManager also matches persisted plans by that check, and would
+# otherwise serve the rebuild's repartition().persist() from the stale
+# twin.  Only local files carry sizes and mtimes in the fingerprint, so a
+# file rewritten in place on other storage still needs clear_prep_cache(),
+# the delete_csr analog.  Eviction is FIFO per kind.  Unpersisting an entry
+# never breaks an in-flight query: persisted frames keep their lineage and
+# recompute, and on checkpointed frames it is a no-op (their blocks are
+# freed by the ContextCleaner once no live query references the frame).
+_SESSION_CACHE: dict[int, tuple] = {}  # id(session) -> (weakref(session), {kind: entries})
+_ADJ_CACHE_MAX = 16
 
 
-def clear_prep_cache(spark=None) -> None:
-    """Drop cached adjacency frames (all sessions, or one session's) —
-    the delete_csr analog.  Persist-based entries are unpersisted (their
-    lineage is intact, so an in-flight query just recomputes)."""
-    keys = list(_PERSIST_CACHE) if spark is None else [id(spark)]
-    for k in keys:
-        hit = _PERSIST_CACHE.pop(k, None)
-        if hit is not None:
-            for entry in hit[1]:
-                try:
-                    entry[-1].unpersist()
-                except Exception:  # session already stopped
-                    pass
-    if spark is None:
-        _PREP_CACHE.clear()
-    else:
-        _PREP_CACHE.pop(id(spark), None)
+def file_fingerprint(paths) -> tuple:
+    """What "the same data" means in this package: sorted (path, size,
+    mtime_ns) for local files (`file:` URIs or plain paths), the path
+    alone for other schemes."""
+    out = []
+    for p in paths:
+        uri = urlparse(p)
+        local = unquote(uri.path) if uri.scheme == "file" else None if uri.scheme else p
+        if local is not None:
+            try:
+                st = os.stat(local)
+                out.append((p, st.st_size, st.st_mtime_ns))
+                continue
+            except OSError:  # removed since it was listed: reading it fails anyway
+                pass
+        out.append((p,))
+    return tuple(sorted(out))
 
 
-def _cache_probe(store: dict, df: DataFrame):
-    """(entries, jplan) for a cache probe; (None, None) when uncacheable
-    (Spark Connect: no _jdf) or disabled via SPARK_GRAFT_ADJ_CACHE=0."""
-    import os
-    import weakref
-
-    if os.environ.get("SPARK_GRAFT_ADJ_CACHE", "1") == "0":
-        return None, None
+def session_cached(df: DataFrame, kind: str, params: tuple, cap: int, build):
+    """`build()` once per (params, file fingerprint of `df`, analyzed plan
+    of `df`) in df's session, keeping the newest `cap` entries of `kind`.
+    A hit returns the same frame object.  None when `df` cannot be cached
+    (Spark Connect: no _jdf); the caller then builds it uncached."""
     try:
         jplan = df._jdf.queryExecution().analyzed()
     except Exception:
-        return None, None
+        return None
     spark = df.sparkSession
-    key = id(spark)
-    hit = store.get(key)
+    hit = _SESSION_CACHE.get(id(spark))
     if hit is None or hit[0]() is not spark:  # id() reuse after session GC
-        hit = (weakref.ref(spark), [])
-        store[key] = hit
-    return hit[1], jplan
+        hit = (weakref.ref(spark), {})
+        _SESSION_CACHE[id(spark)] = hit
+    entries = hit[1].setdefault(kind, [])
+    h, fp = jplan.semanticHash(), file_fingerprint(df.inputFiles())
+    for entry in entries:
+        ep, eh, eplan, efp, cached = entry
+        if ep == params and eh == h and eplan.sameResult(jplan):
+            if efp == fp:
+                return cached
+            entries.remove(entry)  # same plan over changed files
+            _release(cached)
+            break
+    out = build()
+    entries.append((params, h, jplan, fp, out))
+    while len(entries) > cap:
+        _release(entries.pop(0)[-1])
+    return out
+
+
+def clear_prep_cache(spark=None) -> None:
+    """Drop cached adjacency frames and MinHash signatures (all sessions,
+    or one session's) — the delete_csr analog.  Every entry is
+    unpersisted (see the cache note above)."""
+    keys = list(_SESSION_CACHE) if spark is None else [id(spark)]
+    for k in keys:
+        hit = _SESSION_CACHE.pop(k, None)
+        if hit is not None:
+            for entries in hit[1].values():
+                for entry in entries:
+                    _release(entry[-1])
 
 
 def persist_partitioned(
@@ -259,38 +293,30 @@ def persist_partitioned(
     frame surfaces as UnknownPartitioning and re-shuffles every round
     (see temporal_reachability's adjacency note).  Lineage stays intact,
     so evicting + unpersisting can never break an in-flight query — it
-    just recomputes.  Uncached contexts (Spark Connect, cache disabled)
-    fall back to the bounded persist-residue list, mirroring the
-    per-call lifecycle callers used to manage by hand."""
+    just recomputes.  Uncached contexts (Spark Connect) fall back to the
+    bounded persist-residue list, mirroring the per-call lifecycle
+    callers used to manage by hand."""
     n = num_partitions or default_parallelism(df.sparkSession)
-    entries, jplan = _cache_probe(_PERSIST_CACHE, df)
-    if entries is not None:
-        h = jplan.semanticHash()
-        for en, ek, eh, ep, cached in entries:
-            if en == n and ek == key and eh == h and ep.sameResult(jplan):
-                return cached
-    out = df.repartition(n, key).persist()
-    # eager populate: a lazy persist makes the FIRST consuming query pay
-    # columnar-cache serialization inside its own stages (measured: WCC
-    # first run 12.6 s lazy vs 5.1 s eager at sf0.1, r6); one cheap
-    # count() job up front keeps every consumer on the fast path
-    out.count()
-    if entries is not None:
-        entries.append((n, key, jplan.semanticHash(), jplan, out))
-        while len(entries) > _PREP_CACHE_MAX:
-            old = entries.pop(0)
-            try:
-                old[-1].unpersist()
-            except Exception:
-                pass
-    else:
+
+    def build():
+        out = df.repartition(n, key).persist()
+        # eager populate: a lazy persist makes the FIRST consuming query pay
+        # columnar-cache serialization inside its own stages (measured: WCC
+        # first run 12.6 s lazy vs 5.1 s eager at sf0.1, r6); one cheap
+        # count() job up front keeps every consumer on the fast path
+        out.count()
+        return out
+
+    out = session_cached(df, "persist", (n, key), _ADJ_CACHE_MAX, build)
+    if out is None:
+        out = build()
         _bound_connect_persist_residue(out)
     return out
 
 
 def _prep_edges(edges: DataFrame, num_partitions: int | None) -> DataFrame:
     """Materialize the adjacency hash-partitioned by src, cached per
-    session (see _PREP_CACHE above).
+    session (see the session cache note above).
 
     Checkpoint (not just persist) on purpose: it severs the upstream
     logical plan, so (a) per-level joins don't re-analyze an arbitrarily
@@ -304,18 +330,12 @@ def _prep_edges(edges: DataFrame, num_partitions: int | None) -> DataFrame:
         # repartition shuffle entirely
         return materialize(edges)
     n = num_partitions or default_parallelism(edges.sparkSession)
-    entries, jplan = _cache_probe(_PREP_CACHE, edges)
-    if entries is not None:
-        h = jplan.semanticHash()
-        for en, eh, ep, cached in entries:
-            if en == n and eh == h and ep.sameResult(jplan):
-                return cached
-    out = materialize(edges.repartition(n, "src"))
-    if entries is not None:
-        entries.append((n, jplan.semanticHash(), jplan, out))
-        while len(entries) > _PREP_CACHE_MAX:
-            entries.pop(0)
-    return out
+
+    def build():
+        return materialize(edges.repartition(n, "src"))
+
+    out = session_cached(edges, "prep", (n,), _ADJ_CACHE_MAX, build)
+    return build() if out is None else out
 
 
 def bfs_distances(
@@ -1188,8 +1208,6 @@ def temporal_reachability_from_index(
     driver-side per (path, mtime) like the IVF centroid cache; non-local
     paths (no mtime) skip the cache rather than risk staleness.
     """
-    import os
-
     mdir = f"{path}/meta"
     try:
         mkey = (mdir, os.path.getmtime(mdir))

@@ -45,14 +45,6 @@ def tumbling_counts(events: DataFrame, window: str = "1 hour") -> DataFrame:
     )
 
 
-def sliding_counts(events: DataFrame, window: str = "1 hour", slide: str = "15 minutes") -> DataFrame:
-    return (
-        events.groupBy(F.window("ts", window, slide).alias("w"), "event_type")
-        .agg(F.count("*").alias("n_events"))
-        .select(F.col("w.start").alias("window_start"), "event_type", "n_events")
-    )
-
-
 def sessionize(events: DataFrame, gap_minutes: int = 30) -> DataFrame:
     """Gap-based sessionization (batch): a new session starts when a user
     is idle longer than the gap.  lag + running-sum windows — one shuffle

@@ -12,6 +12,10 @@
 
 from __future__ import annotations
 
+import os
+
+import pytest
+
 from duckpgq_extension_spark import catalog as C
 from duckpgq_extension_spark.operators import paths as P
 
@@ -154,15 +158,6 @@ def test_prep_edges_cache_hits_same_plan(spark):
     assert e is not a, "clear_prep_cache must drop the entry"
 
 
-def test_prep_edges_cache_disabled_by_env(spark, monkeypatch):
-    P.clear_prep_cache()
-    monkeypatch.setenv("SPARK_GRAFT_ADJ_CACHE", "0")
-    df = spark.createDataFrame([(1, 2)], "src long, dst long")
-    a = P._prep_edges(df, 4)
-    b = P._prep_edges(df, 4)
-    assert a is not b
-
-
 def test_prep_edges_cache_not_stale_across_view_repoint(spark, tmp_path):
     """Re-pointing a temp view at DIFFERENT files must miss the cache —
     the file index lives in the analyzed plan (the round-3 bench bug
@@ -186,7 +181,7 @@ def test_prep_edges_cache_fifo_cap(spark):
     P.clear_prep_cache()
     df = spark.createDataFrame([(1, 2), (2, 3)], "src long, dst long")
     first = P._prep_edges(df, 4)
-    for i in range(P._PREP_CACHE_MAX):
+    for i in range(P._ADJ_CACHE_MAX):
         P._prep_edges(df.where(F.col("src") != F.lit(1000 + i)), 4)
     again = P._prep_edges(df, 4)
     assert again is not first, "FIFO cap must have evicted the oldest"
@@ -210,3 +205,76 @@ def test_cache_invalidation_is_public_api(spark, tmp_path):
     assert prepped is P._prep_edges(edges, 4), "expected a cache hit"
     sess.clear_adjacency_cache()
     assert prepped is not P._prep_edges(edges, 4), "method must drop the entry"
+
+
+def _add_parquet_file(spark, rows, schema, table_dir, stage_dir):
+    """Add one parquet file to `table_dir` the way an outside writer does
+    (written elsewhere, then moved in), so Spark's recache-on-write for
+    the table path never runs."""
+    spark.createDataFrame(rows, schema).coalesce(1).write.parquet(stage_dir)
+    part = next(f for f in os.listdir(stage_dir) if f.endswith(".parquet"))
+    os.rename(os.path.join(stage_dir, part), os.path.join(table_dir, "appended.parquet"))
+
+
+def test_appended_edge_file_reaches_kernels(spark, tmp_path):
+    """A parquet file appended to an edge table's directory reaches
+    pagerank, WCC and shortest paths after the view is re-read: the cache
+    key holds the plan's file listing (the plan alone compares equal by
+    the directory's root path), and the stale entry is unpersisted before
+    the rebuild (Spark's CacheManager would otherwise serve pagerank's
+    rebuilt persist from the old twin)."""
+    from duckpgq_extension_spark import PGQSession, algorithms
+
+    knows = str(tmp_path / "knows")
+    spark.createDataFrame([(1, 2), (3, 4)], "src long, dst long").write.parquet(knows)
+    spark.range(1, 5).createOrReplaceTempView("append_person")
+    pgq = PGQSession(spark, catalog_path=str(tmp_path / "cat.json"))
+    queries = (
+        "SELECT id, pagerank FROM pagerank(append_g, Person, knows)",
+        "SELECT id, componentId FROM weakly_connected_component(append_g, Person, knows)",
+        "SELECT plen FROM GRAPH_TABLE(append_g MATCH p = ANY SHORTEST "
+        "(a:Person WHERE a.id = 1)-[k:knows]->*(b:Person WHERE b.id = 4) "
+        "COLUMNS (path_length(p) AS plen))",
+    )
+
+    def run():
+        spark.read.parquet(knows).createOrReplaceTempView("append_knows")
+        pgq.execute(
+            "CREATE OR REPLACE PROPERTY GRAPH append_g VERTEX TABLES "
+            "(append_person LABEL Person) EDGE TABLES (append_knows "
+            "SOURCE KEY (src) REFERENCES append_person (id) "
+            "DESTINATION KEY (dst) REFERENCES append_person (id) LABEL knows)"
+        )
+        return [sorted(map(tuple, pgq.sql(q).collect())) for q in queries]
+
+    _, wcc, plen = run()
+    assert wcc == [(1, 1), (2, 1), (3, 3), (4, 3)] and plen == []
+    _add_parquet_file(spark, [(2, 3)], "src long, dst long", knows, str(tmp_path / "stage"))
+    rank, wcc, plen = run()
+    fresh = algorithms.pagerank(
+        spark.createDataFrame([(1, 2), (3, 4), (2, 3)], "src long, dst long"),
+        spark.range(1, 5),
+    ).collect()
+    assert [v for v, _ in rank] == [1, 2, 3, 4]
+    assert [r for _, r in rank] == pytest.approx(
+        [r["pagerank"] for r in sorted(fresh, key=lambda r: r["vid"])], abs=1e-9
+    )
+    assert wcc == [(1, 1), (2, 1), (3, 1), (4, 1)]
+    assert plen == [(3,)]
+
+
+def test_appended_document_file_gets_signature(spark, tmp_path):
+    from duckpgq_extension_spark.operators.dedup import minhash_signatures
+
+    docs = str(tmp_path / "docs")
+    spark.createDataFrame([(1, "a b c d")], "id long, text string").write.parquet(docs)
+
+    def ids():
+        sig = minhash_signatures(spark.read.parquet(docs), "id", "text", n=2, num_perm=4)
+        return sorted(r["id"] for r in sig.collect())
+
+    assert ids() == [1]
+    _add_parquet_file(
+        spark, [(2, "e f g h")], "id long, text string", docs, str(tmp_path / "stage")
+    )
+    assert ids() == [1, 2]
