@@ -27,7 +27,13 @@ from .errors import PGQBinderError, PGQNotImplementedError, PGQParseError
 from .operators import paths as pathops
 from .parser.ast import CreatePropertyGraph, DropPropertyGraph
 from .parser.pgq_parser import Parser, parse_graph_table_body, parse_match
-from .plans.compiler import _key_canon_flags, _key_hash, compile_match
+from .plans.compiler import (
+    CompiledMatch,
+    _key_canon_flags,
+    _key_hash,
+    compile_match,
+    esc_braces,
+)
 
 # `GRAPH TABLE` (space) is an accepted spelling alongside `GRAPH_TABLE`
 # (graph_table_keyword.test:22-27)
@@ -51,6 +57,24 @@ def _skip_special(query: str, i: int) -> int | None:
         j = query.find("*/", i + 2)
         return n if j == -1 else j + 2
     return None
+
+
+def _close_paren(query: str, i: int) -> int:
+    """Index just past the paren closing the one opened before `i`,
+    skipping quoted strings, double-quoted identifiers, and -- / /* */
+    comments (a paren inside any of those must not affect nesting depth)."""
+    depth, n = 1, len(query)
+    while i < n and depth > 0:
+        skip = _skip_special(query, i)
+        if skip is not None:
+            i = skip
+            continue
+        depth += {"(": 1, ")": -1}.get(query[i], 0)
+        i += 1
+    if depth != 0:
+        raise PGQParseError("Unbalanced parentheses in GRAPH_TABLE(...)")
+    return i
+
 
 # words that can legally follow a derived table WITHOUT being its alias —
 # used to decide whether GRAPH_TABLE(...) needs the implicit
@@ -81,7 +105,6 @@ class PGQSession:
     def __init__(self, spark: SparkSession, catalog_path: str | None = None):
         self.spark = spark
         self.catalog = GraphCatalog(spark, catalog_path)
-        self._view_counter = 0
 
     def set_checkpoint_dir(self, path: str | None) -> None:
         """Switch every iterative kernel (BFS / Bellman-Ford / pagerank /
@@ -157,104 +180,119 @@ class PGQSession:
         columns: str = "*",
     ) -> DataFrame:
         expr = parse_match(graph, pattern, where=where, columns=columns)
-        return compile_match(self.catalog.get(graph), expr)
+        compiled = compile_match(self.catalog.get(graph), expr)
+        return self._run(compiled.sql, compiled.frames)
 
     def graph_table(self, body: str) -> DataFrame:
         """Compile a `pg MATCH ... COLUMNS (...)` body to a DataFrame."""
+        compiled = self._compile_body(body)
+        return self._run(compiled.sql, compiled.frames)
+
+    def _compile_body(self, body: str) -> CompiledMatch:
         expr = parse_graph_table_body(body)
         return compile_match(self.catalog.get(expr.graph_name), expr)
 
-    def sql(self, query: str) -> DataFrame:
-        """Run SQL that may contain GRAPH_TABLE(...) references.
+    def _run(self, template: str, frames: dict) -> DataFrame:
+        """The one spark.sql call of a statement.  `template` is a
+        str.format template over `frames`, which PySpark registers only
+        while the statement is analyzed."""
+        if frames:
+            return self.spark.sql(template, **frames)
+        return self.spark.sql(template.format())
 
-        Each GRAPH_TABLE(...) is compiled to a DataFrame, registered as a
-        temp view, and substituted — then the rewritten query goes to
-        spark.sql.  This is the same source-to-source strategy as the
-        reference's parser override + bind-replace (duckpgq_parser.cpp:40-75,
-        match.cpp:969-1093), done as a preprocessor because Spark's parser
-        is not extensible from Python.
+    def sql(self, query: str) -> DataFrame:
+        """Run SQL that may contain GRAPH_TABLE(...) references and
+        FROM-clause algorithm table functions, as one spark.sql statement.
+
+        Each GRAPH_TABLE(...) is compiled to SQL text and spliced in as a
+        derived table `(<compiled>) AS <alias>` — the same source-to-source
+        strategy as the reference's parser override + bind-replace
+        (duckpgq_parser.cpp:40-75, match.cpp:969-1093), done as a
+        preprocessor because Spark's parser is not extensible from Python.
+        Path-kernel outputs and algorithm results are DataFrames bound by
+        name through spark.sql's `{name}` parameters, so no temp view
+        outlives the statement.
         """
-        out = []
-        pos = 0
-        n = len(query)
-        created: list[str] = []
+        dispatch = self._algorithm_dispatch()
+        call_re = re.compile(
+            r"\b(" + "|".join(dispatch) + r")\s*\(\s*"
+            r"(\"[^\"]+\"|\w+)\s*,\s*(\"[^\"]+\"|\w+)\s*,\s*(\"[^\"]+\"|\w+)\s*\)",
+            re.IGNORECASE,
+        )
+        out, frames = [], {}
+        # algorithm calls found, run only once the statement parses:
+        # (frame name, bound method, args)
+        pending: list[tuple[str, object, list[str]]] = []
+        pos, n = 0, len(query)
         while True:
-            # linear scan for the next GRAPH_TABLE( that is OUTSIDE quoted
-            # strings / identifiers / comments — `SELECT 'graph_table('`
-            # must pass through untouched (duckdb_columns.test analog)
-            m = None
+            # linear scan for the next GRAPH_TABLE( or table-position
+            # algorithm call OUTSIDE quoted strings / identifiers / comments
+            # — `SELECT 'graph_table('` must pass through untouched
+            # (duckdb_columns.test analog)
+            m = algo = None
             j = pos
             while j < n:
                 skip = _skip_special(query, j)
                 if skip is not None:
                     j = skip
                     continue
-                mm = _GRAPH_TABLE_RE.match(query, j)
-                if mm:
-                    m = mm
+                m = _GRAPH_TABLE_RE.match(query, j)
+                if m:
                     break
+                # FROM/JOIN only — a ',' would also match SELECT-list or
+                # argument positions, rewriting a same-named scalar call
+                # (comma-style FROM lists are not supported for table
+                # functions; use JOIN)
+                algo = call_re.match(query, j)
+                if algo and _prev_word(query, j) in ("from", "join"):
+                    break
+                algo = None
                 j += 1
-            if not m:
-                out.append(query[pos:])
+            if not (m or algo):
+                out.append(esc_braces(query[pos:]))
                 break
-            out.append(query[pos : m.start()])
-            # find the matching close paren, skipping quoted strings,
-            # double-quoted identifiers, and -- / /* */ comments (a paren
-            # inside any of those must not affect nesting depth)
-            depth = 1
-            i = m.end()
-            while i < n and depth > 0:
-                skip = _skip_special(query, i)
-                if skip is not None:
-                    i = skip
-                    continue
-                c = query[i]
-                if c == "(":
-                    depth += 1
-                elif c == ")":
-                    depth -= 1
-                i += 1
-            if depth != 0:
-                raise PGQParseError("Unbalanced parentheses in GRAPH_TABLE(...)")
-            body = query[m.end() : i - 1]
-            df = self.graph_table(body)
-            self._view_counter += 1
-            view = f"__pgq_graph_table_{self._view_counter}"
-            df.createOrReplaceTempView(view)
-            created.append(view)
-            out.append(view)
-            # DuckDB names an aliasless derived table `unnamed_subquery`
-            # and lets queries reference its columns through that name
-            # (unnamed_subquery.test) — add the alias unless the caller
-            # wrote one
+            out.append(esc_braces(query[pos:j]))
+            if algo:
+                # Algorithm table functions — `SELECT id, pagerank FROM
+                # pagerank(pg, student, know)` — the reference's
+                # bind-replace surface for its algorithm wrappers
+                # (pagerank.cpp:10-23, weakly_connected_component.cpp:10-25,
+                # local_clustering_coefficient.cpp:17-32; golden syntax
+                # test/sql/scalar/pagerank.test:24).  Like DuckDB, the
+                # aliasless result is referenceable by the function's name.
+                fname = algo.group(1).lower()
+                args = [a.strip().strip('"') for a in algo.groups()[1:]]
+                name = f"__pgq_algo_{len(pending)}"
+                pending.append((name, dispatch[fname], args))
+                out.append("{" + name + "}")
+                alias, i = fname, algo.end()
+            else:
+                i = _close_paren(query, m.end())
+                compiled = self._compile_body(query[m.end() : i - 1])
+                frames.update(compiled.frames)
+                out.append(f"({compiled.sql})")
+                # DuckDB names an aliasless derived table `unnamed_subquery`
+                # and lets queries reference its columns through that name
+                # (unnamed_subquery.test)
+                alias = "unnamed_subquery"
             if _next_word(query, i) in _CLAUSE_KEYWORDS:
-                out.append(" AS unnamed_subquery")
+                out.append(f" AS {alias}")
             pos = i
-        rewritten, pending = self._substitute_algorithm_calls("".join(out))
+        text = "".join(out)
         # DuckDB's FROM-first shorthand (`FROM t LIMIT 10`,
         # unnamed_subquery.test) — Spark requires an explicit SELECT
-        if re.match(r"\s*FROM\b", rewritten, re.IGNORECASE):
-            rewritten = "SELECT * " + rewritten
-        try:
-            if pending:
-                # Algorithm table functions run driver-side iteration (SCC,
-                # k-truss) the moment they're invoked — gate that on the
-                # rewritten query actually PARSING, so a syntax error
-                # elsewhere in the statement costs a parse, not a full
-                # algorithm run.
-                self._assert_parses(rewritten)
-            for view, fn, args in pending:
-                fn(*args).createOrReplaceTempView(view)
-                created.append(view)
-            return self.spark.sql(rewritten)
-        except Exception:
-            # don't leak half-registered __pgq_* temp views on failure
-            for view in created:
-                try:
-                    self.spark.catalog.dropTempView(view)
-                except Exception:  # noqa: BLE001 - best-effort cleanup
-                    pass
-            raise
+        if re.match(r"\s*FROM\b", text, re.IGNORECASE):
+            text = "SELECT * " + text
+        if pending:
+            # Algorithm table functions run their iteration eagerly (SCC,
+            # k-truss) the moment they're invoked — gate that on the
+            # statement actually PARSING, so a syntax error elsewhere costs
+            # a parse, not a full algorithm run.
+            names = [name for name, _, _ in pending]
+            self._assert_parses(text.format(**{k: k for k in [*frames, *names]}))
+            for name, fn, args in pending:
+                frames[name] = fn(*args)
+        return self._run(text, frames)
 
     def _assert_parses(self, sql: str) -> None:
         """Syntax-check `sql` without resolving views or running anything.
@@ -271,31 +309,15 @@ class PGQSession:
             parser.parsePlan(sql)
         except Exception:
             # surface Spark's canonical captured ParseException (parse fails
-            # before any view resolution, so the missing __pgq_algo views
-            # are never reached)
+            # before any name resolution)
             self.spark.sql(sql)
             raise  # defensive: parsers disagreed — surface the JVM error
 
-    def _substitute_algorithm_calls(self, query: str):
-        """Rewrite FROM-clause algorithm table functions —
-        `SELECT id, pagerank FROM pagerank(pg, student, know)` — into
-        temp-view references, the reference's bind-replace surface for its
-        algorithm wrappers (src/core/functions/table/pagerank.cpp:10-23,
-        weakly_connected_component.cpp:10-25,
-        local_clustering_coefficient.cpp:17-32; golden syntax
-        test/sql/scalar/pagerank.test:24).  Our beyond-reference
-        algorithms with the same (pg, vertex, edge) shape dispatch too.
-        Only calls in table position (after FROM / JOIN / a FROM-list
-        comma) are rewritten; like DuckDB, the aliasless result is
-        referenceable by the function's own name.
-
-        Returns (rewritten, pending) where pending is a list of
-        (view_name, bound_method, args) — the algorithms are NOT invoked
-        here (several run driver-side iteration eagerly); the caller
-        validates the rewritten statement first, then registers the
-        views, so a syntax error elsewhere never pays an algorithm run
-        and failed statements leave no temp views behind."""
-        dispatch = {
+    def _algorithm_dispatch(self) -> dict:
+        """Table functions `sql` rewrites in FROM/JOIN position; our
+        beyond-reference algorithms with the same (pg, vertex, edge) shape
+        dispatch too."""
+        return {
             "pagerank": self.pagerank,
             "weakly_connected_component": self.weakly_connected_component,
             "local_clustering_coefficient": self.local_clustering_coefficient,
@@ -311,43 +333,6 @@ class PGQSession:
             "contract_communities": self.contract_communities,
             "community_conductance": self.community_conductance,
         }
-        call_re = re.compile(
-            r"\b(" + "|".join(dispatch) + r")\s*\(\s*"
-            r"(\"[^\"]+\"|\w+)\s*,\s*(\"[^\"]+\"|\w+)\s*,\s*(\"[^\"]+\"|\w+)\s*\)",
-            re.IGNORECASE,
-        )
-        out, pos, n = [], 0, len(query)
-        pending: list[tuple[str, object, list[str]]] = []
-        while True:
-            m = None
-            j = pos
-            while j < n:
-                skip = _skip_special(query, j)
-                if skip is not None:
-                    j = skip
-                    continue
-                # FROM/JOIN only — a ',' would also match SELECT-list or
-                # argument positions, rewriting a same-named scalar call
-                # into a view name (comma-style FROM lists are not
-                # supported for table functions; use JOIN)
-                mm = call_re.match(query, j)
-                if mm and _prev_word(query, j) in ("from", "join"):
-                    m = mm
-                    break
-                j += 1
-            if not m:
-                out.append(query[pos:])
-                return "".join(out), pending
-            fname = m.group(1).lower()
-            args = [a.strip().strip('"') for a in m.groups()[1:]]
-            self._view_counter += 1
-            view = f"__pgq_algo_{self._view_counter}"
-            pending.append((view, dispatch[fname], args))
-            out.append(query[pos : m.start()])
-            out.append(view)
-            if _next_word(query, m.end()) in _CLAUSE_KEYWORDS:
-                out.append(f" AS {fname}")
-            pos = m.end()
 
     # -- algorithm table functions --------------------------------------
     def _graph_frames(

@@ -246,12 +246,15 @@ def declared_foreign_keys(
     return out
 
 
+def table_ref(name: str) -> str:
+    """A (possibly qualified) table name with every part backtick-quoted,
+    so reserved words and exotic identifiers work as backing tables
+    (generated_sql_quoting.test uses tables named "select" / "group")."""
+    return ".".join(f"`{p}`" for p in name.split("."))
+
+
 def table_df(spark: SparkSession, name: str) -> DataFrame:
-    """spark.table with every part of the (possibly qualified) name
-    backtick-quoted, so reserved words and exotic identifiers work as
-    backing tables (generated_sql_quoting.test uses tables named
-    "select" / "group")."""
-    return spark.table(".".join(f"`{p}`" for p in name.split(".")))
+    return spark.table(table_ref(name))
 
 
 @dataclass
@@ -402,13 +405,27 @@ class PropertyGraph:
             df = df.where(F.col(t.discriminator).bitwiseAND(F.lit(mask)) == F.lit(mask))
         return df
 
-    def property_columns(self, t: PropertyGraphTable) -> list[tuple[str, str]]:
-        """[(source_column, exposed_name)] for an element table."""
+    def element_sql(self, label: str) -> str:
+        """element_df as a SQL FROM-clause source."""
+        t, sub_idx = self.resolve_label(label)
+        if sub_idx is None:
+            return table_ref(t.table_name)
+        mask = 1 << sub_idx
+        return (
+            f"(SELECT * FROM {table_ref(t.table_name)} "
+            f"WHERE (`{t.discriminator}` & {mask}) = {mask})"
+        )
+
+    def property_columns(
+        self, t: PropertyGraphTable, columns: list[str] | None = None
+    ) -> list[tuple[str, str]]:
+        """[(source_column, exposed_name)] for an element table; `columns`
+        is the table's column list when the caller already holds it."""
         if t.no_properties:
             return []
         if t.properties:
             return list(t.properties.items())
-        cols = table_df(self.spark, t.table_name).columns
+        cols = columns if columns is not None else table_df(self.spark, t.table_name).columns
         exc = {c.lower() for c in t.except_columns}
         return [(c, c) for c in cols if c.lower() not in exc]
 

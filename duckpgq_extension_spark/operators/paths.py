@@ -50,6 +50,7 @@ from urllib.parse import unquote, urlparse
 
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from ..errors import PGQCapacityError, PGQNotImplementedError
 
@@ -141,7 +142,7 @@ def checkpoint_with_count(df: DataFrame) -> tuple[DataFrame, int]:
     return out, obs.get["n"]
 
 
-def require_integral_keys(df: DataFrame, cols: list[str], context: str) -> None:
+def require_integral_keys(df: DataFrame | StructType, cols: list[str], context: str) -> None:
     """Bind-time guard for the places that splice NATURAL vertex/edge ids
     into long arrays (EDGE ID columns, named-path fixed segments): a
     non-integral value would cast to NULL and corrupt the array.
@@ -149,7 +150,7 @@ def require_integral_keys(df: DataFrame, cols: list[str], context: str) -> None:
     they route composite/string keys through the collision-checked
     xxhash64 surrogate (compiler._key_hash), the no-global-sort analog of
     the reference's dense CSR renumbering (csr_creation.cpp)."""
-    types = {f.name.lower(): f.dataType.simpleString() for f in df.schema.fields}
+    types = col_types(df)
     for c in cols:
         dt = types.get(c.lower())
         if dt not in _INTEGRAL_TYPES:
@@ -1031,13 +1032,19 @@ def cheapest_path_distances(
         edges.unpersist()
 
 
-def integral_keys(df: DataFrame, cols: list[str]) -> bool:
+def integral_keys(df: DataFrame | StructType, cols: list[str]) -> bool:
     """True iff every named column has an integral type (usable directly
     as a BFS vertex id); non-integral keys route through the xxhash64
     surrogate instead (reference analog: dense renumbering at CSR build
     supports arbitrary key types, csr_creation.cpp)."""
-    types = {f.name.lower(): f.dataType.simpleString() for f in df.schema.fields}
+    types = col_types(df)
     return all(types.get(c.lower()) in _INTEGRAL_TYPES for c in cols)
+
+
+def col_types(df: DataFrame | StructType) -> dict[str, str]:
+    """Lowercased column name -> simple type string of a frame or schema."""
+    schema = df if isinstance(df, StructType) else df.schema
+    return {f.name.lower(): f.dataType.simpleString() for f in schema.fields}
 
 
 def _temporal_seeds(seeds: DataFrame, start_ts: int | None) -> DataFrame:

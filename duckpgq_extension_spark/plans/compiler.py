@@ -1,15 +1,15 @@
-"""MATCH-pattern -> DataFrame compiler.
+"""MATCH-pattern -> SQL text compiler.
 
 This is the Spark equivalent of the reference's bind-replace step
 (PGQMatchFunction::MatchBindReplace,
 /root/reference/src/core/functions/table/match.cpp:969-1093): a MATCH
-pattern is compiled into a plain relational plan — equi-joins + filters +
-projection — and handed to Catalyst.  Unlike the reference (which emits
-cross joins + WHERE and relies on the host optimizer to recover hash
-joins, match.cpp:64-73), we emit explicit equi-join conditions directly so
-Catalyst immediately plans broadcast/sort-merge hash joins and can reorder
-them; this matters at cluster scale where an accidental cartesian product
-is fatal.
+pattern is rewritten, source to source, into one plain SQL query — joins +
+filters + projection — which `PGQSession.sql` splices into the user's
+statement as a derived table, so Spark parses and analyzes the whole
+statement once.  Unlike the reference (which emits cross joins + WHERE and
+relies on the host optimizer to recover hash joins, match.cpp:64-73), each
+join carries its equi-join ON condition, so Catalyst never sees an
+accidental cartesian product.
 
 Edge-direction semantics (match.cpp:365-444):
   (a)-[e]->(b)  e.src=a, e.dst=b
@@ -19,20 +19,23 @@ Edge-direction semantics (match.cpp:365-444):
 
 Variable-length quantifiers and ANY SHORTEST compile to a batched
 multi-source BFS (operators/paths.py) producing a (src, dst, dist, path)
-"virtual edge table" that joins into the plan like any other edge —
-the Spark analog of the reference's CSR + iterativelength/shortestpath
-scalar kernels (match.cpp:497-707).
+"virtual edge table" — the Spark analog of the reference's CSR +
+iterativelength/shortestpath scalar kernels (match.cpp:497-707).  The
+kernel output is a DataFrame; the SQL text names it as a `{field}` that
+spark.sql binds (see CompiledMatch).
 """
 
 from __future__ import annotations
 
+import logging
 import re
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..catalog import PropertyGraph, PropertyGraphTable, table_df
-from ..errors import PGQBinderError, PGQNotImplementedError
+from ..errors import PGQBinderError, PGQConstraintError, PGQNotImplementedError
 from ..operators import paths as pathops
 from ..parser.ast import (
     EDGE_ANY,
@@ -61,8 +64,28 @@ _SIMPLE_REF_RE = re.compile(
 )
 
 
+_log = logging.getLogger("duckpgq_extension_spark")
+
+
 def _q(name: str) -> str:
-    return f"`{name}`"
+    return "`" + name.replace("`", "``") + "`"
+
+
+def esc_braces(text: str) -> str:
+    """Escape literal text for a str.format template (spark.sql with
+    bound frames formats the whole statement)."""
+    return text.replace("{", "{{").replace("}", "}}")
+
+
+@dataclass
+class CompiledMatch:
+    """One GRAPH_TABLE as a SQL query.  `sql` is a str.format template:
+    literal braces are doubled and each kernel output is a `{field}` bound
+    from `frames` (spark.sql(sql, **frames) registers them only while the
+    statement is analyzed)."""
+
+    sql: str
+    frames: dict
 
 
 _NUM_SIMPLE = {"tinyint", "smallint", "int", "bigint", "float", "double"}
@@ -72,17 +95,13 @@ def _is_numeric_type(simple: str | None) -> bool:
     return bool(simple) and (simple in _NUM_SIMPLE or simple.startswith("decimal"))
 
 
-def _schema_types(df) -> dict:
-    return {f.name.lower(): f.dataType.simpleString() for f in df.schema.fields}
-
-
 def _key_canon_flags(vdf, pk_lists, edf, fk_lists) -> list[bool]:
     """Per key position: numeric-canonicalize iff the vertex pk(s) and
     every edge fk at that position are ALL numeric.  Mixed numeric/string
     positions keep the plain string rendering (where INT 5 vs VARCHAR '5'
     already agree); any residual divergence is caught loudly by the
     hash-resolution guard in _check_path_vertices."""
-    vt, et = _schema_types(vdf), _schema_types(edf)
+    vt, et = pathops.col_types(vdf), pathops.col_types(edf)
     n = len(pk_lists[0])
     return [
         all(_is_numeric_type(vt.get(lst[i].lower())) for lst in pk_lists)
@@ -119,26 +138,31 @@ def _key_hash(cols, canon: list[bool] | None = None, tag: str | None = None) -> 
     return F.xxhash64(*rendered)
 
 
-def _expr(text: str):
-    """F.expr with PGQ/ANSI double-quoted identifiers translated to Spark
-    backticks (generated_sql_quoting.test exercises "Name Value"-style
-    columns; Spark reads double quotes as string literals).  Single-quoted
-    string literals pass through untouched."""
+def _sql(text: str) -> str:
+    """User expression text with PGQ/ANSI double-quoted identifiers
+    translated to Spark backticks (generated_sql_quoting.test exercises
+    "Name Value"-style columns; Spark reads double quotes as string
+    literals).  Single-quoted string literals pass through untouched."""
     parts = re.split(r"('(?:[^']|'')*')", text)
-    translated = "".join(
+    return "".join(
         p
         if p.startswith("'")
-        else _DQUOTE_IDENT_RE.sub(lambda m: "`" + m.group(1).replace('""', '"') + "`", p)
+        else _DQUOTE_IDENT_RE.sub(lambda m: _q(m.group(1).replace('""', '"')), p)
         for p in parts
     )
-    return F.expr(translated)
 
 
 class MatchCompiler:
     def __init__(self, pg: PropertyGraph, expr: MatchExpression):
         self.pg = pg
         self.expr = expr
-        self.plan: DataFrame | None = None
+        # the FROM clause: (source, alias, ON condition or None for a cross
+        # join); a source is SQL text or a kernel-output DataFrame
+        self.joins: list[tuple[str | DataFrame, str, str | None]] = []
+        # internal conditions (path modes, quantifier bounds, closures),
+        # trusted SQL unlike the user text in self.filters
+        self.conds: list[str] = []
+        self._schemas: dict = {}  # table name -> StructType, once per compile
         # binding -> {"kind": "vertex"|"edge"|"path", "pgt": PropertyGraphTable|None}
         self.bound: dict[str, dict] = {}
         self.filters: list[str] = []
@@ -185,19 +209,41 @@ class MatchCompiler:
         }
 
     # ------------------------------------------------------------------
-    def compile(self) -> DataFrame:
+    def compile(self) -> CompiledMatch:
         for pattern in self.expr.patterns:
             self._compile_pattern(pattern)
         if self.expr.where:
             self.filters.append(self.expr.where)
-        plan = self.plan
-        if plan is None:
+        if not self.joins:
             raise PGQBinderError("MATCH requires at least one pattern element")
         for f in self.filters:
-            if not f.startswith("`__pgq"):
-                self._validate_expr_refs(f)
-            plan = plan.where(_expr(f))
-        return self._project(plan)
+            self._validate_expr_refs(f)
+        sql = esc_braces(f"SELECT {', '.join(self._project())} FROM")
+        frames: dict = {}
+        for i, (src, alias, on) in enumerate(self.joins):
+            if isinstance(src, str):
+                src = esc_braces(src)
+            else:
+                # named by object identity: unique among the live frames
+                # that one statement binds, however many GRAPH_TABLEs it has
+                frames[name := f"__pgq_frame_{id(src):x}"] = src
+                src = "{" + name + "}"
+            join = " " if i == 0 else " CROSS JOIN " if on is None else " JOIN "
+            sql += join + src + esc_braces(f" AS {_q(alias)}" + (f" ON {on}" if on else ""))
+        where = [f"({c})" for c in self.conds + [_sql(f) for f in self.filters]]
+        if where:
+            sql += esc_braces(" WHERE " + " AND ".join(where))
+        return CompiledMatch(sql, frames)
+
+    def _schema(self, table: str):
+        if table not in self._schemas:
+            self._schemas[table] = table_df(self.pg.spark, table).schema
+        return self._schemas[table]
+
+    def _props(self, pgt: PropertyGraphTable) -> list[tuple[str, str]]:
+        listed = pgt.properties or pgt.no_properties
+        cols = None if listed else self._schema(pgt.table_name).names
+        return self.pg.property_columns(pgt, cols)
 
     # -- pattern walking ----------------------------------------------
     def _compile_pattern(self, pattern: PathPattern) -> None:
@@ -320,7 +366,7 @@ class MatchCompiler:
                     if bi == bj:
                         # the same binding at two positions IS a repeated
                         # vertex by construction
-                        self.plan = self.plan.where(F.lit(False))
+                        self.conds.append("false")
                         continue
                     ti, ki = vkeys[bi]
                     tj, kj = vkeys[bj]
@@ -330,7 +376,7 @@ class MatchCompiler:
                         f"{_q(bi)}.{_q(a)} <> {_q(bj)}.{_q(b)}"
                         for a, b in zip(ki, kj)
                     )
-                    self.plan = self.plan.where(F.expr(neq))
+                    self.conds.append(neq)
         if mode == "TRAIL":
             items = []
             for eel in edges_el:
@@ -346,11 +392,9 @@ class MatchCompiler:
                             f"TRAIL over edge table '{pi.table_name}' needs "
                             "an EDGE ID column to tell parallel edges apart"
                         )
-                    self.plan = self.plan.where(
-                        F.expr(
-                            f"{_q(bi)}.{_q(pi.edge_id_col)} <> "
-                            f"{_q(bj)}.{_q(pj.edge_id_col)}"
-                        )
+                    self.conds.append(
+                        f"{_q(bi)}.{_q(pi.edge_id_col)} <> "
+                        f"{_q(bj)}.{_q(pj.edge_id_col)}"
                     )
 
     def _vertex_pgt(self, v: VertexElement) -> PropertyGraphTable:
@@ -369,8 +413,7 @@ class MatchCompiler:
                 self.filters.append(v.where)
             return
         pgt = self._vertex_pgt(v)
-        df = self.pg.element_df(v.label).alias(v.binding)
-        self.plan = df if self.plan is None else self.plan.crossJoin(df)
+        self.joins.append((self.pg.element_sql(v.label), v.binding, None))
         self.bound[v.binding] = {"kind": "vertex", "pgt": pgt, "label": v.label}
         if v.where:
             self.filters.append(v.where)
@@ -393,16 +436,8 @@ class MatchCompiler:
     def _endpoint_pks(self, pgt: PropertyGraphTable, vertex_pgt: PropertyGraphTable, prefer_source: bool) -> list[str]:
         """pk columns of the vertex table as referenced by this edge table
         (multi-column for composite keys, property_graph_table.hpp:56-71)."""
-        if prefer_source and pgt.source_reference == vertex_pgt.table_name:
-            return pgt.source_pk
-        if pgt.destination_reference == vertex_pgt.table_name:
-            return pgt.destination_pk
-        if pgt.source_reference == vertex_pgt.table_name:
-            return pgt.source_pk
-        raise PGQBinderError(
-            f"Edge table '{pgt.table_name}' does not reference vertex table "
-            f"'{vertex_pgt.table_name}'"
-        )
+        side = self._endpoint_side(pgt, vertex_pgt, prefer_source)
+        return pgt.source_pk if side == "src" else pgt.destination_pk
 
     def _endpoint_pk(self, pgt: PropertyGraphTable, vertex_pgt: PropertyGraphTable, prefer_source: bool) -> str:
         pks = self._endpoint_pks(pgt, vertex_pgt, prefer_source)
@@ -413,8 +448,8 @@ class MatchCompiler:
         """Canonicalization flags for this edge table's key positions,
         shared by every surrogate-hash site (edge fks, vertex pks, SQL and
         Column forms) so they can never diverge."""
-        vtab = table_df(self.pg.spark, pgt.source_reference)
-        etab = table_df(self.pg.spark, pgt.table_name)
+        vtab = self._schema(pgt.source_reference)
+        etab = self._schema(pgt.table_name)
         return _key_canon_flags(
             vtab,
             [list(pgt.source_pk), list(pgt.destination_pk)],
@@ -425,9 +460,9 @@ class MatchCompiler:
     def _endpoint_side(
         self, pgt: PropertyGraphTable, vertex_pgt: PropertyGraphTable, prefer_source: bool
     ) -> str:
-        """Which side of the edge table this vertex table binds to —
-        mirrors _endpoint_pks' resolution order exactly so the pk list and
-        the surrogate tag/canon always come from the same side."""
+        """Which side of the edge table this vertex table binds to — the one
+        resolution order behind _endpoint_pks, so the pk list and the
+        surrogate tag/canon always come from the same side."""
         if prefer_source and pgt.source_reference == vertex_pgt.table_name:
             return "src"
         if pgt.destination_reference == vertex_pgt.table_name:
@@ -460,28 +495,10 @@ class MatchCompiler:
                 pgt.destination_pk,
                 pgt.destination_fk,
             )
-        vtab = table_df(self.pg.spark, vref)
-        etab = table_df(self.pg.spark, pgt.table_name)
-        canon = _key_canon_flags(vtab, [list(pks)], etab, [list(fks)])
+        canon = _key_canon_flags(
+            self._schema(vref), [list(pks)], self._schema(pgt.table_name), [list(fks)]
+        )
         return canon, vref.lower()
-
-    def _endpoint_key_col(
-        self,
-        pgt: PropertyGraphTable,
-        vertex_pgt: PropertyGraphTable,
-        prefer_source: bool,
-        surrogate: bool,
-    ):
-        """BFS vertex-id Column for an endpoint: the natural long key, or
-        the xxhash64 surrogate (must mirror _bind_path_edge's decision —
-        passed in explicitly so edge and vertex sides can never diverge
-        when fk/pk physical types differ)."""
-        side = self._endpoint_side(pgt, vertex_pgt, prefer_source)
-        pks = list(pgt.source_pk if side == "src" else pgt.destination_pk)
-        if not surrogate:
-            return F.col(pks[0]).cast("long")
-        canon, tag = self._surrogate_parts(pgt, side)
-        return _key_hash([F.col(c) for c in pks], canon, tag)
 
     def _endpoint_key_sql(
         self,
@@ -491,12 +508,14 @@ class MatchCompiler:
         binding: str,
         surrogate: bool,
     ) -> str:
-        """Same key as _endpoint_key_col but as a SQL expression string
-        qualified by a binding alias (used in join conditions)."""
+        """BFS vertex id of an endpoint as SQL over the `binding` alias: the
+        natural long key, or the xxhash64 surrogate (must mirror
+        _bind_path_edge's decision — passed in explicitly so edge and
+        vertex sides can never diverge when fk/pk physical types differ)."""
         side = self._endpoint_side(pgt, vertex_pgt, prefer_source)
-        pks = list(pgt.source_pk if side == "src" else pgt.destination_pk)
+        pks = self._endpoint_pks(pgt, vertex_pgt, prefer_source)
         if not surrogate:
-            return f"{_q(binding)}.{_q(pks[0])}"
+            return f"cast({_q(binding)}.{_q(pks[0])} as bigint)"
         canon, tag = self._surrogate_parts(pgt, side)
         parts = []
         if tag is not None:
@@ -529,7 +548,7 @@ class MatchCompiler:
         src_fks = list(pgt.source_fk)
         dst_fks = list(pgt.destination_fk)
         e = edge.binding
-        edf = self.pg.element_df(edge.label)
+        edge_sql = self.pg.element_sql(edge.label)
         path_var = pattern.path_variable
         len_only = self._len_only(path_var)
         eid_col = None
@@ -540,30 +559,30 @@ class MatchCompiler:
             if pgt.edge_id_col is not None:
                 eid_col = pgt.edge_id_col
                 pathops.require_integral_keys(
-                    edf, [eid_col], f"edge table '{pgt.table_name}' (EDGE ID)"
+                    self._schema(pgt.table_name), [eid_col],
+                    f"edge table '{pgt.table_name}' (EDGE ID)",
                 )
             else:
                 # per-query fallback id, fully distributed (see paths.py)
-                edf = edf.withColumn("__pgq_eid", F.monotonically_increasing_id())
                 eid_col = "__pgq_eid"
+                edge_sql = (
+                    f"(SELECT *, monotonically_increasing_id() AS {eid_col} "
+                    f"FROM {edge_sql} AS __pgq_t)"
+                )
 
         nxt_new = nxt.binding not in self.bound
         prev_pgt = self.bound[prev.binding]["pgt"]
 
         if edge.direction == EDGE_ANY:
             # undirected: union of both orientations (match.cpp:365-392)
-            cols = [c for c in edf.columns]
-            fwd = edf.select(
-                *[F.col(c).alias(f"__pgq_from_{i}") for i, c in enumerate(src_fks)],
-                *[F.col(c).alias(f"__pgq_to_{i}") for i, c in enumerate(dst_fks)],
-                *cols,
+            def oriented(froms: list[str], tos: list[str]) -> str:
+                keys = [f"{_q(c)} AS __pgq_from_{i}" for i, c in enumerate(froms)]
+                keys += [f"{_q(c)} AS __pgq_to_{i}" for i, c in enumerate(tos)]
+                return f"SELECT {', '.join(keys)}, * FROM {edge_sql} AS __pgq_t"
+
+            edge_sql = (
+                f"({oriented(src_fks, dst_fks)} UNION ALL {oriented(dst_fks, src_fks)})"
             )
-            rev = edf.select(
-                *[F.col(c).alias(f"__pgq_from_{i}") for i, c in enumerate(dst_fks)],
-                *[F.col(c).alias(f"__pgq_to_{i}") for i, c in enumerate(src_fks)],
-                *cols,
-            )
-            edf = fwd.unionByName(rev)
             from_cols = [f"__pgq_from_{i}" for i in range(len(src_fks))]
             to_cols = [f"__pgq_to_{i}" for i in range(len(dst_fks))]
         elif edge.direction == EDGE_LEFT:
@@ -598,14 +617,11 @@ class MatchCompiler:
             cond_nxt = endpoint_cond(nxt.binding, nxt_pgt, to_cols, is_source=False)
 
         if nxt_new:
-            self.plan = self.plan.join(edf.alias(e), F.expr(cond_prev))
-            vdf = self.pg.element_df(nxt.label).alias(nxt.binding)
-            self.plan = self.plan.join(vdf, F.expr(cond_nxt))
+            self.joins.append((edge_sql, e, cond_prev))
+            self.joins.append((self.pg.element_sql(nxt.label), nxt.binding, cond_nxt))
             self.bound[nxt.binding] = {"kind": "vertex", "pgt": nxt_pgt, "label": nxt.label}
         else:
-            self.plan = self.plan.join(
-                edf.alias(e), F.expr(f"({cond_prev}) AND ({cond_nxt})")
-            )
+            self.joins.append((edge_sql, e, f"({cond_prev}) AND ({cond_nxt})"))
         self.bound[e] = {"kind": "edge", "pgt": pgt, "label": edge.label}
 
         if edge.direction == EDGE_BOTH:
@@ -623,9 +639,7 @@ class MatchCompiler:
                     for c, pk in zip(dst_fks, prev_pks)
                 ]
             )
-            self.plan = self.plan.join(
-                self.pg.element_df(edge.label).alias(e2), F.expr(rev_cond)
-            )
+            self.joins.append((self.pg.element_sql(edge.label), e2, rev_cond))
         if path_var is not None and len_only:
             # length-only named path: a fixed segment is exactly one hop —
             # no array, no edge id, no integral-key requirement
@@ -638,14 +652,11 @@ class MatchCompiler:
             # match.cpp:602-620)
             prev_pk = self._endpoint_pk(pgt, prev_pgt, prefer_source=not swapped)
             nxt_pk = self._endpoint_pk(pgt, nxt_pgt, prefer_source=swapped)
-            pathops.require_integral_keys(
-                table_df(self.pg.spark, prev_pgt.table_name), [prev_pk],
-                f"vertex table '{prev_pgt.table_name}' (named path)",
-            )
-            pathops.require_integral_keys(
-                table_df(self.pg.spark, nxt_pgt.table_name), [nxt_pk],
-                f"vertex table '{nxt_pgt.table_name}' (named path)",
-            )
+            for vt, pk in ((prev_pgt, prev_pk), (nxt_pgt, nxt_pk)):
+                pathops.require_integral_keys(
+                    self._schema(vt.table_name), [pk],
+                    f"vertex table '{vt.table_name}' (named path)",
+                )
             self.path_vars.setdefault(path_var, e)
             segs = self.path_segments.setdefault(path_var, [])
             eid_sql = f"cast({_q(e)}.{_q(eid_col)} as bigint)"
@@ -698,9 +709,9 @@ class MatchCompiler:
         composite = (
             hetero
             or len(src_fks) > 1
-            or not pathops.integral_keys(edf, src_fks + dst_fks)
+            or not pathops.integral_keys(self._schema(pgt.table_name), src_fks + dst_fks)
             or not pathops.integral_keys(
-                table_df(self.pg.spark, pgt.source_reference), pgt.source_pk
+                self._schema(pgt.source_reference), pgt.source_pk
             )
         )
         # integrity guard before any traversal (reference error parity:
@@ -733,10 +744,11 @@ class MatchCompiler:
         else:
             src_fk, dst_fk = src_fks[0], dst_fks[0]
             pathops.require_integral_keys(
-                edf, [src_fk, dst_fk], f"edge table '{pgt.table_name}'"
+                self._schema(pgt.table_name), [src_fk, dst_fk],
+                f"edge table '{pgt.table_name}'",
             )
             pathops.require_integral_keys(
-                table_df(self.pg.spark, pgt.source_reference),
+                self._schema(pgt.source_reference),
                 pgt.source_pk,
                 f"vertex table '{pgt.source_reference}'",
             )
@@ -767,11 +779,12 @@ class MatchCompiler:
                     "ANY CHEAPEST requires COST <column> inside the "
                     "quantified edge, e.g. -[e:Label COST w]->*"
                 )
-            cost_lookup = {c.lower(): c for c in edf.columns}
+            edge_cols = self._schema(pgt.table_name).names
+            cost_lookup = {c.lower(): c for c in edge_cols}
             if edge.cost_col not in cost_lookup:
                 raise PGQBinderError(
                     f"COST column '{edge.cost_col}' does not exist on edge "
-                    f"table '{pgt.table_name}' (columns: {edf.columns})"
+                    f"table '{pgt.table_name}' (columns: {edge_cols})"
                 )
             edge_cost_col = cost_lookup[edge.cost_col]
         len_only = self._len_only(pattern.path_variable) and not pattern.cheapest
@@ -809,20 +822,16 @@ class MatchCompiler:
         # the traversal (BFS from 10 seeds instead of |V| — the difference
         # between a seeded expansion and an all-pairs closure at scale)
         prev_info = self.bound[prev.binding]
-        src_key = self._endpoint_key_col(
-            pgt, prev_info["pgt"], prefer_source=True, surrogate=composite
-        )
+        src_key = self._endpoint_key_sql(pgt, prev_info["pgt"], True, prev.binding, composite)
         src_vdf = self.pg.element_df(prev.label or prev_info["label"]).alias(prev.binding)
         if prev.where:
-            src_vdf = src_vdf.where(_expr(prev.where))
-        sources = src_vdf.select(src_key)
+            src_vdf = src_vdf.where(_sql(prev.where))
+        sources = src_vdf.selectExpr(src_key)
         # effective quantifier bounds: ANY SHORTEST over a plain edge = one hop
         if not edge.quantified:
             lower, upper = 1, 1
         else:
             lower, upper = edge.lower, edge.upper
-        from ..errors import PGQConstraintError
-
         if upper is not None and lower > upper:
             raise PGQConstraintError("Lower bound greater than upper bound")
         if upper is None and not pattern.shortest and not pattern.cheapest and enumerate_mode is None:
@@ -860,13 +869,9 @@ class MatchCompiler:
             # (the reference's iterativelength_bidirectional variant)
             dst_pgt = self._vertex_pgt(nxt)
             dst_vdf = self.pg.element_df(nxt.label).alias(nxt.binding)
-            dst_vdf = dst_vdf.where(_expr(nxt.where))
-            dst_key = self._endpoint_key_col(
-                pgt, dst_pgt, prefer_source=False, surrogate=composite
-            )
-            pairs = sources.toDF("src").crossJoin(
-                dst_vdf.select(dst_key).toDF("dst")
-            )
+            dst_vdf = dst_vdf.where(_sql(nxt.where))
+            dst_key = self._endpoint_key_sql(pgt, dst_pgt, False, nxt.binding, composite)
+            pairs = sources.toDF("src").crossJoin(dst_vdf.selectExpr(dst_key).toDF("dst"))
             dist = pathops.bidirectional_length(edges, pairs, max_hops=upper)
         else:
             dist = pathops.bfs_distances(
@@ -878,10 +883,6 @@ class MatchCompiler:
                 all_shortest=pattern.all_shortest,
             )
         # virtual edge table (src, dst, dist [, path])
-        self.plan = self.plan if self.plan is not None else None
-        if self.plan is None:
-            raise PGQBinderError("Path pattern must start with a vertex")
-
         prev_pgt = self.bound[prev.binding]["pgt"]
         nxt_new = nxt.binding not in self.bound
         nxt_pgt = self._vertex_pgt(nxt) if nxt_new else self.bound[nxt.binding]["pgt"]
@@ -894,13 +895,12 @@ class MatchCompiler:
             f"{_q(e)}.`dst` = "
             f"{self._endpoint_key_sql(pgt, nxt_pgt, False, nxt.binding, composite)}"
         )
-        self.plan = self.plan.join(dist.alias(e), F.expr(cond_prev))
+        self.joins.append((dist, e, cond_prev))
         if nxt_new:
-            vdf = self.pg.element_df(nxt.label).alias(nxt.binding)
-            self.plan = self.plan.join(vdf, F.expr(cond_nxt))
+            self.joins.append((self.pg.element_sql(nxt.label), nxt.binding, cond_nxt))
             self.bound[nxt.binding] = {"kind": "vertex", "pgt": nxt_pgt, "label": nxt.label}
         else:
-            self.plan = self.plan.where(F.expr(cond_nxt))
+            self.conds.append(cond_nxt)
         self.bound[e] = {"kind": "path", "pgt": pgt, "label": edge.label}
 
         # quantifier bounds filter (BETWEEN semantics of match.cpp:657-671)
@@ -912,11 +912,11 @@ class MatchCompiler:
             # the cheapest CLOSED walk is a different query (house
             # semantics, shared with the shortest route's dist >= 1)
             if lower == 1:
-                self.filters.append(f"size({_q(e)}.`path`) >= 3")
+                self.conds.append(f"size({_q(e)}.`path`) >= 3")
         elif upper is not None:
-            self.filters.append(f"{_q(e)}.`dist` BETWEEN {lower} AND {upper}")
+            self.conds.append(f"{_q(e)}.`dist` BETWEEN {lower} AND {upper}")
         elif lower > 0:
-            self.filters.append(f"{_q(e)}.`dist` >= {lower}")
+            self.conds.append(f"{_q(e)}.`dist` >= {lower}")
         if pattern.path_variable:
             if pattern.path_variable in self.path_quantified:
                 raise PGQNotImplementedError(
@@ -991,8 +991,6 @@ class MatchCompiler:
         vtab = table_df(self.pg.spark, pgt.source_reference)
         vkeys = vtab.select(*[F.col(c).alias(f"__vk{i}") for i, c in enumerate(pks)])
         if surrogate or len(pks) > 1 or not pathops.integral_keys(vtab, pks):
-            from ..errors import PGQConstraintError
-
             canon = self._key_canon(pgt)
             nn = vtab
             for c in pks:  # NULL-key vertices are unaddressable; exclude
@@ -1031,8 +1029,6 @@ class MatchCompiler:
             .count()
         )
         if resolved != n_edges:
-            from ..errors import PGQConstraintError
-
             raise PGQConstraintError(
                 "Non-existent/non-unique vertices detected. Make sure all "
                 "vertices referred by edge tables exist and are unique for "
@@ -1043,8 +1039,6 @@ class MatchCompiler:
             # too, i.e. fk-side and pk-side renderings agree for every edge
             # (they can diverge on type mixes canonicalization doesn't
             # cover, which would otherwise silently produce empty paths)
-            from ..errors import PGQConstraintError
-
             canon = self._key_canon(pgt)
             nn = vtab
             for c in pks:
@@ -1084,8 +1078,6 @@ class MatchCompiler:
         one traversal node).  All checks are one-pass aggregates over the
         vertex tables plus one semi-join pass over the edges — cached per
         edge label like the homogeneous guard."""
-        from ..errors import PGQConstraintError
-
         n_edges = edf.count()
         side_hashes = {}
         for side, vref, pks, fks in (
@@ -1159,12 +1151,11 @@ class MatchCompiler:
             )
 
     # -- projection ----------------------------------------------------
-    def _prop_cols(self, binding: str) -> list:
-        info = self.bound[binding]
-        cols = []
-        for src, exposed in self.pg.property_columns(info["pgt"]):
-            cols.append(F.col(f"{_q(binding)}.{_q(src)}").alias(exposed))
-        return cols
+    def _prop_cols(self, binding: str) -> list[str]:
+        return [
+            f"{_q(binding)}.{_q(src)} AS {_q(exposed)}"
+            for src, exposed in self._props(self.bound[binding]["pgt"])
+        ]
 
     def _validate_expr_refs(self, text: str) -> None:
         # strip string literals so 'a.b' inside quotes is not mistaken for a ref
@@ -1180,7 +1171,7 @@ class MatchCompiler:
             if info["kind"] == "path":
                 continue
             pgt = info["pgt"]
-            registered = {c.lower() for c, _ in self.pg.property_columns(pgt)}
+            registered = {c.lower() for c, _ in self._props(pgt)}
             keys = {
                 c.lower()
                 for c in (
@@ -1212,7 +1203,7 @@ class MatchCompiler:
             and m.group(2).lower() == pks[0].lower()
         )
 
-    def _path_fn_col(self, item: ColumnItem):
+    def _path_fn_sql(self, item: ColumnItem) -> str:
         if item.fn == "path_cost":
             src = self.path_cost_cols.get(item.path_var)
             if not src:
@@ -1220,7 +1211,7 @@ class MatchCompiler:
                     f"path_cost() requires an ANY CHEAPEST path; "
                     f"'{item.path_var}' carries no cost"
                 )
-            return F.expr(src).alias(item.alias or item.fn)
+            return src
         if item.path_var in self.path_len_segments:
             # length-only path: no array exists; path_length is the sum of
             # per-segment hop counts (1 per fixed segment, dist per
@@ -1230,8 +1221,7 @@ class MatchCompiler:
                 raise PGQBinderError(
                     f"Path variable '{item.path_var}' was compiled length-only"
                 )
-            col = F.expr("cast(" + " + ".join(lens) + " as bigint)")
-            return col.alias(item.alias or item.fn)
+            return "cast(" + " + ".join(lens) + " as bigint)"
         segs = self.path_segments.get(item.path_var)
         if not segs:
             raise PGQBinderError(f"Path variable '{item.path_var}' is not defined")
@@ -1240,25 +1230,22 @@ class MatchCompiler:
         # CreatePathFindingFunction, match.cpp:497-707)
         p = segs[0] if len(segs) == 1 else "concat(" + ", ".join(segs) + ")"
         if item.fn == "element_id":
-            col = F.expr(p)
-        elif item.fn == "path_length":
+            return p
+        if item.fn == "path_length":
             # interleaved [v,e,v,...,v]: length = size // 2 (match.cpp:745-760);
             # BIGINT like the reference's result type (iterativelength.cpp:149-151)
-            col = F.expr(f"cast(size({p}) div 2 as bigint)")
-        elif item.fn == "vertices":
-            col = F.expr(
-                f"transform(sequence(0, size({p}) - 1, 2), i -> element_at({p}, i + 1))"
-            )
-        elif item.fn == "edges":
-            col = F.expr(
+            return f"cast(size({p}) div 2 as bigint)"
+        if item.fn == "vertices":
+            return f"transform(sequence(0, size({p}) - 1, 2), i -> element_at({p}, i + 1))"
+        if item.fn == "edges":
+            return (
                 f"IF(size({p}) < 3, cast(array() as array<bigint>), "
                 f"transform(sequence(1, size({p}) - 2, 2), i -> element_at({p}, i + 1)))"
             )
-        else:  # pragma: no cover
-            raise PGQBinderError(f"Unknown path function '{item.fn}'")
-        return col.alias(item.alias or item.fn)
+        raise PGQBinderError(f"Unknown path function '{item.fn}'")  # pragma: no cover
 
-    def _project(self, plan: DataFrame) -> DataFrame:
+    def _project(self) -> list[str]:
+        """The select list; aggregate-only COLUMNS need no GROUP BY."""
         select_cols = []
         agg_flags = []
         # duplicate defaulted names get _1/_2 suffixes like the reference's
@@ -1288,8 +1275,8 @@ class MatchCompiler:
                     agg_flags.append(False)
             elif item.kind == "binding":
                 if item.binding in self.bound and self.bound[item.binding]["kind"] != "path":
-                    cols = self._prop_cols(item.binding)
-                    select_cols.append(F.struct(*cols).alias(item.alias or item.binding))
+                    cols = ", ".join(self._prop_cols(item.binding))
+                    select_cols.append(f"struct({cols}) AS {_q(item.alias or item.binding)}")
                     agg_flags.append(False)
                 elif item.binding in self.path_vars:
                     # parity with the reference, which rejects a bare path
@@ -1306,15 +1293,13 @@ class MatchCompiler:
                     for b, info in self.bound.items():
                         if info["kind"] == "path" or b.startswith("__"):
                             continue
-                        for src_col, exposed in self.pg.property_columns(info["pgt"]):
+                        for src_col, exposed in self._props(info["pgt"]):
                             if exposed.lower() == item.binding:
                                 matches.append((b, src_col, exposed))
                     if len(matches) == 1:
                         b, src_col, exposed = matches[0]
                         select_cols.append(
-                            F.col(f"{_q(b)}.{_q(src_col)}").alias(
-                                item.alias or uniq(exposed)
-                            )
+                            f"{_q(b)}.{_q(src_col)} AS {_q(item.alias or uniq(exposed))}"
                         )
                         agg_flags.append(False)
                     elif len(matches) > 1:
@@ -1325,7 +1310,7 @@ class MatchCompiler:
                     else:
                         raise PGQBinderError(f"Unknown binding '{item.binding}'")
             elif item.kind == "path_fn":
-                select_cols.append(self._path_fn_col(item))
+                select_cols.append(f"{self._path_fn_sql(item)} AS {_q(item.alias or item.fn)}")
                 agg_flags.append(False)
             else:
                 self._validate_expr_refs(item.text)
@@ -1334,17 +1319,18 @@ class MatchCompiler:
                 else:
                     mref = _SIMPLE_REF_RE.match(item.text)
                     alias = uniq(mref.group(2) or mref.group(3)) if mref else item.text
-                select_cols.append(_expr(item.text).alias(alias))
+                select_cols.append(f"{_sql(item.text)} AS {_q(alias)}")
                 agg_flags.append(bool(_AGG_RE.match(item.text)))
-        if agg_flags and all(agg_flags):
-            return plan.agg(*select_cols)
-        if any(agg_flags):
+        if any(agg_flags) and not all(agg_flags):
             raise PGQBinderError(
                 "COLUMNS mixing aggregates and plain columns requires GROUP BY in "
                 "the outer query; aggregate-only COLUMNS are supported"
             )
-        return plan.select(*select_cols)
+        return select_cols
 
 
-def compile_match(pg: PropertyGraph, expr: MatchExpression) -> DataFrame:
-    return MatchCompiler(pg, expr).compile()
+def compile_match(pg: PropertyGraph, expr: MatchExpression) -> CompiledMatch:
+    compiled = MatchCompiler(pg, expr).compile()
+    if _log.isEnabledFor(logging.DEBUG):
+        _log.debug("GRAPH_TABLE on graph %s compiled to: %s", pg.name, compiled.sql)
+    return compiled

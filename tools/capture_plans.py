@@ -11,7 +11,9 @@ from __future__ import annotations
 import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+from _root import ROOT, use_checkout
+
+use_checkout()
 
 from duckpgq_extension_spark import entry_queries as EQ  # noqa: E402
 from duckpgq_extension_spark.session import get_spark  # noqa: E402
@@ -22,7 +24,7 @@ def main():
     suffix = sys.argv[2]
     sf_dir = sys.argv[3] if len(sys.argv) > 3 else "/root/testdata/sf0.1"
     names = sys.argv[4:] or list(EQ.QUERIES)
-    out_dir = os.path.join("/root/repo/plans", tag)
+    out_dir = os.path.join(ROOT, "plans", tag)
     os.makedirs(out_dir, exist_ok=True)
     spark = get_spark(app_name=f"capture_plans_{tag}")
     EQ.setup(spark, sf_dir, force=True)

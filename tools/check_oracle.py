@@ -12,7 +12,9 @@ import sys
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+from _root import use_checkout  # noqa: E402
+
+use_checkout()
 
 import __spark_entry__ as entry_mod  # noqa: E402
 from duckpgq_extension_spark import get_spark  # noqa: E402

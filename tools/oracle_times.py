@@ -20,7 +20,9 @@ import time
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+from _root import use_checkout  # noqa: E402
+
+use_checkout()
 
 import __spark_entry__ as entry_mod  # noqa: E402
 from duckpgq_extension_spark.sources.tables import TABLES  # noqa: E402

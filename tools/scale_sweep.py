@@ -10,17 +10,20 @@ The source of PERF.md's two-decade scaling table:
 from __future__ import annotations
 
 import gc
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+from _root import ROOT, use_checkout
+
+use_checkout()
 
 from duckpgq_extension_spark import get_spark  # noqa: E402
 import duckpgq_extension_spark.entry_queries as EQ  # noqa: E402
 
 
 def main() -> None:
-    sf = sys.argv[1] if len(sys.argv) > 1 else "/root/repo/data/scale/sf1"
+    sf = sys.argv[1] if len(sys.argv) > 1 else os.path.join(ROOT, "data", "scale", "sf1")
     from bench import SF1_QUERIES
 
     names = sys.argv[2:] or SF1_QUERIES
