@@ -26,7 +26,7 @@ from __future__ import annotations
 import math
 import warnings
 
-from pyspark.sql import DataFrame, Observation, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from .errors import PGQCapacityError
@@ -150,16 +150,14 @@ def pagerank(
     # plus its plan-construction cost.  Skipping it when the probe says
     # "none" is value-identical: in_mass + 0.0 * reset == in_mass for
     # the non-negative masses this kernel produces.
-    obs0 = Observation(f"__pgq_pr_{next(pathops._obs_seq)}")
-    ranks = pathops.materialize(
+    ranks, probe = pathops.checkpoint_observed(
         with_reset.alias("v")
         .join(out_deg.alias("d"), F.col("v.vid") == F.col("d.src"), "left")
-        .select("vid", F.col("reset").alias("rank"), "out_deg", "reset")
-        .observe(obs0, F.expr(
-            "sum(CASE WHEN out_deg IS NULL THEN 1 ELSE 0 END) AS n_dang"
-        ))
+        .select("vid", F.col("reset").alias("rank"), "out_deg", "reset"),
+        "pr",
+        F.expr("sum(CASE WHEN out_deg IS NULL THEN 1 ELSE 0 END) AS n_dang"),
     )
-    has_dangling = (obs0.get["n_dang"] or 0) > 0
+    has_dangling = (probe["n_dang"] or 0) > 0
     # loop-body expressions rendered ONCE as SQL strings: the Column-API
     # form cost ~190 ms of py4j round-trips per round (measured sf0.1,
     # warm — ~35% of the kernel wall at bench scale), and under
@@ -176,7 +174,10 @@ def pagerank(
             f"({r_str} * reset + {d_str} * coalesce(in_mass, "
             f"CAST(0.0 AS DOUBLE))) AS rank"
         )
-    for _ in range(max_iter):
+    new_cols = ("vid", rank_expr, "out_deg", "reset",
+                *(["rank AS __old"] if tol > 0 else []))
+
+    def step(ranks, last, ckpt):
         contribs = (
             ranks.where("out_deg IS NOT NULL")
             .selectExpr("vid AS src", "rank / out_deg AS share")
@@ -187,8 +188,8 @@ def pagerank(
         )
         # join the OLD ranks (one row per vid, phantoms included) rather
         # than the vertex list, so the convergence delta is computable
-        # on this same frame — an Observation collects it during the
-        # checkpoint job, making each iteration exactly ONE job
+        # on this same frame — the round's observed checkpoint collects
+        # it, making each iteration exactly ONE job
         new_full = ranks.join(contribs, "vid", "left")
         if has_dangling:
             # mass from dangling vertices (no out-edges) is spread
@@ -199,22 +200,14 @@ def pagerank(
                     "coalesce(sum(rank), CAST(0.0 AS DOUBLE)) AS __dang"
                 ))
             ))
-        if tol > 0:
-            new_full = new_full.selectExpr(
-                "vid", rank_expr, "out_deg", "reset", "rank AS __old"
-            )
-            obs = Observation(f"__pgq_pr_{next(pathops._obs_seq)}")
-            new_full = new_full.observe(
-                obs, F.expr("max(abs(rank - __old)) AS delta")
-            )
-            ranks = pathops.materialize(new_full.select("vid", "rank", "out_deg", "reset"))
-            delta = obs.get["delta"]
-            if delta is not None and delta < tol:
-                break
-        else:
-            ranks = pathops.materialize(
-                new_full.selectExpr("vid", rank_expr, "out_deg", "reset")
-            )
+        return new_full.selectExpr(*new_cols)
+
+    ranks = pathops.fixpoint(
+        ranks, step, label="pr", rounds=max_iter,
+        observe=(F.expr("max(abs(rank - __old)) AS delta"),) if tol > 0 else (),
+        keep=("vid", "rank", "out_deg", "reset"),
+        done=lambda row, _: row["delta"] is not None and row["delta"] < tol,
+    )
     if phantom_vertices:
         ranks = ranks.join(real_vertices.toDF("vid"), "vid", "left_semi")
     return ranks.select("vid", F.col("rank").alias("pagerank"))
@@ -255,6 +248,17 @@ def _l1_rescale(df: DataFrame, *cols: str) -> DataFrame:
             for c in cols
         ],
     )
+
+
+def _changed():
+    """Observe aggregates for a changed-rows stop test: the sum of the
+    0/1 change flag `__ch`."""
+    return (F.sum("__ch").alias("changed"),)
+
+
+def _unchanged(row, prev) -> bool:
+    """fixpoint stop test: no row changed this round."""
+    return not row["changed"]
 
 
 def weakly_connected_component(
@@ -329,7 +333,7 @@ def weakly_connected_component(
     else:
         # high-diameter residue: compounding propagate+jump to fixpoint
         # on the contracted skeleton, then compose vid -> comp -> final
-        sub = _min_label_fixpoint(cur)
+        sub = _skeleton_labels(cur)
         labels = pathops.materialize(
             labels.alias("l")
             .join(sub.alias("s"), F.col("l.comp") == F.col("s.vid"), "left")
@@ -342,9 +346,8 @@ def weakly_connected_component(
             )
         )
     # collapse stale label chains: comp := labels[comp] until stable
-    while True:
-        obs = Observation(f"__pgq_wccj_{next(pathops._obs_seq)}")
-        jumped = (
+    def jump(labels, last, ckpt):
+        return (
             labels.alias("p")
             .join(labels.alias("q"), F.col("p.comp") == F.col("q.vid"), "left")
             .select(
@@ -358,11 +361,12 @@ def weakly_connected_component(
                     != F.coalesce(F.col("q.comp"), F.col("p.comp"))
                 ).cast("int").alias("__ch"),
             )
-            .observe(obs, F.sum("__ch").alias("changed"))
         )
-        labels = pathops.materialize(jumped.select("vid", "comp"))
-        if not obs.get["changed"]:
-            break
+
+    labels = pathops.fixpoint(
+        labels, jump, label="wccj", observe=_changed(), keep=("vid", "comp"),
+        done=_unchanged,
+    )
     # re-name components by their minimum IN-DOMAIN member; restrict to
     # the caller's vertex domain (contract: one row per input vertex,
     # like pagerank/lcc); isolated vertices are their own component
@@ -375,7 +379,7 @@ def weakly_connected_component(
     return connected.unionByName(isolated)
 
 
-def _min_label_fixpoint(graph: DataFrame) -> DataFrame:
+def _skeleton_labels(graph: DataFrame) -> DataFrame:
     """(vid, comp) min-label fixpoint over a doubled edge frame — plain
     propagation with a pointer jump fused into every round (the r3-r5
     WCC loop).  All nodes keep updating through real edges, so the jump
@@ -386,7 +390,8 @@ def _min_label_fixpoint(graph: DataFrame) -> DataFrame:
         .distinct()
         .select("vid", F.col("vid").alias("comp"))
     )
-    while True:
+
+    def step(labels, last, ckpt):
         prop = (
             labels.alias("l")
             .join(graph.alias("u"), F.col("l.vid") == F.col("u.src"))
@@ -395,8 +400,7 @@ def _min_label_fixpoint(graph: DataFrame) -> DataFrame:
             .groupBy("vid")
             .agg(F.min("comp").alias("comp"))
         )
-        obs = Observation(f"__pgq_wccf_{next(pathops._obs_seq)}")
-        jumped = (
+        return (
             prop.alias("p")
             .join(prop.alias("q"), F.col("p.comp") == F.col("q.vid"), "left")
             .select(
@@ -418,11 +422,12 @@ def _min_label_fixpoint(graph: DataFrame) -> DataFrame:
                     | (F.col("j.comp") != F.col("o.comp"))
                 ).cast("int").alias("__ch"),
             )
-            .observe(obs, F.sum("__ch").alias("changed"))
         )
-        labels = pathops.materialize(jumped.select("vid", "comp"))
-        if not obs.get["changed"]:
-            return labels
+
+    return pathops.fixpoint(
+        labels, step, label="wccf", observe=_changed(), keep=("vid", "comp"),
+        done=_unchanged,
+    )
 
 
 def _doubled_neighbors(edges: DataFrame) -> DataFrame:
@@ -623,8 +628,9 @@ def k_core(edges: DataFrame, vertices: DataFrame, k: int) -> DataFrame:
     und = pathops.materialize(_doubled_neighbors(edges))
     alive = pathops.materialize(vertices.toDF("vid").distinct())
     n_alive = alive.count()
-    while True:
-        survivors = (
+
+    def peel(alive, last, ckpt):
+        return (
             und.join(alive.withColumnRenamed("vid", "src"), "src", "left_semi")
             .join(alive.withColumnRenamed("vid", "dst"), "dst", "left_semi")
             .groupBy("src")
@@ -632,16 +638,14 @@ def k_core(edges: DataFrame, vertices: DataFrame, k: int) -> DataFrame:
             .where(F.col("deg") >= k)
             .select(F.col("src").alias("vid"))
         )
-        obs = Observation(f"__pgq_kcore_{next(pathops._obs_seq)}")
-        alive = pathops.materialize(
-            survivors.observe(obs, F.count("*").alias("n"))
-        )
-        n_new = obs.get["n"] or 0
-        if n_new == n_alive:
-            return alive
-        if n_new == 0:
-            return alive
-        n_alive = n_new
+
+    def settled(row, prev):  # nothing peeled this round, or nothing left
+        return row["n"] in (0, n_alive if prev is None else prev["n"])
+
+    return pathops.fixpoint(
+        alive, peel, label="kcore", observe=(F.count("*").alias("n"),),
+        done=settled,
+    )
 
 
 def sampled_neighborhood(
@@ -716,10 +720,13 @@ def hits(
 
     Scale design: the induced edge frame is persisted twice — once
     hash-partitioned by src (authority half-step) and once by dst (hub
-    half-step), so neither per-iteration join reshuffles the edges; the
-    L1 norms ride as broadcast 1-row frames (no driver collect per
-    iteration), and the scores frame is checkpointed per round — two
-    jobs per iteration, mirroring pagerank.
+    half-step), so neither per-iteration join reshuffles the edges.  Both
+    modes run on `paths.fixpoint`.  tol=0 (the default) defers both
+    L1 norms to one final pass and checkpoints every other round (see
+    the note in the body).  tol > 0 normalizes every round with the norms
+    as broadcast 1-row frames (no driver collect per iteration) and
+    checkpoints twice per round: the authority half-step, then the hub
+    step whose checkpoint observes the convergence delta.
     """
     vertices = pathops.materialize(vertices.toDF("vid").distinct())
     parts = pathops.default_parallelism(edges.sparkSession)
@@ -760,12 +767,14 @@ def hits(
             # aggregates per round, zeros re-densified once at the end
             # against the vertex frame.
             hub = scores.select("vid", "hub")
-            auth = None
+            auth = None  # the latest round's authority half-step
+
             # loop body rendered as SQL strings (selectExpr /
             # string-key join): the Column-API form costs py4j
             # round-trips per round, GIL-serialized across
             # run_concurrent kernels (r10 cost class)
-            for i in range(max_iter):
+            def half_steps(hub, last, ckpt):
+                nonlocal auth
                 auth = (
                     hub.selectExpr("vid AS src", "hub")
                     .join(edges, "src")
@@ -778,14 +787,17 @@ def hits(
                     .groupBy(F.col("src").alias("vid"))
                     .agg(F.expr("sum(auth) AS hub"))
                 )
-                if i % 2 == 1 or i == max_iter - 1:
-                    if max_iter > _DEFERRED_NORM_SAFE_ROUNDS:
-                        hub = _l1_rescale(hub, "hub")
-                        if i == max_iter - 1:
-                            # only the FINAL auth is consumed; older
-                            # round auths are dead intermediates
-                            auth = pathops.materialize(_l1_rescale(auth, "auth"))
-                    hub = pathops.materialize(hub)
+                if ckpt and max_iter > _DEFERRED_NORM_SAFE_ROUNDS:
+                    hub = _l1_rescale(hub, "hub")
+                return hub
+
+            hub = pathops.fixpoint(
+                hub, half_steps, label="hits", rounds=max_iter, every=2
+            )
+            if auth is not None and max_iter > _DEFERRED_NORM_SAFE_ROUNDS:
+                # only the FINAL auth is consumed; older round auths are
+                # dead intermediates
+                auth = pathops.materialize(_l1_rescale(auth, "auth"))
             if auth is None:  # max_iter == 0: uniform hubs, zero auths
                 auth = hub.select("vid", F.lit(0.0).alias("auth")).where(F.lit(False))
             sums = F.broadcast(
@@ -817,7 +829,9 @@ def hits(
                     .alias("authority"),
                 )
             )
-        for _ in range(max_iter):
+
+        def hits_round(scores, last, ckpt):
+            scores = scores.drop("__delta")  # the last round's delta
             # authority step: mass flows along edge direction (hub of src)
             araw = (
                 scores.alias("s")
@@ -865,7 +879,7 @@ def hits(
                 )
                 .otherwise(F.lit(0.0))
             )
-            merged = (
+            return (
                 auth.alias("s")
                 .join(hraw.alias("h"), F.col("s.vid") == F.col("h.vid"), "left")
                 .crossJoin(hnorm)
@@ -888,18 +902,14 @@ def hits(
                     ),
                 )
             )
-            if tol > 0:
-                # convergence delta observed DURING the checkpoint job — two
-                # jobs per iteration stay two, matching the docstring's
-                # 'no driver collect per iteration' (pagerank's pattern)
-                obs = Observation(f"__pgq_hits_{next(pathops._obs_seq)}")
-                merged = merged.observe(obs, F.max("__delta").alias("d"))
-            scores = pathops.materialize(merged)
-            if tol > 0:
-                delta = obs.get["d"]
-                scores = scores.drop("__delta")
-                if delta is not None and delta < tol:
-                    break
+
+        # the hub step's checkpoint observes the convergence delta — two
+        # jobs per iteration, no extra driver collect (pagerank's pattern)
+        scores = pathops.fixpoint(
+            scores, hits_round, label="hits", rounds=max_iter,
+            observe=(F.max("__delta").alias("d"),) if tol > 0 else (),
+            done=lambda row, _: row["d"] is not None and row["d"] < tol,
+        )
         return scores.select("vid", "hub", F.col("auth").alias("authority"))
     finally:
         edges.unpersist()
@@ -952,6 +962,29 @@ def strongly_connected_component(edges: DataFrame, vertices: DataFrame) -> DataF
     remaining = vertices
     n_remaining = remaining.count()
     out = None
+    live = None  # this outer round's trimmed edge set
+
+    def propagate(colors, last, ckpt):  # one forward max-color round
+        return (
+            colors.alias("c")
+            .join(live.alias("e"), F.col("c.vid") == F.col("e.src"))
+            .select(
+                F.col("e.dst").alias("vid"),
+                F.col("c.color").alias("color"),
+                F.lit(0).alias("__own"),
+            )
+            .unionByName(colors.select("vid", "color", F.lit(1).alias("__own")))
+            .groupBy("vid")
+            .agg(
+                F.max("color").alias("color"),
+                F.max(F.when(F.col("__own") == 1, F.col("color"))).alias("__old"),
+            )
+        )
+
+    changed = (
+        F.sum(F.when(F.col("color") != F.col("__old"), 1).otherwise(0))
+        .alias("changed"),
+    )
     try:
         while n_remaining:
             # -- trim: peel vertices that can't be on a cycle, to fixpoint.
@@ -1004,36 +1037,10 @@ def strongly_connected_component(edges: DataFrame, vertices: DataFrame) -> DataF
             colors = pathops.materialize(
                 remaining.select("vid", F.col("vid").alias("color"))
             )
-            while True:
-                prop = (
-                    colors.alias("c")
-                    .join(live.alias("e"), F.col("c.vid") == F.col("e.src"))
-                    .select(
-                        F.col("e.dst").alias("vid"),
-                        F.col("c.color").alias("color"),
-                        F.lit(0).alias("__own"),
-                    )
-                    .unionByName(
-                        colors.select("vid", "color", F.lit(1).alias("__own"))
-                    )
-                    .groupBy("vid")
-                    .agg(
-                        F.max("color").alias("color"),
-                        F.max(F.when(F.col("__own") == 1, F.col("color"))).alias(
-                            "__old"
-                        ),
-                    )
-                )
-                obs = Observation(f"__pgq_scc_{next(pathops._obs_seq)}")
-                merged = prop.observe(
-                    obs,
-                    F.sum(
-                        F.when(F.col("color") != F.col("__old"), 1).otherwise(0)
-                    ).alias("changed"),
-                )
-                colors = pathops.materialize(merged.select("vid", "color"))
-                if not obs.get["changed"]:
-                    break
+            colors = pathops.fixpoint(
+                colors, propagate, label="scc", observe=changed,
+                keep=("vid", "color"), done=_unchanged,
+            )
             # -- step 2: batched backward reach from every root, same color
             # member rows are (color, vid): vid reaches its color root
             members = pathops.materialize(
@@ -1349,35 +1356,21 @@ def closeness_centrality(edges: DataFrame, seeds: DataFrame) -> DataFrame:
 
     Cost = one multi-source BFS (|seeds| searches batched per level) +
     one groupBy — seeds scale the frontier width, not the level count.
+    A column projection of distance_report (Catalyst prunes the other
+    folds).
     """
-    dists = pathops.bfs_distances(edges.select("src", "dst"), sources=seeds.toDF("vid"))
-    return (
-        dists.groupBy(F.col("src").alias("vid"))
-        .agg(
-            F.count("*").alias("reached"),
-            F.sum("dist").alias("__sum"),
-        )
-        .select(
-            "vid",
-            "reached",
-            F.when(F.col("__sum") > 0,
-                   (F.col("reached") - 1).cast("double") / F.col("__sum"))
-            .otherwise(F.lit(0.0))
-            .alias("closeness"),
-        )
-    )
+    return distance_report(edges, seeds).select("vid", "reached", "closeness")
 
 
 def distance_report(edges: DataFrame, seeds: DataFrame) -> DataFrame:
     """Composed per-seed distance profile: closeness, harmonic
     centrality and eccentricity from ONE batched multi-source BFS
     (beyond-reference).  The three standalone kernels
-    (closeness_centrality / harmonic_centrality / eccentricity) each
-    pay the same BFS — when a caller wants more than one, sharing the
-    distance frame removes the duplicate traversals entirely (BFS is
-    the whole cost; the folds are single aggregates).  Values are
-    identical to the standalone kernels by construction: same
-    bfs_distances call, same fold expressions, fused into one groupBy.
+    (closeness_centrality / harmonic_centrality / eccentricity) are
+    column projections of this one, so each pays the same BFS — when a
+    caller wants more than one, calling this once removes the duplicate
+    traversals entirely (BFS is the whole cost; the folds are single
+    aggregates).
 
     Returns (vid, reached, closeness, harmonic, eccentricity).
     """
@@ -1427,8 +1420,9 @@ def label_propagation(
 
     Scale design: per round, one join of the label frame against the
     doubled adjacency (partitioned by src once), one (vid, label) count
-    aggregate — map-side combine collapses repeats — and one window
-    rank on the counts.  Labels are checkpointed every OTHER round, not
+    aggregate — map-side combine collapses repeats — and one min_by
+    aggregate picking each vertex's mode.  On `paths.fixpoint`, labels
+    are checkpointed every OTHER round, not
     every round: each materialize is a full job barrier, and at small
     scale the barrier floor dominates the actual shuffle work (measured
     sf0.1: per-round checkpointing 4.5 s vs 3.4 s fused-by-2; results
@@ -1445,7 +1439,7 @@ def label_propagation(
     # loop body rendered as SQL strings (selectExpr / string-key join):
     # the Column-API form costs py4j round-trips per round (r10 cost
     # class); the plan shape is unchanged
-    for _round in range(max_iter):
+    def vote(labels, last, ckpt):
         cnt = (
             labels.selectExpr("vid AS src", "label")
             .join(und, "src")
@@ -1461,14 +1455,12 @@ def label_propagation(
         pick = cnt.groupBy("vid").agg(
             F.expr("min_by(label, struct(-c AS nc, label AS label)) AS __new")
         )
-        nxt = labels.join(pick, "vid", "left").selectExpr(
+        return labels.join(pick, "vid", "left").selectExpr(
             "vid", "coalesce(__new, label) AS label"
         )
-        # checkpoint on odd rounds and at the end; even rounds stay lazy
-        if _round % 2 == 1 or _round == max_iter - 1:
-            nxt = pathops.materialize(nxt)
-        labels = nxt
-    return labels
+
+    # checkpoint on odd rounds and at the end; even rounds stay lazy
+    return pathops.fixpoint(labels, vote, label="lpa", rounds=max_iter, every=2)
 
 
 def degree_assortativity(edges: DataFrame) -> DataFrame:
@@ -1534,20 +1526,20 @@ def katz_centrality(
         f"(CAST('{beta!r}' AS DOUBLE) + CAST('{alpha!r}' AS DOUBLE) "
         f"* coalesce(w, CAST(0.0 AS DOUBLE))) AS katz"
     )
-    for i in range(max_iter):
+
+    def step(x, last, ckpt):
         contrib = (
             x.selectExpr("vid AS src", "katz")
             .join(edges, "src")
             .groupBy(F.col("dst").alias("vid"))
             .agg(F.expr("sum(katz) AS w"))
         )
-        x = x.join(contrib, "vid", "left").selectExpr("vid", katz_expr)
-        # every-other-round checkpoint (LPA's cadence): the round is pure
-        # shuffle joins — no broadcast branch to trip the r8 fused-lineage
-        # regression; values unchanged, one barrier per two rounds
-        if i % 2 == 1 or i == max_iter - 1:
-            x = pathops.materialize(x)
-    return x
+        return x.join(contrib, "vid", "left").selectExpr("vid", katz_expr)
+
+    # every-other-round checkpoint (LPA's cadence): the round is pure
+    # shuffle joins — no broadcast branch to trip the r8 fused-lineage
+    # regression; values unchanged, one barrier per two rounds
+    return pathops.fixpoint(x, step, label="katz", rounds=max_iter, every=2)
 
 
 def percolation_reachability(
@@ -1735,25 +1727,21 @@ def modularity_refine(
     deg = und.groupBy(F.col("src").alias("vid")).agg(
         F.count("*").alias("deg")
     )
-    for _pass in range(passes):
-        nxt = _refine_pass(und, lab, deg, two_m)
-        if passes == 1:
-            return nxt.select("vid", "label")
-        obs = Observation(f"__pgq_refine_{next(pathops._obs_seq)}")
-        nxt = nxt.observe(
-            obs,
-            F.sum((F.col("label") != F.col("__prev")).cast("int")).alias("n"),
-        )
-        lab = pathops.materialize(nxt.select("vid", "label"))
-        if not obs.get["n"]:
-            break
-    return lab
+    if passes == 1:
+        return _refine_pass(und, lab, deg, two_m).select("vid", "label")
+    return pathops.fixpoint(
+        lab, lambda lab, last, ckpt: _refine_pass(und, lab, deg, two_m),
+        label="refine", rounds=passes, keep=("vid", "label"), done=_unchanged,
+        observe=(
+            F.sum((F.col("label") != F.col("__prev")).cast("int")).alias("changed"),
+        ),
+    )
 
 
 def _refine_pass(und, lab, deg, two_m):
     """One local-move pass (see modularity_refine).  Returns
     (vid, label, __prev) where __prev is the round-start label (for the
-    caller's changed-count Observation)."""
+    caller's observed changed count)."""
     base = (
         lab.join(deg, "vid", "left")
         .select("vid", "label", F.coalesce("deg", F.lit(0)).alias("deg"))
@@ -1959,28 +1947,31 @@ def eigenvector_centrality(
     )
     edges_p = pathops.persist_partitioned(induced)  # cache-owned
     n = vertices.count()
+    if n == 0:
+        return vertices.withColumn("eigenvector", F.lit(0.0))
     x = pathops.materialize(
         vertices.select("vid", F.lit(1.0 / float(n)).alias("ev"))
     )
-    for i in range(max_iter):
-        # loop body rendered as SQL strings (selectExpr / string-key
-        # join): the Column-API form costs py4j round-trips per round,
-        # GIL-serialized across run_concurrent kernels (r10 cost class)
+    # loop body rendered as SQL strings (selectExpr / string-key join):
+    # the Column-API form costs py4j round-trips per round,
+    # GIL-serialized across run_concurrent kernels (r10 cost class)
+    def step(x, last, ckpt):
         x = (
             x.selectExpr("vid AS src", "ev")
             .join(edges_p, "src")
             .groupBy(F.col("dst").alias("vid"))
             .agg(F.expr("sum(ev) AS ev"))
         )
-        # checkpoint every OTHER round (LPA's cadence): with the norm
-        # branch gone the round is pure shuffle joins, so the fused
-        # round's exchange is reused across its two references and the
-        # r8 fused-lineage/broadcast regression no longer applies —
-        # re-measured this round: 4.6 -> 3.0 s warm at sf0.1
-        if i % 2 == 1 or i == max_iter - 1:
-            if max_iter > _DEFERRED_NORM_SAFE_ROUNDS:
-                x = _l1_rescale(x, "ev")
-            x = pathops.materialize(x)
+        if ckpt and max_iter > _DEFERRED_NORM_SAFE_ROUNDS:
+            x = _l1_rescale(x, "ev")
+        return x
+
+    # checkpoint every OTHER round (LPA's cadence): with the norm branch
+    # gone the round is pure shuffle joins, so the fused round's exchange
+    # is reused across its two references and the r8 fused-lineage/
+    # broadcast regression no longer applies — re-measured this round:
+    # 4.6 -> 3.0 s warm at sf0.1
+    x = pathops.fixpoint(x, step, label="ev", rounds=max_iter, every=2)
     norm = F.broadcast(x.agg(F.coalesce(F.sum("ev"), F.lit(0.0)).alias("__n")))
     return (
         vertices.alias("v")
@@ -2153,14 +2144,10 @@ def eccentricity(edges: DataFrame, seeds: DataFrame) -> DataFrame:
     distance to any reachable vertex (beyond-reference) — seeds sampled
     across the graph give the standard diameter/radius estimate
     (diameter >= max eccentricity over the sample, radius <= min).
-    Returns (vid, eccentricity, reached); one batched multi-source BFS
-    + one aggregate, like closeness_centrality.
+    Returns (vid, eccentricity, reached): a column projection of
+    distance_report, like closeness_centrality.
     """
-    dists = pathops.bfs_distances(edges.select("src", "dst"), sources=seeds.toDF("vid"))
-    return dists.groupBy(F.col("src").alias("vid")).agg(
-        F.max("dist").cast("long").alias("eccentricity"),
-        F.count("*").alias("reached"),
-    )
+    return distance_report(edges, seeds).select("vid", "eccentricity", "reached")
 
 
 def shortest_path_counts(
@@ -2414,16 +2401,10 @@ def harmonic_centrality(edges: DataFrame, seeds: DataFrame) -> DataFrame:
     """Harmonic centrality of each seed: sum of 1/d(s, v) over reachable
     v != s (beyond-reference) — the disconnected-robust cousin of
     closeness (unreachable vertices contribute 0 instead of poisoning a
-    mean).  Returns (vid, harmonic, reached); one batched multi-source
-    BFS + one aggregate, like closeness_centrality.
+    mean).  Returns (vid, harmonic, reached): a column projection of
+    distance_report, like closeness_centrality.
     """
-    dists = pathops.bfs_distances(edges.select("src", "dst"), sources=seeds.toDF("vid"))
-    return dists.groupBy(F.col("src").alias("vid")).agg(
-        F.coalesce(
-            F.sum(F.when(F.col("dist") > 0, 1.0 / F.col("dist"))), F.lit(0.0)
-        ).alias("harmonic"),
-        F.count("*").alias("reached"),
-    )
+    return distance_report(edges, seeds).select("vid", "harmonic", "reached")
 
 
 def k_truss(edges: DataFrame, k: int) -> DataFrame:

@@ -44,7 +44,9 @@ Scale notes (100 TB / 1000 executors):
 from __future__ import annotations
 
 import itertools
+import logging
 import os
+import time
 import weakref
 from urllib.parse import unquote, urlparse
 
@@ -57,6 +59,7 @@ from ..errors import PGQCapacityError, PGQNotImplementedError
 _INTEGRAL_TYPES = {"tinyint", "smallint", "int", "bigint"}
 
 _obs_seq = itertools.count()
+_log = logging.getLogger("duckpgq_extension_spark")
 
 RELIABLE_CHECKPOINT_CONF = "spark.duckpgq.reliableCheckpoint"
 
@@ -128,18 +131,72 @@ def default_parallelism(spark) -> int:
             return 200
 
 
-def checkpoint_with_count(df: DataFrame) -> tuple[DataFrame, int]:
-    """Lineage-truncating checkpoint + row count in ONE Spark job.
+def checkpoint_observed(
+    df: DataFrame, label: str, *aggs, keep=None
+) -> tuple[DataFrame, dict]:
+    """Lineage-truncating checkpoint + the aggregates `aggs` in ONE Spark
+    job: an Observation (named `__pgq_<label>_<n>`) collects them while
+    the checkpoint job materializes the frame, so an iterative loop gets
+    its emptiness/convergence signal for free instead of launching a
+    second `isEmpty`/`count` job per level — per-level driver round-trips
+    halve, which dominates small-frontier rounds (the reference's kernels
+    are single-process and have no analog of this cost).  `keep`
+    projects the frame after the observation, for aggregates over
+    columns the next round does not need.
 
-    An Observation collects count(1) while the checkpoint job materializes
-    the frame, so iterative loops get their emptiness/convergence signal
-    for free instead of launching a second `isEmpty`/`count` job per level
-    — per-level driver round-trips halve, which dominates small-frontier
-    BFS levels (the reference's kernels are single-process and have no
-    analog of this cost)."""
-    obs = Observation(f"__pgq_ckpt_{next(_obs_seq)}")
-    out = materialize(df.observe(obs, F.count(F.lit(1)).alias("n")))
-    return out, obs.get["n"]
+    Returns (frame, metrics by alias).  With the package logger at DEBUG,
+    each call logs one record carrying the label, the checkpoint's wall
+    seconds and the metrics (as `label`/`seconds`/`metrics` attributes);
+    otherwise the log costs one isEnabledFor check."""
+    obs = Observation(f"__pgq_{label}_{next(_obs_seq)}")
+    out = df.observe(obs, *aggs)
+    if keep is not None:
+        out = out.select(*keep)
+    debug = _log.isEnabledFor(logging.DEBUG)
+    t0 = time.perf_counter() if debug else 0.0
+    out = materialize(out)
+    row = obs.get
+    if debug:
+        secs = time.perf_counter() - t0
+        _log.debug("checkpoint %s: %.3f s, %s", label, secs, row,
+                   extra={"label": label, "seconds": secs, "metrics": row})
+    return out, row
+
+
+def checkpoint_with_count(df: DataFrame) -> tuple[DataFrame, int]:
+    """Lineage-truncating checkpoint + row count in ONE Spark job."""
+    out, row = checkpoint_observed(df, "ckpt", F.count(F.lit(1)).alias("n"))
+    return out, row["n"]
+
+
+def fixpoint(state: DataFrame, step, *, label: str, rounds: int | None = None,
+             every: int = 1, observe=(), done=None, keep=None) -> DataFrame:
+    """The round loop of every single-state iterative kernel — Pregel-style
+    DataFrame iteration: `state = step(state, last, ckpt)` for at most
+    `rounds` rounds (unbounded when None).
+
+    A round checkpoints when it is an `every`-th round or the last one;
+    the rounds between stay lazy and fuse into the next checkpoint's job
+    (one barrier per `every` rounds).  With `observe` aggregates a
+    checkpoint goes through checkpoint_observed (`label`, `keep`) and the
+    loop stops as soon as `done(metrics, previous metrics)` holds
+    (previous is None at the first checkpoint).  `step` receives `last`,
+    the previous checkpoint's metrics (None before the first), and
+    `ckpt`, whether this round checkpoints.  Returns the final state."""
+    last = None
+    for i in itertools.count() if rounds is None else range(rounds):
+        ckpt = (i + 1) % every == 0 or i + 1 == rounds
+        state = step(state, last, ckpt)
+        if not ckpt:
+            continue
+        if not observe:
+            state = materialize(state)
+            continue
+        prev = last
+        state, last = checkpoint_observed(state, label, *observe, keep=keep)
+        if done is not None and done(last, prev):
+            break
+    return state
 
 
 def require_integral_keys(df: DataFrame | StructType, cols: list[str], context: str) -> None:
@@ -686,7 +743,7 @@ def bidirectional_length(
         # visited/frontier schema: (origin, v, dist); forward origins are
         # pair srcs, backward origins are pair dsts.  All three seed frames
         # (forward, backward, the src==dst zero-distance meets) materialize
-        # in ONE tagged job with three Observations — point queries are
+        # in ONE tagged job with three observed counts — point queries are
         # fixed-cost-dominated, so pre-loop jobs matter as much as
         # per-level jobs.
         def tag(df, t):
@@ -715,16 +772,11 @@ def bidirectional_length(
                 )
             )
         )
-        obs = Observation(f"__pgq_bidir_{next(_obs_seq)}")
-        seeds = materialize(
-            seeds.observe(
-                obs,
-                F.sum((F.col("__t") == 0).cast("long")).alias("nf"),
-                F.sum((F.col("__t") == 1).cast("long")).alias("nb"),
-                F.sum((F.col("__t") == 2).cast("long")).alias("nr"),
-            )
+        seeds, vals = checkpoint_observed(
+            seeds, "bidir",
+            *(F.sum((F.col("__t") == t).cast("long")).alias(a)
+              for t, a in enumerate(("nf", "nb", "nr"))),
         )
-        vals = obs.get
         n_f, n_b = int(vals["nf"] or 0), int(vals["nb"] or 0)
         n_resolved = int(vals["nr"] or 0)
 
@@ -746,12 +798,11 @@ def bidirectional_length(
                 .groupBy("src", "dst")
                 .agg(F.min("dist").alias("dist"))
             )
-            obs = Observation(f"__pgq_bidir_{next(_obs_seq)}")
-            merged = merged.observe(
-                obs,
+            merged, row = checkpoint_observed(
+                merged, "bidir",
                 F.sum((F.col("dist") <= F.lit(depth_sum)).cast("long")).alias("n"),
             )
-            return materialize(merged), int(obs.get["n"] or 0)
+            return merged, int(row["n"] or 0)
         f = b = 0
         exhausted = False
         while n_resolved < n_pairs:
@@ -870,23 +921,22 @@ def _min_label_fixpoint(
     Candidates must then never carry a NULL label (struct ordering puts
     NULLs first), so relax filters them.
 
-    The improved count and the bound ride the round's checkpoint job via
-    one Observation, so a round is one Spark job.  Stops when nothing
-    improved or after `max_iters` rounds.
+    The improved count and the bound ride the round's checkpoint job
+    (fixpoint's observed checkpoint), so a round is one Spark job.  Stops
+    when nothing improved or after `max_iters` rounds.
     """
     keep = ["src", "dst", label, *payload]
-    rounds = 0
-    bound = None
-    while max_iters is None or rounds < max_iters:
-        rounds += 1
+
+    def step(dist, last, ckpt):
         frontier = dist.where(F.col("__improved")).select(*keep)
+        bound = None if last is None else last["lo"]
         cand = relax(
             frontier.alias("f").join(
                 adjacency(bound).alias("e"), F.col("f.dst") == F.col("e.src")
             )
         )
         if payload:
-            merged = (
+            return (
                 dist.select(*keep)
                 .withColumn("__cand", F.lit(0))
                 .unionByName(cand.withColumn("__cand", F.lit(1)))
@@ -898,34 +948,31 @@ def _min_label_fixpoint(
                     (F.col("m.__cand") == 1).alias("__improved"),
                 )
             )
-        else:
-            merged = (
-                dist.select(*keep, F.col(label).alias("__oc"))
-                .unionByName(
-                    cand.withColumn(
-                        "__oc", F.lit(None).cast(dist.schema[label].dataType)
-                    )
-                )
-                .groupBy("src", "dst")
-                .agg(F.min(label).alias(label), F.min("__oc").alias("__oc"))
-                .select(
-                    *keep,
-                    (
-                        F.col("__oc").isNull() | (F.col(label) < F.col("__oc"))
-                    ).alias("__improved"),
+        return (
+            dist.select(*keep, F.col(label).alias("__oc"))
+            .unionByName(
+                cand.withColumn(
+                    "__oc", F.lit(None).cast(dist.schema[label].dataType)
                 )
             )
-        obs = Observation(f"__pgq_fix_{next(_obs_seq)}")
-        merged = merged.observe(
-            obs,
-            F.sum(F.col("__improved").cast("int")).alias("n"),
-            F.min(F.when(F.col("__improved"), F.col(label))).alias("lo"),
+            .groupBy("src", "dst")
+            .agg(F.min(label).alias(label), F.min("__oc").alias("__oc"))
+            .select(
+                *keep,
+                (
+                    F.col("__oc").isNull() | (F.col(label) < F.col("__oc"))
+                ).alias("__improved"),
+            )
         )
-        dist = materialize(merged)
-        if not obs.get["n"]:
-            break
-        bound = obs.get["lo"]
-    return dist.select(*keep)
+
+    observe = (
+        F.sum(F.col("__improved").cast("int")).alias("n"),
+        F.min(F.when(F.col("__improved"), F.col(label))).alias("lo"),
+    )
+    return fixpoint(
+        dist, step, label="fix", rounds=max_iters, observe=observe,
+        done=lambda row, _: not row["n"],
+    ).select(*keep)
 
 
 def cheapest_path_distances(

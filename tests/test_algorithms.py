@@ -104,6 +104,29 @@ def test_wcc_long_chain_pointer_jumping(spark):
     assert {c for _, c in got} == {0}
 
 
+_EMPTY_GRAPH_KERNELS = {
+    "pagerank": lambda A, e, v: A.pagerank(e, v),
+    "wcc": lambda A, e, v: A.weakly_connected_component(e, v),
+    "k_core": lambda A, e, v: A.k_core(e, v, 2),
+    "hits_fixed": lambda A, e, v: A.hits(e, v, tol=0),
+    "hits_tol": lambda A, e, v: A.hits(e, v, tol=1e-6),
+    "katz": lambda A, e, v: A.katz_centrality(e, v),
+    "eigenvector": lambda A, e, v: A.eigenvector_centrality(e, v),
+    "label_propagation": lambda A, e, v: A.label_propagation(e, v),
+    "scc": lambda A, e, v: A.strongly_connected_component(e, v),
+}
+
+
+@pytest.mark.parametrize("name", list(_EMPTY_GRAPH_KERNELS))
+def test_kernel_on_empty_graph(spark, name):
+    """No vertices and no edges: every iterative kernel returns no rows."""
+    from duckpgq_extension_spark import algorithms as A
+
+    edges = spark.createDataFrame([], "src long, dst long")
+    verts = spark.createDataFrame([], "vid long")
+    assert _EMPTY_GRAPH_KERNELS[name](A, edges, verts).collect() == []
+
+
 def test_lcc_goldens(pgq):
     # local_clustering_coefficient.test:73-80
     df = pgq.local_clustering_coefficient("pg", "Person", "Knows")

@@ -511,3 +511,107 @@ def test_standing_index_keyed_on_source_files(spark, tmp_path, monkeypatch):
     assert r2 == [(1, 1, 0), (1, 4, 1)]
     assert os.path.basename(p2).startswith("sf_x-")
     assert not [n for n in os.listdir(os.path.dirname(p2)) if ".tmp-" in n]
+
+
+def _kernel_profile(spark, monkeypatch, run):
+    """(materialize calls, Spark jobs, observed rounds) of `run()` from a
+    cold adjacency cache.  Observed rounds are run-length encoded
+    [(round, repeats)], a round being its Observation prefix, then its
+    plan's Exchanges, joins, aggregates and total operators."""
+    import itertools
+    import re
+
+    from duckpgq_extension_spark.operators import paths
+
+    paths.clear_prep_cache(spark)
+    calls = []
+    real = paths.materialize
+
+    def count(df, eager=True):
+        calls.append(1)
+        return real(df, eager)
+
+    monkeypatch.setattr(paths, "materialize", count)
+    dag = spark.sparkContext._jsc.sc().dagScheduler()
+    jobs0 = dag.nextJobId()
+    plans = _round_plans(monkeypatch, run)
+    jobs = dag.nextJobId() - jobs0
+    monkeypatch.undo()
+    rounds = []
+    for plan in plans:
+        names = _operator_names(plan)
+        rounds.append((
+            re.search(r"__pgq_([a-z]+)_\d+", plan).group(1),
+            names.count("Exchange"),
+            sum(n.endswith("Join") for n in names),
+            sum(n.endswith("Aggregate") for n in names),
+            len(names),
+        ))
+    return len(calls), jobs, [(r, len(list(g))) for r, g in itertools.groupby(rounds)]
+
+
+# Measured on the hand-rolled loops the round driver replaced: moving a
+# kernel onto `paths.fixpoint` must keep its rounds, jobs and round plans.
+_KERNEL_PROFILES = {
+    "pagerank_tol": (40, 274, [(("pr", 2, 1, 2, 20), 1), (("pr", 4, 3, 4, 36), 2),
+                               (("pr", 5, 3, 4, 38), 36)]),
+    "pagerank_fixed": (7, 43, [(("pr", 2, 1, 2, 20), 1)]),
+    "wcc_chain": (26, 28, [(("ckpt", 4, 4, 2, 34), 8), (("wccf", 7, 4, 4, 38), 1),
+                           (("wccf", 5, 4, 4, 36), 1), (("wccj", 2, 1, 0, 10), 4)]),
+    "k_core": (5, 15, [(("kcore", 1, 2, 2, 17), 1), (("kcore", 5, 2, 2, 23), 1)]),
+    "label_propagation": (7, 38, []),
+    "hits_fixed": (5, 46, []),
+    "hits_tol": (36, 316, [(("hits", 10, 8, 6, 64), 1), (("hits", 8, 12, 6, 84), 16)]),
+    "bellman_ford": (6, 29, [(("fix", 4, 1, 6, 22), 1), (("fix", 3, 1, 2, 19), 4)]),
+}
+
+
+def test_fixpoint_kernels_keep_rounds_and_jobs(spark, monkeypatch):
+    from duckpgq_extension_spark import algorithms as A
+    from duckpgq_extension_spark.operators.paths import cheapest_path_distances
+
+    ring = [(0, 1), (1, 2), (2, 0), (2, 3), (3, 4), (4, 2), (1, 5), (3, 1)]
+    edges = spark.createDataFrame(ring, "src long, dst long")
+    verts = spark.range(7).toDF("vid")  # 6 is isolated, 5 is dangling
+    chain = spark.createDataFrame(
+        [(i, i + 1) for i in range(38)], "src long, dst long")
+    wedges = spark.createDataFrame(
+        [(s, d, (s * 3 + d) % 4 + 1) for s, d in ring], "src long, dst long, weight long")
+    kernels = {
+        "pagerank_tol": lambda: A.pagerank(edges, verts, tol=1e-6),
+        "pagerank_fixed": lambda: A.pagerank(edges, verts, tol=0, max_iter=5),
+        "k_core": lambda: A.k_core(edges, verts, 2),
+        "label_propagation": lambda: A.label_propagation(edges, verts, max_iter=5),
+        "hits_fixed": lambda: A.hits(edges, verts, max_iter=5),
+        "hits_tol": lambda: A.hits(edges, verts, max_iter=20, tol=1e-3),
+        "bellman_ford": lambda: cheapest_path_distances(
+            wedges, sources=spark.createDataFrame([(0,), (4,)], "src long")),
+    }
+    got = {name: _kernel_profile(spark, monkeypatch, lambda: run().collect())
+           for name, run in kernels.items()}
+    # WCC's job count under AQE varies run to run with stage timing; with
+    # AQE off the plan alone fixes it (a chain long enough for the
+    # skeleton rounds)
+    aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try:
+        got["wcc_chain"] = _kernel_profile(spark, monkeypatch, lambda: A.weakly_connected_component(
+            chain, spark.range(39).toDF("vid")).collect())
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", aqe)
+    assert got == _KERNEL_PROFILES
+
+
+def test_checkpoint_debug_records(spark, caplog):
+    """Each observed checkpoint logs one DEBUG record with its label, wall
+    seconds and metrics: pagerank's dangling probe, then one per round."""
+    import logging
+
+    from duckpgq_extension_spark import algorithms as A
+
+    edges = spark.createDataFrame([(0, 1), (1, 2), (2, 0), (2, 3)], "src long, dst long")
+    with caplog.at_level(logging.DEBUG, logger="duckpgq_extension_spark"):
+        A.pagerank(edges, spark.range(4).toDF("vid"), tol=1e-12, max_iter=4)
+    recs = [r for r in caplog.records if getattr(r, "label", None) == "pr"]
+    assert [sorted(r.metrics) for r in recs] == [["n_dang"]] + [["delta"]] * 4
+    assert all(r.seconds >= 0 and r.name == "duckpgq_extension_spark" for r in recs)
