@@ -36,7 +36,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
 def oracle_sql() -> dict[str, str]:
     """DuckDB-equivalent SQL per query.  Every queries() key has an
-    oracle entry (134/134) — including ANY-SHORTEST path contents
+    oracle, because the registry stores each query with its oracle as
+    one (query, oracle) row — including ANY-SHORTEST path contents
     (deterministic lex-min tie-break makes them SQL-expressible) and
     the LSH/packing pipelines (recursive CTEs) — so no query falls back
     to the driver's weaker rows-only check."""

@@ -75,7 +75,7 @@ def pagerank(
     if sources is not None and phantom_vertices:
         raise ValueError("phantom_vertices is a reference-parity mode; "
                          "it cannot combine with personalized sources")
-    vertices = pathops.materialize(vertices.toDF("vid").distinct())
+    vertices, n = pathops.checkpoint_with_count(vertices.toDF("vid").distinct())
     real_vertices = vertices
     if phantom_vertices:
         max_vid = vertices.agg(F.max("vid")).first()[0] or 0
@@ -83,8 +83,7 @@ def pagerank(
         phantoms = spark.range(max_vid + 1, max_vid + 1 + phantom_vertices).select(
             F.col("id").alias("vid")
         )
-        vertices = pathops.materialize(vertices.unionByName(phantoms))
-    n = vertices.count()
+        vertices, n = pathops.checkpoint_with_count(vertices.unionByName(phantoms))
     if n == 0:
         return vertices.withColumn("pagerank", F.lit(0.0))
     parts = pathops.default_parallelism(edges.sparkSession)
@@ -626,8 +625,7 @@ def k_core(edges: DataFrame, vertices: DataFrame, k: int) -> DataFrame:
     if k < 1:
         raise ValueError("k must be >= 1")
     und = pathops.materialize(_doubled_neighbors(edges))
-    alive = pathops.materialize(vertices.toDF("vid").distinct())
-    n_alive = alive.count()
+    alive, n_alive = pathops.checkpoint_with_count(vertices.toDF("vid").distinct())
 
     def peel(alive, last, ckpt):
         return (
@@ -1939,14 +1937,13 @@ def eigenvector_centrality(
     re-densified ONCE at the end via a left join with the vertex frame.
     That removes one full |V|-state join + exchange per round.
     """
-    vertices = pathops.materialize(vertices.toDF("vid").distinct())
+    vertices, n = pathops.checkpoint_with_count(vertices.toDF("vid").distinct())
     induced = (
         edges.select("src", "dst")
         .join(vertices.withColumnRenamed("vid", "src"), "src", "left_semi")
         .join(vertices.withColumnRenamed("vid", "dst"), "dst", "left_semi")
     )
     edges_p = pathops.persist_partitioned(induced)  # cache-owned
-    n = vertices.count()
     if n == 0:
         return vertices.withColumn("eigenvector", F.lit(0.0))
     x = pathops.materialize(

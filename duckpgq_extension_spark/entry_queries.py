@@ -2689,7 +2689,7 @@ def standing_index(kind: str, sf_dir: str, build) -> str:
     (under STANDING_INDEX_ROOT), calling `build(path)` on first use.
 
     The directory is keyed on the source files' fingerprint (paths,
-    sizes, mtimes: paths.file_fingerprint, the session cache's notion of
+    sizes, mtimes: paths.dir_fingerprint, the session cache's notion of
     the same data), so data regenerated under the same path gets a
     fresh index instead of the stale one.  `build` writes into a
     temporary sibling that is published with os.rename: readers never
@@ -2701,9 +2701,7 @@ def standing_index(kind: str, sf_dir: str, build) -> str:
     import uuid
 
     src = os.path.normpath(sf_dir)
-    fp = pathops.file_fingerprint(
-        os.path.join(root, name) for root, _, files in os.walk(src) for name in files
-    )
+    fp = pathops.dir_fingerprint(src)
     path = os.path.join(
         STANDING_INDEX_ROOT,
         f"duckpgq_{kind}_index",
@@ -5978,612 +5976,167 @@ FROM un GROUP BY 1, 2
 # registry
 # --------------------------------------------------------------------------
 
-QUERIES = {
-    "match_1hop": q_match_1hop,
-    "match_2hop": q_match_2hop,
-    "match_undirected": q_match_undirected,
-    "match_reverse": q_match_reverse,
-    "match_bidirected": q_match_bidirected,
-    "match_triangle": q_match_triangle,
-    "match_inheritance": q_match_inheritance,
-    "match_composite_key": q_match_composite_key,
-    "shortest_composite": q_shortest_composite,
-    "shortest_string": q_shortest_string,
-    "var_length_1_2": q_var_length_1_2,
-    "shortest_len": q_shortest_len,
-    "reachability": q_reachability,
-    "shortest_path_vertices": q_shortest_path_vertices,
-    "topk_paths": q_topk_paths,
-    "cheapest_path": q_cheapest_path,
-    "pagerank": q_pagerank,
-    "personalized_pagerank": q_personalized_pagerank,
-    "neighbor_sample": q_neighbor_sample,
-    "k_core": q_k_core,
-    "sampled_neighborhood": q_sampled_neighborhood,
-    "weighted_pagerank": q_weighted_pagerank,
-    "wcc": q_wcc,
-    "lcc": q_lcc,
-    "summarize": q_summarize,
-    "create_vertex_table": q_create_vertex_table,
-    "tpch_q1": q_tpch_q1,
-    "topk_per_group": q_topk_per_group,
-    "asof_join": q_asof_join,
-    "acyclic_paths": q_acyclic_paths,
-    "all_shortest_paths": q_all_shortest_paths,
-    "trail_paths": q_trail_paths,
-    "chunk_docs": q_chunk_docs,
-    "det_sample": q_det_sample,
-    "stratified_sample": q_stratified_sample,
-    "vocab_stats": q_vocab_stats,
-    "tfidf": q_tfidf,
-    "pack_sequences": q_pack_sequences,
-    "interval_join": q_interval_join,
-    "window_running_sum": q_window_running_sum,
-    "rollup_orders": q_rollup_orders,
-    "cube_lineitem": q_cube_lineitem,
-    "semi_anti_join": q_semi_anti_join,
-    "streaming_window": q_streaming_window,
-    "streaming_dedup": q_streaming_dedup,
-    "streaming_degree": q_streaming_degree,
-    "streaming_join": q_streaming_join,
-    "events_json": q_events_json,
-    "events_daily": q_events_daily,
-    "sessionize": q_sessionize,
-    "lang_id": q_lang_id,
-    "text_stats": q_text_stats,
-    "quality_repetition": q_quality_repetition,
-    "mixture_sample": q_mixture_sample,
-    "corpus_clean": q_corpus_clean,
-    "dedup_exact": q_dedup_exact,
-    "dedup_fingerprint": q_dedup_fingerprint,
-    "dedup_jaccard": q_dedup_jaccard,
-    "dedup_minhash": q_dedup_minhash,
-    "simhash": q_simhash,
-    "minhash_lsh_pairs": q_minhash_lsh_pairs,
-    "dedup_clusters": q_dedup_clusters,
-    "contamination": q_contamination,
-    "similarity_topk": q_similarity_topk,
-    "embedding_near_dup": q_embedding_near_dup,
-    "ann_lsh": q_ann_lsh,
-    "ann_ivf": q_ann_ivf,
-    "embedding_clusters": q_embedding_clusters,
-    "multimodal_decode": q_multimodal_decode,
-    "hits": q_hits,
-    "scc": q_scc,
-    "global_clustering": q_global_clustering,
-    "random_walks": q_random_walks,
-    "closeness": q_closeness,
-    "distance_report": q_distance_report,
-    "pii_redact": q_pii_redact,
-    "communities": q_communities,
-    "assortativity": q_assortativity,
-    "doc_logprob": q_doc_logprob,
-    "katz": q_katz,
-    "link_pred": q_link_pred,
-    "temporal_reach": q_temporal_reach,
-    "temporal_reach_index": q_temporal_reach_index,
-    "nbr_features": q_nbr_features,
-    "ego_net": q_ego_net,
-    "funnel": q_funnel,
-    "cohort_retention": q_cohort_retention,
-    "session_paths": q_session_paths,
-    "cheapest_path_vertices": q_cheapest_path_vertices,
-    "match_cheapest": q_match_cheapest,
-    "group_sample": q_group_sample,
-    "eccentricity": q_eccentricity,
-    "path_counts": q_path_counts,
-    "betweenness": q_betweenness,
-    "harmonic": q_harmonic,
-    "k_truss": q_k_truss,
-    "csr_edges": q_csr_edges,
-    "csr_offsets": q_csr_offsets,
-    "pipeline_corpus": q_pipeline_corpus,
-    "graph_report": q_graph_report,
-    "centrality_report": q_centrality_report,
-    "dedup_edit": q_dedup_edit,
-    "bm25": q_bm25,
-    "resample_fill": q_resample_fill,
-    "pivot_events": q_pivot_events,
-    "group_quantiles": q_group_quantiles,
-    "hybrid_retrieval": q_hybrid_retrieval,
-    "node2vec": q_node2vec,
-    "rolling_7d": q_rolling_7d,
-    "grouping_sets": q_grouping_sets,
-    "weighted_sample": q_weighted_sample,
-    "winsorize": q_winsorize,
-    "attribution": q_attribution,
-    "anomaly_zscore": q_anomaly_zscore,
-    "copurchase_pmi": q_copurchase_pmi,
-    "event_transitions": q_event_transitions,
-    "eigenvector": q_eigenvector,
-    "modularity": q_modularity,
-    "communities_refined": q_communities_refined,
-    "community_graph": q_community_graph,
-    "conductance": q_conductance,
-    "pipeline_v3": q_pipeline_v3,
-    "streaming_anomaly": q_streaming_anomaly,
-    "percolation": q_percolation,
-    "profile_docs": q_profile_docs,
-    "materialize_packs": q_materialize_packs,
-    "dataset_split": q_dataset_split,
-    "temporal_latest": q_temporal_latest,
-    "nbr_features_l2": q_nbr_features_l2,
-    "split_entropy": q_split_entropy,
-    "degree_powerlaw": q_degree_powerlaw,
-    "avg_path_length": q_avg_path_length,
-    "burstiness": q_burstiness,
+# Row order matters: the driver's CORRECTNESS gate verifies only the first
+# 50 entries of ``queries()``, so a round's rotation moves the rows it
+# wants re-verified to the top of this table.
+REGISTRY = {
+    "temporal_reach_index": (q_temporal_reach_index, O_TEMPORAL_REACH_INDEX),
+    "temporal_reach": (q_temporal_reach, O_TEMPORAL_REACH),
+    "temporal_latest": (q_temporal_latest, O_TEMPORAL_LATEST),
+    "cheapest_path": (q_cheapest_path, O_CHEAPEST_PATH),
+    "cheapest_path_vertices": (q_cheapest_path_vertices, O_CHEAPEST_PATH_VERTICES),
+    "match_cheapest": (q_match_cheapest, O_MATCH_CHEAPEST),
+    "betweenness": (q_betweenness, O_BETWEENNESS),
+    "path_counts": (q_path_counts, O_PATH_COUNTS),
+    "pagerank": (q_pagerank, O_PAGERANK),
+    "personalized_pagerank": (q_personalized_pagerank, O_PERSONALIZED_PAGERANK),
+    "weighted_pagerank": (q_weighted_pagerank, O_WEIGHTED_PAGERANK),
+    "hits": (q_hits, O_HITS),
+    "eigenvector": (q_eigenvector, O_EIGENVECTOR),
+    "katz": (q_katz, O_KATZ),
+    "centrality_report": (q_centrality_report, O_CENTRALITY_REPORT),
+    "graph_report": (q_graph_report, O_GRAPH_REPORT),
+    "wcc": (q_wcc, O_WCC),
+    "dedup_clusters": (q_dedup_clusters, O_DEDUP_CLUSTERS),
+    "semantic_dedup": (q_semantic_dedup, O_SEMANTIC_DEDUP),
+    "communities": (q_communities, O_COMMUNITIES),
+    "communities_refined": (q_communities_refined, O_COMMUNITIES_REFINED),
+    "community_graph": (q_community_graph, O_COMMUNITY_GRAPH),
+    "group_quantiles": (q_group_quantiles, O_GROUP_QUANTILES),
+    "grouping_sets": (q_grouping_sets, O_GROUPING_SETS),
+    "apply_vocab": (q_apply_vocab, O_APPLY_VOCAB),
+    "attribution": (q_attribution, O_ATTRIBUTION),
+    "bigram_logprob": (q_bigram_logprob, O_BIGRAM_LOGPROB),
+    "ref_bigram_logprob": (q_ref_bigram_logprob, O_REF_BIGRAM_LOGPROB),
+    "burstiness": (q_burstiness, O_BURSTINESS),
+    "copurchase_pmi": (q_copurchase_pmi, O_COPURCHASE_PMI),
+    "curriculum": (q_curriculum, O_CURRICULUM),
+    "dataset_split": (q_dataset_split, O_DATASET_SPLIT),
+    "degree_powerlaw": (q_degree_powerlaw, O_DEGREE_POWERLAW),
+    "event_transitions": (q_event_transitions, O_EVENT_TRANSITIONS),
+    "importance_resample": (q_importance_resample, O_IMPORTANCE_RESAMPLE),
+    "mixture_sample": (q_mixture_sample, O_MIXTURE_SAMPLE),
+    "nbr_features_l2": (q_nbr_features_l2, O_NBR_FEATURES_L2),
+    "pivot_events": (q_pivot_events, O_PIVOT_EVENTS),
+    "profile_docs": (q_profile_docs, O_PROFILE_DOCS),
+    "quantize_int8": (q_quantize_int8, O_QUANTIZE_INT8),
+    "resample_fill": (q_resample_fill, O_RESAMPLE_FILL),
+    "rolling_7d": (q_rolling_7d, O_ROLLING_7D),
+    "split_entropy": (q_split_entropy, O_SPLIT_ENTROPY),
+    "temperature_sample": (q_temperature_sample, O_TEMPERATURE_SAMPLE),
+    "text_normalize": (q_text_normalize, O_TEXT_NORMALIZE),
+    "vocab_drift": (q_vocab_drift, O_VOCAB_DRIFT),
+    "weighted_sample": (q_weighted_sample, O_WEIGHTED_SAMPLE),
+    "distance_report": (q_distance_report, O_DISTANCE_REPORT),
+    "modularity": (q_modularity, O_MODULARITY),
+    "conductance": (q_conductance, O_CONDUCTANCE),
+    "avg_path_length": (q_avg_path_length, O_AVG_PATH_LENGTH),
+    "percolation": (q_percolation, O_PERCOLATION),
+    "containment_dedup": (q_containment_dedup, O_CONTAINMENT_DEDUP),
+    "dedup_paragraphs": (q_dedup_paragraphs, O_DEDUP_PARAGRAPHS),
+    "dedup_keep_longest": (q_dedup_keep_longest, O_DEDUP_KEEP_LONGEST),
+    "ann_ivf": (q_ann_ivf, O_ANN_IVF),
+    "ann_ivf_index": (q_ann_ivf_index, O_ANN_IVF_INDEX),
+    "ann_ivfpq": (q_ann_ivfpq, O_ANN_IVFPQ),
+    "ann_ivfpq_index": (q_ann_ivfpq_index, O_ANN_IVFPQ),
+    "ann_lsh": (q_ann_lsh, O_ANN_LSH),
+    "ann_recall": (q_ann_recall, O_ANN_RECALL),
+    "embedding_near_dup": (q_embedding_near_dup, O_EMBEDDING_NEAR_DUP),
+    "random_projection": (q_random_projection, O_RANDOM_PROJECTION),
+    "embedding_clusters": (q_embedding_clusters, O_EMBEDDING_CLUSTERS),
+    "chunk_docs": (q_chunk_docs, O_CHUNK_DOCS),
+    "cube_lineitem": (q_cube_lineitem, O_CUBE_LINEITEM),
+    "det_sample": (q_det_sample, O_DET_SAMPLE),
+    "events_daily": (q_events_daily, O_EVENTS_DAILY),
+    "events_json": (q_events_json, O_EVENTS_JSON),
+    "interval_join": (q_interval_join, O_INTERVAL_JOIN),
+    "pack_sequences": (q_pack_sequences, O_PACK_SEQUENCES),
+    "quality_repetition": (q_quality_repetition, O_QUALITY_REPETITION),
+    "rollup_orders": (q_rollup_orders, O_ROLLUP_ORDERS),
+    "semi_anti_join": (q_semi_anti_join, O_SEMI_ANTI_JOIN),
+    "sessionize": (q_sessionize, O_SESSIONIZE),
+    "stratified_sample": (q_stratified_sample, O_STRATIFIED_SAMPLE),
+    "streaming_dedup": (q_streaming_dedup, O_STREAMING_DEDUP),
+    "streaming_degree": (q_streaming_degree, O_STREAMING_DEGREE),
+    "streaming_join": (q_streaming_join, O_STREAMING_JOIN),
+    "tfidf": (q_tfidf, O_TFIDF),
+    "vocab_stats": (q_vocab_stats, O_VOCAB_STATS),
+    "window_running_sum": (q_window_running_sum, O_WINDOW_RUNNING_SUM),
+    "hybrid_retrieval": (q_hybrid_retrieval, O_HYBRID_RETRIEVAL),
+    "dedup_edit": (q_dedup_edit, O_DEDUP_EDIT),
+    "substring_dedup": (q_substring_dedup, O_SUBSTRING_DEDUP),
+    "cross_corpus_dedup": (q_cross_corpus_dedup, O_CROSS_CORPUS_DEDUP),
+    "materialize_packs": (q_materialize_packs, O_MATERIALIZE_PACKS),
+    "pipeline_v3": (q_pipeline_v3, O_PIPELINE_V3),
+    "pipeline_curation": (q_pipeline_curation, O_PIPELINE_CURATION),
+    "bm25": (q_bm25, O_BM25),
+    "node2vec": (q_node2vec, O_NODE2VEC),
+    "anomaly_zscore": (q_anomaly_zscore, O_ANOMALY_ZSCORE),
+    "stream_near_dup": (q_stream_near_dup, O_STREAM_NEAR_DUP),
+    "streaming_anomaly": (q_streaming_anomaly, O_STREAMING_ANOMALY),
+    "winsorize": (q_winsorize, O_WINSORIZE),
+    "var_length_hetero": (q_var_length_hetero, O_VAR_LENGTH_HETERO),
+    "closeness": (q_closeness, O_CLOSENESS),
+    "harmonic": (q_harmonic, O_HARMONIC),
+    "eccentricity": (q_eccentricity, O_ECCENTRICITY),
+    "pii_redact": (q_pii_redact, O_PII_REDACT),
+    "doc_logprob": (q_doc_logprob, O_DOC_LOGPROB),
+    "funnel": (q_funnel, O_FUNNEL),
+    "cohort_retention": (q_cohort_retention, O_COHORT_RETENTION),
+    "session_paths": (q_session_paths, O_SESSION_PATHS),
+    "group_sample": (q_group_sample, O_GROUP_SAMPLE),
+    "match_1hop": (q_match_1hop, O_MATCH_1HOP),
+    "match_undirected": (q_match_undirected, O_MATCH_UNDIRECTED),
+    "match_reverse": (q_match_reverse, O_MATCH_REVERSE),
+    "match_bidirected": (q_match_bidirected, O_MATCH_BIDIRECTED),
+    "match_triangle": (q_match_triangle, O_MATCH_TRIANGLE),
+    "match_inheritance": (q_match_inheritance, O_MATCH_INHERITANCE),
+    "match_composite_key": (q_match_composite_key, O_MATCH_COMPOSITE_KEY),
+    "shortest_composite": (q_shortest_composite, O_SHORTEST_COMPOSITE),
+    "shortest_string": (q_shortest_string, O_SHORTEST_STRING),
+    "reachability": (q_reachability, O_REACHABILITY),
+    "shortest_path_vertices": (q_shortest_path_vertices, O_SHORTEST_PATH_VERTICES),
+    "topk_paths": (q_topk_paths, O_TOPK_PATHS),
+    "acyclic_paths": (q_acyclic_paths, O_ACYCLIC_PATHS),
+    "all_shortest_paths": (q_all_shortest_paths, O_ALL_SHORTEST_PATHS),
+    "trail_paths": (q_trail_paths, O_TRAIL_PATHS),
+    "lcc": (q_lcc, O_LCC),
+    "k_core": (q_k_core, O_K_CORE),
+    "neighbor_sample": (q_neighbor_sample, O_NEIGHBOR_SAMPLE),
+    "sampled_neighborhood": (q_sampled_neighborhood, O_SAMPLED_NEIGHBORHOOD),
+    "csr_edges": (q_csr_edges, O_CSR_EDGES),
+    "csr_offsets": (q_csr_offsets, O_CSR_OFFSETS),
+    "summarize": (q_summarize, O_SUMMARIZE),
+    "create_vertex_table": (q_create_vertex_table, O_CREATE_VERTEX_TABLE),
+    "tpch_q1": (q_tpch_q1, O_TPCH_Q1),
+    "topk_per_group": (q_topk_per_group, O_TOPK_PER_GROUP),
+    "asof_join": (q_asof_join, O_ASOF_JOIN),
+    "match_2hop": (q_match_2hop, O_MATCH_2HOP),
+    "var_length_1_2": (q_var_length_1_2, O_VAR_LENGTH_1_2),
+    "shortest_len": (q_shortest_len, O_SHORTEST_LEN),
+    "k_truss": (q_k_truss, O_K_TRUSS),
+    "scc": (q_scc, O_SCC),
+    "global_clustering": (q_global_clustering, O_GLOBAL_CLUSTERING),
+    "assortativity": (q_assortativity, O_ASSORTATIVITY),
+    "link_pred": (q_link_pred, O_LINK_PRED),
+    "nbr_features": (q_nbr_features, O_NBR_FEATURES),
+    "ego_net": (q_ego_net, O_EGO_NET),
+    "random_walks": (q_random_walks, O_RANDOM_WALKS),
+    "streaming_window": (q_streaming_window, O_STREAMING_WINDOW),
+    "pipeline_corpus": (q_pipeline_corpus, O_PIPELINE_CORPUS),
+    "corpus_clean": (q_corpus_clean, O_CORPUS_CLEAN),
+    "dedup_jaccard": (q_dedup_jaccard, O_DEDUP_JACCARD),
+    "dedup_minhash": (q_dedup_minhash, O_DEDUP_MINHASH),
+    "minhash_lsh_pairs": (q_minhash_lsh_pairs, O_MINHASH_LSH_PAIRS),
+    "dedup_exact": (q_dedup_exact, O_DEDUP_EXACT),
+    "dedup_fingerprint": (q_dedup_fingerprint, O_DEDUP_FINGERPRINT),
+    "simhash": (q_simhash, O_SIMHASH),
+    "contamination": (q_contamination, O_CONTAMINATION),
+    "similarity_topk": (q_similarity_topk, O_SIMILARITY_TOPK),
+    "multimodal_decode": (q_multimodal_decode, O_MULTIMODAL_DECODE),
+    "lang_id": (q_lang_id, O_LANG_ID),
+    "text_stats": (q_text_stats, O_TEXT_STATS),
 }
 
-ORACLES = {
-    "match_1hop": O_MATCH_1HOP,
-    "match_2hop": O_MATCH_2HOP,
-    "match_undirected": O_MATCH_UNDIRECTED,
-    "match_reverse": O_MATCH_REVERSE,
-    "match_bidirected": O_MATCH_BIDIRECTED,
-    "match_triangle": O_MATCH_TRIANGLE,
-    "match_inheritance": O_MATCH_INHERITANCE,
-    "match_composite_key": O_MATCH_COMPOSITE_KEY,
-    "shortest_composite": O_SHORTEST_COMPOSITE,
-    "shortest_string": O_SHORTEST_STRING,
-    "var_length_1_2": O_VAR_LENGTH_1_2,
-    "shortest_len": O_SHORTEST_LEN,
-    "reachability": O_REACHABILITY,
-    "shortest_path_vertices": O_SHORTEST_PATH_VERTICES,
-    "topk_paths": O_TOPK_PATHS,
-    "cheapest_path": O_CHEAPEST_PATH,
-    "pagerank": O_PAGERANK,
-    "personalized_pagerank": O_PERSONALIZED_PAGERANK,
-    "neighbor_sample": O_NEIGHBOR_SAMPLE,
-    "k_core": O_K_CORE,
-    "sampled_neighborhood": O_SAMPLED_NEIGHBORHOOD,
-    "weighted_pagerank": O_WEIGHTED_PAGERANK,
-    "wcc": O_WCC,
-    "lcc": O_LCC,
-    "summarize": O_SUMMARIZE,
-    "create_vertex_table": O_CREATE_VERTEX_TABLE,
-    "tpch_q1": O_TPCH_Q1,
-    "topk_per_group": O_TOPK_PER_GROUP,
-    "asof_join": O_ASOF_JOIN,
-    "acyclic_paths": O_ACYCLIC_PATHS,
-    "all_shortest_paths": O_ALL_SHORTEST_PATHS,
-    "trail_paths": O_TRAIL_PATHS,
-    "chunk_docs": O_CHUNK_DOCS,
-    "det_sample": O_DET_SAMPLE,
-    "stratified_sample": O_STRATIFIED_SAMPLE,
-    "vocab_stats": O_VOCAB_STATS,
-    "tfidf": O_TFIDF,
-    "pack_sequences": O_PACK_SEQUENCES,
-    "interval_join": O_INTERVAL_JOIN,
-    "window_running_sum": O_WINDOW_RUNNING_SUM,
-    "rollup_orders": O_ROLLUP_ORDERS,
-    "cube_lineitem": O_CUBE_LINEITEM,
-    "semi_anti_join": O_SEMI_ANTI_JOIN,
-    "events_json": O_EVENTS_JSON,
-    "events_daily": O_EVENTS_DAILY,
-    "sessionize": O_SESSIONIZE,
-    "lang_id": O_LANG_ID,
-    "text_stats": O_TEXT_STATS,
-    "quality_repetition": O_QUALITY_REPETITION,
-    "mixture_sample": O_MIXTURE_SAMPLE,
-    "corpus_clean": O_CORPUS_CLEAN,
-    "dedup_exact": O_DEDUP_EXACT,
-    "dedup_fingerprint": O_DEDUP_FINGERPRINT,
-    "dedup_jaccard": O_DEDUP_JACCARD,
-    "dedup_minhash": O_DEDUP_MINHASH,
-    "simhash": O_SIMHASH,
-    "similarity_topk": O_SIMILARITY_TOPK,
-    "embedding_near_dup": O_EMBEDDING_NEAR_DUP,
-    "multimodal_decode": O_MULTIMODAL_DECODE,
-    "streaming_window": O_STREAMING_WINDOW,
-    "streaming_dedup": O_STREAMING_DEDUP,
-    "streaming_degree": O_STREAMING_DEGREE,
-    "streaming_join": O_STREAMING_JOIN,
-    "minhash_lsh_pairs": O_MINHASH_LSH_PAIRS,
-    "dedup_clusters": O_DEDUP_CLUSTERS,
-    "contamination": O_CONTAMINATION,
-    "ann_lsh": O_ANN_LSH,
-    "ann_ivf": O_ANN_IVF,
-    "embedding_clusters": O_EMBEDDING_CLUSTERS,
-    "hits": O_HITS,
-    "scc": O_SCC,
-    "global_clustering": O_GLOBAL_CLUSTERING,
-    "random_walks": O_RANDOM_WALKS,
-    "closeness": O_CLOSENESS,
-    "distance_report": O_DISTANCE_REPORT,
-    "pii_redact": O_PII_REDACT,
-    "communities": O_COMMUNITIES,
-    "assortativity": O_ASSORTATIVITY,
-    "doc_logprob": O_DOC_LOGPROB,
-    "katz": O_KATZ,
-    "link_pred": O_LINK_PRED,
-    "temporal_reach": O_TEMPORAL_REACH,
-    "temporal_reach_index": O_TEMPORAL_REACH_INDEX,
-    "nbr_features": O_NBR_FEATURES,
-    "ego_net": O_EGO_NET,
-    "funnel": O_FUNNEL,
-    "cohort_retention": O_COHORT_RETENTION,
-    "session_paths": O_SESSION_PATHS,
-    "cheapest_path_vertices": O_CHEAPEST_PATH_VERTICES,
-    "match_cheapest": O_MATCH_CHEAPEST,
-    "group_sample": O_GROUP_SAMPLE,
-    "eccentricity": O_ECCENTRICITY,
-    "path_counts": O_PATH_COUNTS,
-    "betweenness": O_BETWEENNESS,
-    "harmonic": O_HARMONIC,
-    "k_truss": O_K_TRUSS,
-    "csr_edges": O_CSR_EDGES,
-    "csr_offsets": O_CSR_OFFSETS,
-    "pipeline_corpus": O_PIPELINE_CORPUS,
-    "graph_report": O_GRAPH_REPORT,
-    "centrality_report": O_CENTRALITY_REPORT,
-    "dedup_edit": O_DEDUP_EDIT,
-    "bm25": O_BM25,
-    "resample_fill": O_RESAMPLE_FILL,
-    "pivot_events": O_PIVOT_EVENTS,
-    "group_quantiles": O_GROUP_QUANTILES,
-    "hybrid_retrieval": O_HYBRID_RETRIEVAL,
-    "node2vec": O_NODE2VEC,
-    "rolling_7d": O_ROLLING_7D,
-    "grouping_sets": O_GROUPING_SETS,
-    "weighted_sample": O_WEIGHTED_SAMPLE,
-    "winsorize": O_WINSORIZE,
-    "attribution": O_ATTRIBUTION,
-    "anomaly_zscore": O_ANOMALY_ZSCORE,
-    "copurchase_pmi": O_COPURCHASE_PMI,
-    "event_transitions": O_EVENT_TRANSITIONS,
-    "eigenvector": O_EIGENVECTOR,
-    "modularity": O_MODULARITY,
-    "communities_refined": O_COMMUNITIES_REFINED,
-    "community_graph": O_COMMUNITY_GRAPH,
-    "conductance": O_CONDUCTANCE,
-    "pipeline_v3": O_PIPELINE_V3,
-    "streaming_anomaly": O_STREAMING_ANOMALY,
-    "percolation": O_PERCOLATION,
-    "profile_docs": O_PROFILE_DOCS,
-    "materialize_packs": O_MATERIALIZE_PACKS,
-    "dataset_split": O_DATASET_SPLIT,
-    "temporal_latest": O_TEMPORAL_LATEST,
-    "nbr_features_l2": O_NBR_FEATURES_L2,
-    "split_entropy": O_SPLIT_ENTROPY,
-    "degree_powerlaw": O_DEGREE_POWERLAW,
-    "avg_path_length": O_AVG_PATH_LENGTH,
-    "burstiness": O_BURSTINESS,
-}
-
-
-# --------------------------------------------------------------------------
-# driver-window ordering (round 6)
-# --------------------------------------------------------------------------
-# The driver's CORRECTNESS gate verifies only the first 50 ``queries()``
-# entries in insertion order.  Round 5's window covered the 42 operators
-# added in rounds 3-4 plus 8 sentinels (48/50 green; the 2 failures were
-# array-column canonicalization, fixed by serializing paths to strings).
-# Rotate for round 6: lead with the two fixed queries so their repair is
-# driver-recorded, then the 46 keys OUTSIDE round 5's window (last
-# driver-verified in round 4, on older code), then two heavy sentinels
-# from the round-5-green set.  All 96 keys remain present in queries();
-# only the order changes round to round, so across consecutive rounds
-# every operator keeps a recent driver-recorded correctness row.
-
-# corpus curation v2 (round 7) — registered after the round-7 window so
-# they don't displace never-yet-verified keys; pre-verified via
-# tools/check_oracle.py and rotated into the driver window next round
-QUERIES.update({
-    "cross_corpus_dedup": q_cross_corpus_dedup,
-    "stream_near_dup": q_stream_near_dup,
-    "dedup_paragraphs": q_dedup_paragraphs,
-    "dedup_keep_longest": q_dedup_keep_longest,
-    "importance_resample": q_importance_resample,
-    "text_normalize": q_text_normalize,
-    "semantic_dedup": q_semantic_dedup,
-    "temperature_sample": q_temperature_sample,
-    "bigram_logprob": q_bigram_logprob,
-    "ann_ivfpq": q_ann_ivfpq,
-    "containment_dedup": q_containment_dedup,
-    "curriculum": q_curriculum,
-    "random_projection": q_random_projection,
-    "quantize_int8": q_quantize_int8,
-    "substring_dedup": q_substring_dedup,
-    "ref_bigram_logprob": q_ref_bigram_logprob,
-    "pipeline_curation": q_pipeline_curation,
-    "apply_vocab": q_apply_vocab,
-    "vocab_drift": q_vocab_drift,
-    "ann_recall": q_ann_recall,
-})
-ORACLES.update({
-    "cross_corpus_dedup": O_CROSS_CORPUS_DEDUP,
-    "stream_near_dup": O_STREAM_NEAR_DUP,
-    "dedup_paragraphs": O_DEDUP_PARAGRAPHS,
-    "dedup_keep_longest": O_DEDUP_KEEP_LONGEST,
-    "importance_resample": O_IMPORTANCE_RESAMPLE,
-    "text_normalize": O_TEXT_NORMALIZE,
-    "semantic_dedup": O_SEMANTIC_DEDUP,
-    "temperature_sample": O_TEMPERATURE_SAMPLE,
-    "bigram_logprob": O_BIGRAM_LOGPROB,
-    "ann_ivfpq": O_ANN_IVFPQ,
-    "containment_dedup": O_CONTAINMENT_DEDUP,
-    "curriculum": O_CURRICULUM,
-    "random_projection": O_RANDOM_PROJECTION,
-    "quantize_int8": O_QUANTIZE_INT8,
-    "substring_dedup": O_SUBSTRING_DEDUP,
-    "ref_bigram_logprob": O_REF_BIGRAM_LOGPROB,
-    "pipeline_curation": O_PIPELINE_CURATION,
-    "apply_vocab": O_APPLY_VOCAB,
-    "vocab_drift": O_VOCAB_DRIFT,
-    "ann_recall": O_ANN_RECALL,
-})
-
-# round 9 additions
-QUERIES.update({
-    "var_length_hetero": q_var_length_hetero,
-    "ann_ivf_index": q_ann_ivf_index,
-    "ann_ivfpq_index": q_ann_ivfpq_index,
-})
-ORACLES.update({
-    "var_length_hetero": O_VAR_LENGTH_HETERO,
-    "ann_ivf_index": O_ANN_IVF_INDEX,
-    # identical semantics to the in-memory PQ route — shared oracle
-    "ann_ivfpq_index": O_ANN_IVFPQ,
-})
-
-
-# Round 7 rotation: mixture_sample (added late in round 6, never
-# driver-verified — and its zero-token-group NULL threshold was fixed this
-# round, so the fix must be driver-recorded) leads; then the 47 keys whose
-# last driver row is round 5 (everything round 6's window displaced); then
-# 2 sentinels from the round-6-green set.  All 98 keys stay registered —
-# only insertion order changes.
-_R7_FRONT = [
-    # the queries that have never appeared in a driver CORRECTNESS
-    # window (every round-7 addition): they lead so CORRECTNESS_r07
-    # records their first hard rows
-    "dedup_edit", "bm25", "resample_fill", "pivot_events",
-    "group_quantiles", "hybrid_retrieval", "node2vec",
-    "rolling_7d", "grouping_sets", "weighted_sample",
-    "winsorize", "attribution", "anomaly_zscore",
-    "copurchase_pmi", "event_transitions", "eigenvector",
-    "modularity", "pipeline_v3", "streaming_anomaly",
-    "percolation", "profile_docs", "materialize_packs",
-    "dataset_split", "temporal_latest", "nbr_features_l2",
-    "split_entropy", "degree_powerlaw", "avg_path_length",
-    "burstiness",
-    "mixture_sample", "cross_corpus_dedup", "stream_near_dup",
-    "dedup_paragraphs", "dedup_keep_longest", "importance_resample",
-    "text_normalize", "semantic_dedup", "temperature_sample",
-    "bigram_logprob",
-    "ann_ivfpq", "containment_dedup", "curriculum",
-    "random_projection", "quantize_int8", "substring_dedup",
-    "ref_bigram_logprob", "pipeline_curation", "apply_vocab",
-    "vocab_drift", "ann_recall",
-    # 31 keys last driver-verified in round 5 (the 16 dropped to make
-    # room — lang_id, text_stats, pii_redact, dedup_exact,
-    # dedup_fingerprint, simhash, contamination, random_walks,
-    # assortativity, similarity_topk, embedding_clusters, doc_logprob,
-    # funnel, cohort_retention, session_paths, group_sample — are the
-    # simplest deterministic ops of that set, all r5-green and re-gated
-    # locally every round)
-    "match_2hop", "var_length_1_2", "shortest_len", "cheapest_path",
-    "pagerank", "wcc", "streaming_window",
-    "corpus_clean", "dedup_jaccard",
-    "dedup_minhash", "minhash_lsh_pairs", "dedup_clusters",
-    "embedding_near_dup", "ann_lsh",
-    "ann_ivf", "multimodal_decode", "hits", "scc",
-    "global_clustering", "closeness",
-    "communities",
-    "eccentricity", "path_counts",
-    "betweenness", "harmonic", "k_truss", "pipeline_corpus",
-    # 2 sentinels from the round-6-green window
-    "graph_report", "quality_repetition",
-]
-
-_R6_FRONT = [
-    # the 2 repaired queries (failed r5 on array hashing, now string paths)
-    "cheapest_path_vertices", "match_cheapest",
-    # 46 keys outside round 5's window, families interleaved as authored
-    "match_1hop", "match_undirected", "match_reverse", "match_bidirected",
-    "match_triangle", "match_inheritance", "match_composite_key",
-    "shortest_composite", "shortest_string", "reachability",
-    "shortest_path_vertices", "topk_paths", "personalized_pagerank",
-    "neighbor_sample", "k_core", "sampled_neighborhood",
-    "weighted_pagerank", "lcc", "summarize", "create_vertex_table",
-    "tpch_q1", "topk_per_group", "asof_join", "acyclic_paths",
-    "all_shortest_paths", "trail_paths", "chunk_docs", "det_sample",
-    "stratified_sample", "vocab_stats", "tfidf", "pack_sequences",
-    "interval_join", "window_running_sum", "rollup_orders",
-    "cube_lineitem", "semi_anti_join", "streaming_dedup",
-    "streaming_degree", "streaming_join", "events_json", "events_daily",
-    "sessionize", "csr_edges", "csr_offsets", "graph_report",
-    # round-6 addition (needs its first driver-recorded row) + one
-    # sentinel from the round-5-green heavy set
-    "quality_repetition", "temporal_reach",
-]
-
-# Round 8 rotation: queries CHANGED this round lead (centrality_report
-# is new; containment_dedup moved to trigram shingles; avg_path_length
-# and percolation raised their oracle recursion guard; modularity and
-# communities sit on the re-cadenced LPA kernel), then every key whose
-# newest driver CORRECTNESS row is round 5 — exactly the staleness set
-# VERDICT r7 item 6 names.  All keys stay registered; only insertion
-# order changes.
-_R8_FRONT = [
-    # changed or added this round — their r08 rows record the change
-    "centrality_report", "distance_report", "containment_dedup", "avg_path_length",
-    "percolation", "modularity", "communities_refined",
-    "community_graph", "conductance",
-    # the 47 keys last driver-verified in round 5 (r06/r07 windows
-    # displaced them); heavy graph core first, simple deterministic
-    # ops last so a window cut below 52 drops the cheapest-to-lose
-    "match_2hop", "var_length_1_2", "shortest_len", "cheapest_path",
-    "pagerank", "wcc", "communities", "hits", "katz", "betweenness",
-    "path_counts", "k_truss", "scc", "closeness", "harmonic",
-    "eccentricity", "global_clustering", "assortativity",
-    "link_pred", "nbr_features", "ego_net", "random_walks",
-    "streaming_window", "pipeline_corpus", "corpus_clean",
-    "dedup_jaccard", "dedup_minhash", "minhash_lsh_pairs",
-    "dedup_clusters", "dedup_exact", "dedup_fingerprint", "simhash",
-    "contamination", "embedding_near_dup", "ann_lsh", "ann_ivf",
-    "similarity_topk", "embedding_clusters", "multimodal_decode",
-    "lang_id", "text_stats", "pii_redact", "doc_logprob", "funnel",
-    "cohort_retention", "session_paths", "group_sample",
-]
-
-QUERIES = {
-    **{k: QUERIES[k] for k in _R8_FRONT},
-    **{k: v for k, v in QUERIES.items() if k not in set(_R8_FRONT)},
-}
-ORACLES = {
-    **{k: ORACLES[k] for k in _R8_FRONT if k in ORACLES},
-    **{k: v for k, v in ORACLES.items() if k not in set(_R8_FRONT)},
-}
-
-# Round 9 rotation (window = first ~50 keys).  Leads: the two queries
-# added this round (never driver-verified), the three whose oracle
-# recursion guard changed (d<30 -> d<60), the three whose kernels
-# changed this round (keep-longest rewrite; shared-adjacency routing),
-# then the six keys whose newest driver row is still r05 (VERDICT r8
-# item 2), then 36 of the 50 r06-stale keys — graph/match core first.
-# The 14 r06 keys that don't fit (simple deterministic relational/
-# streaming ops, all pytest-covered) are queued immediately after the
-# window cut for round 10.  All 154 keys stay registered; only
-# insertion order changes.
-_R9_FRONT = [
-    # new this round
-    "var_length_hetero", "ann_ivf_index", "ann_ivfpq_index",
-    # oracle guard raised this round (re-record under the new SQL)
-    "closeness", "harmonic", "eccentricity",
-    # kernels touched this round (hashes proven unchanged locally;
-    # driver row records it) — hits/eigenvector moved to deferred L1
-    # normalization with the oracle updated in lockstep, and
-    # centrality_report composes both
-    "dedup_keep_longest", "path_counts", "betweenness",
-    "hits", "eigenvector", "centrality_report",
-    # newest row still r05
-    "pii_redact", "doc_logprob", "funnel", "cohort_retention",
-    "session_paths", "group_sample",
-    # r06-stale graph/match core
-    "match_1hop", "match_undirected", "match_reverse", "match_bidirected",
-    "match_triangle", "match_inheritance", "match_composite_key",
-    "shortest_composite", "shortest_string", "reachability",
-    "shortest_path_vertices", "topk_paths", "acyclic_paths",
-    "all_shortest_paths", "trail_paths", "cheapest_path_vertices",
-    "match_cheapest", "personalized_pagerank", "weighted_pagerank",
-    "lcc", "k_core", "neighbor_sample", "sampled_neighborhood",
-    "temporal_reach", "csr_edges", "csr_offsets", "graph_report",
-    "summarize", "create_vertex_table",
-    # r06-stale relational core
-    "tpch_q1", "topk_per_group", "asof_join", "interval_join",
-    "window_running_sum", "rollup_orders", "cube_lineitem",
-    # --- expected window cut (~50) ---
-    # remaining r06-stale simple ops, first in line for round 10
-    "semi_anti_join", "streaming_dedup", "streaming_degree",
-    "streaming_join", "events_json", "events_daily", "sessionize",
-    "quality_repetition", "chunk_docs", "det_sample",
-    "stratified_sample", "vocab_stats", "tfidf", "pack_sequences",
-]
-
-QUERIES = {
-    **{k: QUERIES[k] for k in _R9_FRONT},
-    **{k: v for k, v in QUERIES.items() if k not in set(_R9_FRONT)},
-}
-ORACLES = {
-    **{k: ORACLES[k] for k in _R9_FRONT if k in ORACLES},
-    **{k: v for k, v in ORACLES.items() if k not in set(_R9_FRONT)},
-}
-
-# Round 10 rotation (window = first ~50 keys).  Leads: every key whose
-# kernel or plan-construction path changed this round (temporal fixpoint
-# hops=4 default, dedup_paragraphs no-text-shuffle rewrite, sparse
-# hits/eigenvector, betweenness sigma-fold, keep-longest min_by, the
-# ANN-family array-literal rework) so the driver re-records them under
-# the new code; then ALL 18 keys whose newest CORRECTNESS row is r06
-# (VERDICT r9 item 3 — after this window no key is older than r07);
-# then 13 of the 44 r07-stale keys (heaviest first).  The remaining
-# r07 keys queue immediately after the cut for round 11.  All keys stay
-# registered; only insertion order changes.
-_R10_FRONT = [
-    # kernels/plan construction changed this round
-    "temporal_reach", "temporal_latest", "dedup_paragraphs",
-    "dedup_keep_longest", "eigenvector", "hits", "centrality_report",
-    "betweenness", "path_counts",
-    "ann_ivf", "ann_ivf_index", "ann_ivfpq", "ann_ivfpq_index",
-    "ann_lsh", "ann_recall", "semantic_dedup", "embedding_near_dup",
-    "random_projection", "embedding_clusters",
-    # the full r06-stale set
-    "chunk_docs", "cube_lineitem", "det_sample", "events_daily",
-    "events_json", "interval_join", "pack_sequences",
-    "quality_repetition", "rollup_orders", "semi_anti_join",
-    "sessionize", "stratified_sample", "streaming_dedup",
-    "streaming_degree", "streaming_join", "tfidf", "vocab_stats",
-    "window_running_sum",
-    # oldest (r07) keys, heaviest first
-    "hybrid_retrieval", "dedup_edit", "substring_dedup",
-    "cross_corpus_dedup", "materialize_packs", "pipeline_v3",
-    "pipeline_curation", "bm25", "node2vec", "anomaly_zscore",
-    "stream_near_dup", "streaming_anomaly", "winsorize",
-    # --- expected window cut (~50) ---
-    # remaining r07-stale keys, first in line for round 11
-    "group_quantiles", "grouping_sets", "apply_vocab", "attribution",
-    "bigram_logprob", "ref_bigram_logprob", "burstiness",
-    "copurchase_pmi", "curriculum", "dataset_split", "degree_powerlaw",
-    "event_transitions", "importance_resample", "mixture_sample",
-    "nbr_features_l2", "pivot_events", "profile_docs", "quantize_int8",
-    "resample_fill", "rolling_7d", "split_entropy",
-    "temperature_sample", "text_normalize", "vocab_drift",
-    "weighted_sample",
-]
-
-QUERIES = {
-    **{k: QUERIES[k] for k in _R10_FRONT},
-    **{k: v for k, v in QUERIES.items() if k not in set(_R10_FRONT)},
-}
-ORACLES = {
-    **{k: ORACLES[k] for k in _R10_FRONT if k in ORACLES},
-    **{k: v for k, v in ORACLES.items() if k not in set(_R10_FRONT)},
-}
-
-# Round 11 rotation (window = first ~50 keys).  Leads: the one query
-# added this round (temporal_reach_index, the gated standing-index
-# route — never driver-verified), then every key whose kernel or
-# plan-construction path changed this round (temporal standing index,
-# Bellman-Ford union-merge, betweenness estimator default, the
-# SQL-rendered centrality/WCC loop bodies + pagerank dangling probe)
-# so the driver re-records them under the new code; then the full
-# 25-key r07-stale set queued at _R10_FRONT's cut (VERDICT r10 item
-# 10); then 5 of the oldest (r08) keys.  All keys stay registered;
-# only insertion order changes.
-_R11_FRONT = [
-    # new this round
-    "temporal_reach_index",
-    # kernels/plan construction changed this round
-    "temporal_reach", "temporal_latest",
-    "cheapest_path", "cheapest_path_vertices", "match_cheapest",
-    "betweenness", "path_counts",
-    "pagerank", "personalized_pagerank", "weighted_pagerank",
-    "hits", "eigenvector", "katz", "centrality_report",
-    "graph_report", "wcc", "dedup_clusters", "semantic_dedup",
-    "communities", "communities_refined", "community_graph",
-    # the full r07-stale set queued last round
-    "group_quantiles", "grouping_sets", "apply_vocab", "attribution",
-    "bigram_logprob", "ref_bigram_logprob", "burstiness",
-    "copurchase_pmi", "curriculum", "dataset_split", "degree_powerlaw",
-    "event_transitions", "importance_resample", "mixture_sample",
-    "nbr_features_l2", "pivot_events", "profile_docs", "quantize_int8",
-    "resample_fill", "rolling_7d", "split_entropy",
-    "temperature_sample", "text_normalize", "vocab_drift",
-    "weighted_sample",
-    # oldest remaining (r08) keys (modularity/conductance are also
-    # LPA-derived, so their r11 rows record the changed kernel)
-    "distance_report", "modularity", "conductance",
-    # --- expected window cut (~50) ---
-    # remaining r08 keys, first in line for round 12
-    "avg_path_length", "percolation", "containment_dedup",
-]
-
-QUERIES = {
-    **{k: QUERIES[k] for k in _R11_FRONT},
-    **{k: v for k, v in QUERIES.items() if k not in set(_R11_FRONT)},
-}
-ORACLES = {
-    **{k: ORACLES[k] for k in _R11_FRONT if k in ORACLES},
-    **{k: v for k, v in ORACLES.items() if k not in set(_R11_FRONT)},
-}
+QUERIES = {k: q for k, (q, _) in REGISTRY.items()}
+ORACLES = {k: o for k, (_, o) in REGISTRY.items()}

@@ -278,14 +278,20 @@ _SESSION_CACHE: dict[int, tuple] = {}  # id(session) -> (weakref(session), {kind
 _ADJ_CACHE_MAX = 16
 
 
+def _local_path(p: str) -> str | None:
+    """The local filesystem path of `p` (a `file:` URI or a plain path);
+    None for other schemes."""
+    uri = urlparse(p)
+    return unquote(uri.path) if uri.scheme == "file" else None if uri.scheme else p
+
+
 def file_fingerprint(paths) -> tuple:
     """What "the same data" means in this package: sorted (path, size,
     mtime_ns) for local files (`file:` URIs or plain paths), the path
     alone for other schemes."""
     out = []
     for p in paths:
-        uri = urlparse(p)
-        local = unquote(uri.path) if uri.scheme == "file" else None if uri.scheme else p
+        local = _local_path(p)
         if local is not None:
             try:
                 st = os.stat(local)
@@ -295,6 +301,32 @@ def file_fingerprint(paths) -> tuple:
                 pass
         out.append((p,))
     return tuple(sorted(out))
+
+
+def dir_fingerprint(local_dir: str) -> tuple:
+    """file_fingerprint of every file under the local directory."""
+    return file_fingerprint(
+        os.path.join(root, name) for root, _, files in os.walk(local_dir) for name in files
+    )
+
+
+_DIR_CACHE: dict = {}
+
+
+def dir_cached(kind: str, path: str, load):
+    """`load()` once per dir_fingerprint of the directory `path`, keeping
+    one entry per `kind`: driver-side standing state read from an index
+    directory (IVF centroids, temporal bucket bounds).  A file rewritten
+    in place changes the key even where the directory's mtime stays.  A
+    non-local path has no listing to key on, so it is never cached."""
+    local = _local_path(path)
+    if local is None or not os.path.isdir(local):
+        return load()
+    key = (path, dir_fingerprint(local))
+    hit = _DIR_CACHE.get(kind)
+    if hit is None or hit[0] != key:
+        hit = _DIR_CACHE[kind] = (key, load())
+    return hit[1]
 
 
 def session_cached(df: DataFrame, kind: str, params: tuple, cap: int, build):
@@ -1216,9 +1248,6 @@ def write_temporal_index(
     )
 
 
-_TEMPORAL_META_CACHE: dict = {}
-
-
 def _temporal_index_scan(spark, path: str, lo: int, width: int, bound,
                          base: DataFrame | None = None):
     """One relaxation round's adjacency scan over a write_temporal_index
@@ -1259,22 +1288,13 @@ def temporal_reachability_from_index(
     is lost.
 
     Bucket metadata is contract-small standing state (one row), cached
-    driver-side per (path, mtime) like the IVF centroid cache; non-local
-    paths (no mtime) skip the cache rather than risk staleness.
+    driver-side by dir_cached like the IVF centroids.
     """
-    mdir = f"{path}/meta"
-    try:
-        mkey = (mdir, os.path.getmtime(mdir))
-    except OSError:
-        mkey = None
-    meta = _TEMPORAL_META_CACHE.get(mkey) if mkey is not None else None
-    if meta is None:
-        r = spark.read.parquet(mdir).first()
-        meta = (int(r["lo"]), int(r["width"]))
-        if mkey is not None:
-            _TEMPORAL_META_CACHE.clear()  # bounded: one standing index at a time
-            _TEMPORAL_META_CACHE[mkey] = meta
-    lo, width = meta
+    def load_meta():
+        r = spark.read.parquet(f"{path}/meta").first()
+        return int(r["lo"]), int(r["width"])
+
+    lo, width = dir_cached("temporal_meta", f"{path}/meta", load_meta)
 
     # read the relation ONCE: every round's filter re-plans against the
     # same cached file index (partition pruning still happens per round at

@@ -434,9 +434,6 @@ def write_ivf_index(
     ).write.mode("overwrite").partitionBy("list_id").parquet(f"{path}/corpus")
 
 
-_CENTROID_FILE_CACHE: dict = {}
-
-
 def ivf_topk_from_index(
     spark,
     path: str,
@@ -455,30 +452,17 @@ def ivf_topk_from_index(
     rank) like ivf_topk.
 
     Centroids are contract-small standing state (nlist vectors), cached
-    driver-side per (path, write time) so repeated query batches skip the
-    parquet read + collect round-trip; an index rewrite invalidates the
-    entry via the directory mtime.
+    driver-side by paths.dir_cached (keyed on the centroid files) so
+    repeated query batches skip the parquet read + collect round-trip;
+    an index rewrite invalidates the entry.
     """
-    import os
+    from .paths import dir_cached
 
     cdir = f"{path}/centroids"
-    try:
-        ckey = (cdir, os.path.getmtime(cdir))
-    except OSError:
-        # Non-local paths (hdfs://, s3://) have no driver-side mtime, so
-        # there is no invalidation signal — skip the cache entirely and
-        # read centroids fresh rather than pinning a never-invalidated
-        # entry that would serve stale centroids after an index rewrite.
-        ckey = None
-    cents = _CENTROID_FILE_CACHE.get(ckey) if ckey is not None else None
-    if cents is None:
-        cents = [
-            (int(r["centroid_id"]), list(r["centroid"]))
-            for r in spark.read.parquet(cdir).collect()
-        ]
-        if ckey is not None:
-            _CENTROID_FILE_CACHE.clear()  # bounded: one standing index at a time
-            _CENTROID_FILE_CACHE[ckey] = cents
+    cents = dir_cached("ivf_centroids", cdir, lambda: [
+        (int(r["centroid_id"]), list(r["centroid"]))
+        for r in spark.read.parquet(cdir).collect()
+    ])
     q = _probe_queries(queries, cents, nprobe, query_id_col, vec_col)
     probed = sorted({r["__cid"] for r in q.select("__cid").distinct().collect()})
     corpus = (

@@ -1,3 +1,5 @@
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -361,10 +363,11 @@ def test_ann_recall_metric(emb):
 
 def test_ivf_index_cache_skipped_without_mtime(spark, tmp_path, monkeypatch):
     """Round-10 ADVICE regression: when the index path has no driver-side
-    mtime (hdfs://, s3:// — simulated by getmtime raising OSError), the
-    centroid cache must be SKIPPED, not keyed to a never-invalidated
-    entry — an index rewrite must be visible to the next query batch."""
-    import os as _os
+    file listing (hdfs://, s3:// — simulated by paths._local_path
+    returning None), the centroid cache must be SKIPPED, not keyed to a
+    never-invalidated entry — an index rewrite must be visible to the
+    next query batch."""
+    from duckpgq_extension_spark.operators import paths as P
     from duckpgq_extension_spark.operators import similarity as sim
 
     emb = (
@@ -374,17 +377,54 @@ def test_ivf_index_cache_skipped_without_mtime(spark, tmp_path, monkeypatch):
     queries = emb.where(F.col("vec_id") < 3)
     idx = str(tmp_path / "ivf_idx_remote")
     sim.write_ivf_index(emb, idx, nlist=8)
-    monkeypatch.setattr(
-        _os.path, "getmtime",
-        lambda p: (_ for _ in ()).throw(OSError("no local mtime")))
-    sim._CENTROID_FILE_CACHE.clear()
+    monkeypatch.setattr(P, "_local_path", lambda p: None)
+    P._DIR_CACHE.pop("ivf_centroids", None)
     first = sim.ivf_topk_from_index(spark, idx, queries, k=3, nprobe=2).collect()
-    assert sim._CENTROID_FILE_CACHE == {}  # nothing pinned under a dead key
+    assert "ivf_centroids" not in P._DIR_CACHE  # nothing pinned under a dead key
     # rewrite the index with different centroids; a fresh call must see it
     sim.write_ivf_index(emb, idx, nlist=4)
     second = sim.ivf_topk_from_index(spark, idx, queries, k=3, nprobe=2)
     assert second.count() > 0  # served from the REWRITTEN index, no stale error
     assert len(first) > 0
+
+
+def test_ivf_index_part_file_rewritten_in_place(spark, tmp_path):
+    """A centroid part file overwritten under its own name leaves the
+    directory's mtime unchanged; the centroid cache is keyed on the
+    files themselves, so the next query batch probes the new centroids."""
+    import glob
+    import shutil
+
+    emb = (
+        spark.read.parquet(f"{SF}/embeddings.parquet")
+        .select("vec_id", F.col("embedding").cast("array<double>").alias("embedding"))
+    )
+    queries = emb.where(F.col("vec_id") < 5)
+
+    def top(path):
+        return sorted(map(tuple, sim.ivf_topk_from_index(
+            spark, path, queries, k=3, nprobe=1).collect()))
+
+    idx, other = str(tmp_path / "idx"), str(tmp_path / "other")
+    sim.write_ivf_index(emb, idx, nlist=8)
+    sim.write_ivf_index(emb, other, nlist=2)
+    stale = top(idx)  # caches idx's centroids
+    (part,) = glob.glob(f"{idx}/centroids/part-*")
+    (src,) = glob.glob(f"{other}/centroids/part-*")
+    mtime = os.path.getmtime(f"{idx}/centroids")
+    for s, d in ((src, part), (_crc(src), _crc(part))):
+        shutil.copyfile(s, d)
+    assert os.path.getmtime(f"{idx}/centroids") == mtime
+    rewritten = top(idx)
+    shutil.copytree(idx, str(tmp_path / "copy"))
+    fresh = top(str(tmp_path / "copy"))  # a path never seen: read from disk
+    assert fresh != stale
+    assert rewritten == fresh
+
+
+def _crc(part):
+    head, name = os.path.split(part)
+    return os.path.join(head, f".{name}.crc")
 
 
 def test_sql_rendered_exprs_bit_identical(emb, spark):

@@ -43,12 +43,15 @@ def norm_rows(cols, rows):
 def main():
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
     only = set(sys.argv[2:])
+    qs = entry_mod.queries()
+    oracles = entry_mod.oracle_sql()
+    unknown = sorted(only - set(qs))
+    if unknown:
+        sys.exit(f"unknown query name(s): {', '.join(unknown)}")
     spark = get_spark(cpus=8, shuffle_partitions=8)
     con = duckdb.connect()
     for t in TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
-    qs = entry_mod.queries()
-    oracles = entry_mod.oracle_sql()
     failures = []
     for name, fn in qs.items():
         if only and name not in only:
@@ -60,9 +63,6 @@ def main():
         except Exception as e:
             failures.append((name, f"SPARK ERROR: {e}"))
             print(f"FAIL  {name}: spark error: {str(e)[:200]}")
-            continue
-        if name not in oracles:
-            print(f"rows  {name}: {len(s_rows)} rows (rows-only check)")
             continue
         try:
             res = con.execute(oracles[name])
