@@ -1,4 +1,5 @@
-"""Whole-graph algorithms as pure-DataFrame iteration.
+"""Whole-graph algorithms: DataFrame iteration, plus a single-task CSR
+route for pagerank, WCC and LCC on graphs that fit one task.
 
 Reference parity:
 - pagerank: damping 0.85, convergence threshold 1e-6 on max per-vertex
@@ -14,26 +15,106 @@ Reference parity:
   deg < 2 (local_clustering_coefficient.cpp:11-70 — note the reference does
   NOT halve because its undirected CSR stores both directions).
 
-Implementation is DataFrame-only (no GraphX): PySpark 4 has no Python
-GraphX binding, and the DataFrame formulation keeps every step inside
-Catalyst/Tungsten with explicit partitioning — edges hash-partitioned by
-src once, ranks/labels co-partitioned, pathops.materialize per iteration to
-truncate lineage.
+The iterative kernels are DataFrame formulations (no GraphX): PySpark 4
+has no Python GraphX binding, and the DataFrame formulation keeps every
+step inside Catalyst/Tungsten with explicit partitioning — edges
+hash-partitioned by src once, ranks/labels co-partitioned,
+pathops.materialize per iteration to truncate lineage.
+
+CSR route: the reference builds a transient CSR and runs pagerank, WCC
+and LCC in one process, where each DataFrame round here pays Spark's
+per-job driver cost.  When the adjacency frame those three kernels read
+from the session cache has at most `spark.duckpgq.csrMaxEdges` rows
+(default CSR_MAX_EDGES; 0 keeps every call on the DataFrame kernels),
+the call is one `mapInArrow` task over the vertex ids and that frame,
+coalesced to one partition (no shuffle), running the numpy kernels of
+operators/csr.py.  The row count comes from the cache, so a warm call
+launches one Spark job.  Every call logs one DEBUG record naming its
+route (`route`, `reason`, `n_vertices`, `n_edges`, `threshold` and
+`seconds` attributes on the package logger).
 """
 
 from __future__ import annotations
 
+import functools
+import logging
 import math
+import time
 import warnings
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from .errors import PGQCapacityError
+from .operators import csr
 from .operators import paths as pathops
 
 DAMPING = 0.85
 TOLERANCE = 1e-6
+
+CSR_MAX_EDGES_CONF = "spark.duckpgq.csrMaxEdges"
+# the CSR route was faster at every size measured up to 6e6 adjacency rows,
+# and a pagerank task over 1e7 rows holds about 1 GB (PERF.md "Single-task
+# CSR route")
+CSR_MAX_EDGES = 6_000_000
+
+_log = logging.getLogger("duckpgq_extension_spark")
+
+
+def _routed(kernel: str, adjacency: DataFrame, keys: list, run_csr, run_spark):
+    """Run `run_csr()` when the cached `adjacency` frame has at most the
+    conf's threshold rows and every frame in `keys` (frame, key columns)
+    has integral keys, else `run_spark()`; both return (frame, vertex
+    count or None).  Logs the call's DEBUG record."""
+    t0 = time.perf_counter()
+    threshold = int(adjacency.sparkSession.conf.get(CSR_MAX_EDGES_CONF, str(CSR_MAX_EDGES)))
+    n_edges = pathops.known_rows(adjacency)
+    if threshold <= 0:
+        reason = "forced"
+    elif not all(pathops.integral_keys(df, cols) for df, cols in keys):
+        reason = "non-integral keys"
+    else:
+        reason = "threshold"
+        n_edges = pathops.row_count(adjacency)
+    route = "csr" if reason == "threshold" and n_edges <= threshold else "spark"
+    out, n_vertices = run_csr() if route == "csr" else run_spark()
+    if _log.isEnabledFor(logging.DEBUG):
+        secs = time.perf_counter() - t0
+        _log.debug(
+            "%s: %s route (%s), %s vertices, %s edges, threshold %d, %.3f s",
+            kernel, route, reason, n_vertices, n_edges, threshold, secs,
+            extra={"kernel": kernel, "route": route, "reason": reason,
+                   "n_vertices": n_vertices, "n_edges": n_edges,
+                   "threshold": threshold, "seconds": secs})
+    return out
+
+
+def _csr_task(vertices: DataFrame, edges: DataFrame, kernel, out: str,
+              w: str = "NULL", sources: DataFrame | None = None) -> DataFrame:
+    """`kernel` (an operators/csr.py function) as one mapInArrow task with
+    output schema `out` over the vertex ids, the (src, dst) edges with
+    weight expression `w` and the optional sources, unioned and coalesced
+    to one partition."""
+    def tagged(df, kind, a, b="NULL", weight="NULL"):
+        return df.selectExpr(f"CAST({kind} AS TINYINT) AS kind", f"CAST({a} AS BIGINT) AS a",
+                             f"CAST({b} AS BIGINT) AS b", f"CAST({weight} AS DOUBLE) AS w")
+
+    rows = tagged(vertices.toDF("vid"), csr.VERTEX, "vid").union(
+        tagged(edges, csr.EDGE, "src", "dst", w))
+    if sources is not None:
+        rows = rows.union(tagged(sources.toDF("vid"), csr.SOURCE, "vid"))
+    return rows.coalesce(1).mapInArrow(kernel, out)
+
+
+_INTEGRAL_WIDTH = ["tinyint", "smallint", "int", "bigint"]
+
+
+def _as_type(df: DataFrame, vid_type: str, *ids: str) -> DataFrame:
+    """`df` with its vertex-id columns `ids` cast from bigint to `vid_type`."""
+    if vid_type == "bigint":
+        return df
+    return df.selectExpr(*(f"CAST({c} AS {vid_type}) AS {c}" if c in ids else c
+                           for c in df.columns))
 
 
 def pagerank(
@@ -71,21 +152,14 @@ def pagerank(
     it dangling, like a vertex with no out-edges.  Identical plan shape:
     out_deg simply becomes the weight sum and each edge carries its
     weight into the contribution join.
+
+    Graphs whose persisted edge frame fits the CSR route (module
+    docstring) run operators/csr.pagerank instead: same modes, ranks
+    equal up to floating-point summation order.
     """
     if sources is not None and phantom_vertices:
         raise ValueError("phantom_vertices is a reference-parity mode; "
                          "it cannot combine with personalized sources")
-    vertices, n = pathops.checkpoint_with_count(vertices.toDF("vid").distinct())
-    real_vertices = vertices
-    if phantom_vertices:
-        max_vid = vertices.agg(F.max("vid")).first()[0] or 0
-        spark = vertices.sparkSession
-        phantoms = spark.range(max_vid + 1, max_vid + 1 + phantom_vertices).select(
-            F.col("id").alias("vid")
-        )
-        vertices, n = pathops.checkpoint_with_count(vertices.unionByName(phantoms))
-    if n == 0:
-        return vertices.withColumn("pagerank", F.lit(0.0))
     parts = pathops.default_parallelism(edges.sparkSession)
     if weight_col is None:
         edges = edges.select("src", "dst", F.lit(1.0).alias("__w"))
@@ -105,6 +179,43 @@ def pagerank(
                 "values; weighted pagerank requires non-negative finite "
                 "edge weights"
             )
+
+    def run_csr():
+        if sources is not None and not sources.toDF("vid").join(
+                vertices.toDF("vid"), "vid", "left_semi").limit(1).count():
+            raise ValueError(_NO_SOURCES)
+        task = functools.partial(csr.pagerank, damping=damping, tol=tol, max_iter=max_iter,
+                                 phantom_vertices=phantom_vertices)
+        ranks = _csr_task(vertices, edges, task, "vid bigint, pagerank double", "__w", sources)
+        # phantom ids are bigint, and a union with them widens the id type
+        vid_type = "bigint" if phantom_vertices else vertices.schema[0].dataType.simpleString()
+        return _as_type(ranks, vid_type, "vid"), None
+
+    keys = [(vertices, vertices.columns[:1]), (edges, ["src", "dst"])]
+    if sources is not None:
+        keys.append((sources, sources.columns[:1]))
+    return _routed("pagerank", edges, keys, run_csr, lambda: _pagerank_spark(
+        edges, vertices, damping, tol, max_iter, phantom_vertices, sources))
+
+
+_NO_SOURCES = ("personalized pagerank needs a non-empty source set that "
+               "intersects the vertex set")
+
+
+def _pagerank_spark(edges, vertices, damping, tol, max_iter, phantom_vertices, sources):
+    """pagerank's DataFrame kernel over the persisted (src, dst, __w)
+    edges; returns (ranks, vertex count)."""
+    vertices, n = pathops.checkpoint_with_count(vertices.toDF("vid").distinct())
+    real_vertices = vertices
+    if phantom_vertices:
+        max_vid = vertices.agg(F.max("vid")).first()[0] or 0
+        spark = vertices.sparkSession
+        phantoms = spark.range(max_vid + 1, max_vid + 1 + phantom_vertices).select(
+            F.col("id").alias("vid")
+        )
+        vertices, n = pathops.checkpoint_with_count(vertices.unionByName(phantoms))
+    if n == 0:
+        return vertices.withColumn("pagerank", F.lit(0.0)), n
     # uniform walk: out_deg = edge count; weighted walk: out_deg = sum of
     # weights (NULLed when <= 0, which makes the vertex dangling below)
     out_deg = (
@@ -128,10 +239,7 @@ def pagerank(
         src_set = sources.toDF("vid").distinct().join(vertices, "vid", "left_semi")
         n_src = src_set.count()
         if n_src == 0:
-            raise ValueError(
-                "personalized pagerank needs a non-empty source set that "
-                "intersects the vertex set"
-            )
+            raise ValueError(_NO_SOURCES)
         with_reset = (
             vertices.join(src_set.withColumn("__s", F.lit(1)), "vid", "left")
             .select(
@@ -209,7 +317,7 @@ def pagerank(
     )
     if phantom_vertices:
         ranks = ranks.join(real_vertices.toDF("vid"), "vid", "left_semi")
-    return ranks.select("vid", F.col("rank").alias("pagerank"))
+    return ranks.select("vid", F.col("rank").alias("pagerank")), n
 
 
 # Adaptive pointer-jumping threshold for WCC: contraction rounds <= this
@@ -293,10 +401,32 @@ def weakly_connected_component(
     in the contracted graph keeps the label it last saw), then re-name
     every component by its minimum in-domain member and union isolated
     domain vertices back in.
+
+    Graphs whose doubled neighbor frame fits the CSR route (module
+    docstring) run operators/csr.weakly_connected_component instead, a
+    union-find with the same naming.
     """
-    vertices = vertices.toDF("vid").distinct()
     und = _doubled_neighbors(edges)  # cached-persisted, shared with lcc etc.
-    parts = pathops.default_parallelism(edges.sparkSession)
+
+    def run_csr():
+        comp = _csr_task(vertices, und, csr.weakly_connected_component,
+                         "vid bigint, component_id bigint")
+        # the DataFrame kernel's union of edge-side and vertex-side ids
+        # widens to the wider of their types
+        vid_type = max(vertices.schema[0].dataType.simpleString(),
+                       und.schema["src"].dataType.simpleString(), key=_INTEGRAL_WIDTH.index)
+        return _as_type(comp, vid_type, "vid", "component_id"), None
+
+    return _routed("weakly_connected_component", und,
+                   [(vertices, vertices.columns[:1]), (und, ["src", "dst"])],
+                   run_csr, lambda: (_wcc_spark(und, vertices), None))
+
+
+def _wcc_spark(und: DataFrame, vertices: DataFrame) -> DataFrame:
+    """weakly_connected_component's DataFrame kernel over the doubled
+    neighbor frame `und`."""
+    vertices = vertices.toDF("vid").distinct()
+    parts = pathops.default_parallelism(und.sparkSession)
     labels = pathops.materialize(
         und.select(F.col("src").alias("vid"))
         .distinct()
@@ -544,9 +674,26 @@ def local_clustering_coefficient(edges: DataFrame, vertices: DataFrame) -> DataF
     deg(v) < 2.  The ordered-pair numerator equals 2 * triangles(v), so we
     compute triangles via the degree-ordered half-edge plan
     (triangle_counts) — O(m^1.5) wedge candidates instead of sum(deg^2).
+    Graphs whose doubled neighbor frame fits the CSR route (module
+    docstring) run the same wedge plan in numpy
+    (operators/csr.local_clustering_coefficient).
     """
-    vertices = vertices.toDF("vid").distinct()
     nbr = _doubled_neighbors(edges)  # cache-owned persist
+
+    def run_csr():
+        lcc = _csr_task(vertices, nbr, csr.local_clustering_coefficient,
+                        "vid bigint, local_clustering_coefficient double")
+        return _as_type(lcc, vertices.schema[0].dataType.simpleString(), "vid"), None
+
+    return _routed("local_clustering_coefficient", nbr,
+                   [(vertices, vertices.columns[:1]), (nbr, ["src", "dst"])],
+                   run_csr, lambda: (_lcc_spark(nbr, vertices), None))
+
+
+def _lcc_spark(nbr: DataFrame, vertices: DataFrame) -> DataFrame:
+    """local_clustering_coefficient's DataFrame kernel over the doubled
+    neighbor frame `nbr`."""
+    vertices = vertices.toDF("vid").distinct()
     deg = nbr.groupBy("src").agg(F.count("*").alias("deg"))
     tri = _triangles_from_nbr(nbr, vertices, deg)
     return (

@@ -363,10 +363,9 @@ def minhash_signatures(
             .agg(F.expr(f"array({sig_terms})").alias("sig"))
         )
 
-    out = pathops.session_cached(
+    return pathops.session_cached(
         base, "minhash", params, 8, lambda: pathops.materialize(build())
     )
-    return build() if out is None else out
 
 
 def _band_frame(sig: DataFrame, num_perm: int, bands: int) -> DataFrame:

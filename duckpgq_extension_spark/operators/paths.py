@@ -74,35 +74,9 @@ def materialize(df: DataFrame, eager: bool = True) -> DataFrame:
     survives executor loss — preferable for long BFS/pagerank runs on a
     1000-executor cluster where losing one executor's local blocks would
     otherwise fail the whole query."""
-    spark = df.sparkSession
-    if spark.conf.get(RELIABLE_CHECKPOINT_CONF, "false").lower() == "true":
+    if df.sparkSession.conf.get(RELIABLE_CHECKPOINT_CONF, "false").lower() == "true":
         return df.checkpoint(eager=eager)
-    try:
-        return df.localCheckpoint(eager=eager)
-    except Exception:
-        if hasattr(df, "_jdf"):
-            raise  # classic py4j session: a real execution error, don't mask
-        # Spark Connect build without localCheckpoint support (it became
-        # server-side API in 4.0; older Connect clients lack it): persist +
-        # count is the API-portable materialization.  It does NOT cut
-        # lineage, so prefer the reliable-checkpoint conf (+ a checkpoint
-        # dir) on Connect for deeply iterative workloads.
-        out = df.persist()
-        if eager:
-            out.count()
-        _bound_connect_persist_residue(out)
-        return out
-
-
-# Connect-fallback persisted frames, oldest first.  Because the fallback
-# does NOT cut lineage, any frame here can be recomputed from its plan, so
-# unpersisting an old one is always correct — just potentially slower.  Keep
-# the most recent few (current + previous level of an iterative kernel plus
-# slack for interleaved kernels) and release the rest so a deep traversal
-# doesn't accumulate one cached copy of the frontier per level for the
-# session lifetime.
-_CONNECT_PERSISTED: list = []
-_CONNECT_PERSIST_KEEP = 8
+    return df.localCheckpoint(eager=eager)
 
 
 def _release(df: DataFrame) -> None:
@@ -112,23 +86,9 @@ def _release(df: DataFrame) -> None:
         pass
 
 
-def _bound_connect_persist_residue(df: DataFrame) -> None:
-    _CONNECT_PERSISTED.append(df)
-    while len(_CONNECT_PERSISTED) > _CONNECT_PERSIST_KEEP:
-        _release(_CONNECT_PERSISTED.pop(0))
-
-
 def default_parallelism(spark) -> int:
-    """Kernel repartition width.  `sparkContext` does not exist on Spark
-    Connect sessions — fall back to the shuffle-partition conf there (the
-    same knob a cluster operator tunes for us)."""
-    try:
-        return spark.sparkContext.defaultParallelism
-    except Exception:  # noqa: BLE001 - Connect session
-        try:
-            return int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
-        except (TypeError, ValueError):  # e.g. "auto" under AQE management
-            return 200
+    """Kernel repartition width."""
+    return spark.sparkContext.defaultParallelism
 
 
 def checkpoint_observed(
@@ -332,12 +292,8 @@ def dir_cached(kind: str, path: str, load):
 def session_cached(df: DataFrame, kind: str, params: tuple, cap: int, build):
     """`build()` once per (params, file fingerprint of `df`, analyzed plan
     of `df`) in df's session, keeping the newest `cap` entries of `kind`.
-    A hit returns the same frame object.  None when `df` cannot be cached
-    (Spark Connect: no _jdf); the caller then builds it uncached."""
-    try:
-        jplan = df._jdf.queryExecution().analyzed()
-    except Exception:
-        return None
+    A hit returns the same frame object."""
+    jplan = df._jdf.queryExecution().analyzed()
     spark = df.sparkSession
     hit = _SESSION_CACHE.get(id(spark))
     if hit is None or hit[0]() is not spark:  # id() reuse after session GC
@@ -383,9 +339,7 @@ def persist_partitioned(
     frame surfaces as UnknownPartitioning and re-shuffles every round
     (see temporal_reachability's adjacency note).  Lineage stays intact,
     so evicting + unpersisting can never break an in-flight query — it
-    just recomputes.  Uncached contexts (Spark Connect) fall back to the
-    bounded persist-residue list, mirroring the per-call lifecycle
-    callers used to manage by hand."""
+    just recomputes.  The build's count is kept for row_count."""
     n = num_partitions or default_parallelism(df.sparkSession)
 
     def build():
@@ -394,14 +348,10 @@ def persist_partitioned(
         # columnar-cache serialization inside its own stages (measured: WCC
         # first run 12.6 s lazy vs 5.1 s eager at sf0.1, r6); one cheap
         # count() job up front keeps every consumer on the fast path
-        out.count()
+        _ROWS[out] = out.count()
         return out
 
-    out = session_cached(df, "persist", (n, key), _ADJ_CACHE_MAX, build)
-    if out is None:
-        out = build()
-        _bound_connect_persist_residue(out)
-    return out
+    return session_cached(df, "persist", (n, key), _ADJ_CACHE_MAX, build)
 
 
 def _prep_edges(edges: DataFrame, num_partitions: int | None) -> DataFrame:
@@ -424,8 +374,26 @@ def _prep_edges(edges: DataFrame, num_partitions: int | None) -> DataFrame:
     def build():
         return materialize(edges.repartition(n, "src"))
 
-    out = session_cached(edges, "prep", (n,), _ADJ_CACHE_MAX, build)
-    return build() if out is None else out
+    return session_cached(edges, "prep", (n,), _ADJ_CACHE_MAX, build)
+
+
+# Row counts of cached frames, by frame object: what the CSR route of
+# algorithms decides on, so that a warm call counts nothing again
+_ROWS: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+
+
+def known_rows(df: DataFrame) -> int | None:
+    """The row count of a cached frame, when one has been taken."""
+    return _ROWS.get(df)
+
+
+def row_count(df: DataFrame) -> int:
+    """The row count of a cached frame: the one its build took, or a
+    count() job the first time it is asked for."""
+    n = _ROWS.get(df)
+    if n is None:
+        n = _ROWS[df] = df.count()
+    return n
 
 
 def bfs_distances(

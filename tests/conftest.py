@@ -1,7 +1,10 @@
+import functools
+
 import pytest
 from pyspark.sql import Row
 
 from duckpgq_extension_spark import PGQSession, get_spark
+from duckpgq_extension_spark.algorithms import CSR_MAX_EDGES_CONF
 
 
 @pytest.fixture(scope="session")
@@ -73,3 +76,24 @@ def pgq(spark):
 def rows(df, *, sort=True):
     out = [tuple(r) for r in df.collect()]
     return sorted(out, key=lambda t: tuple(map(str, t))) if sort else out
+
+
+@pytest.fixture
+def dataframe_route(spark):
+    """pagerank, WCC and LCC on their DataFrame kernels: the CSR route's
+    edge threshold set to 0 for the test."""
+    spark.conf.set(CSR_MAX_EDGES_CONF, "0")
+    yield
+    spark.conf.unset(CSR_MAX_EDGES_CONF)
+
+
+def on_dataframe_route(test):
+    """A copy of `test` run under `dataframe_route`.  The test itself runs
+    with the default threshold, so its small graphs take the CSR route:
+    `test_x_dataframe_route = on_dataframe_route(test_x)` checks the same
+    goldens on both routes."""
+    @functools.wraps(test)
+    def run(*args, **kwargs):
+        return test(*args, **kwargs)
+
+    return pytest.mark.usefixtures("dataframe_route")(run)

@@ -7,7 +7,7 @@ from pyspark.sql import Row
 
 from duckpgq_extension_spark import PGQSession
 
-from .conftest import rows
+from .conftest import on_dataframe_route, rows
 from .test_snb import SNB
 
 
@@ -550,3 +550,29 @@ def test_weighted_pagerank_rejects_negative_weights(spark):
     vertices = spark.createDataFrame([(0,), (1,), (2,)], "vid long")
     with pytest.raises(ValueError, match="negative"):
         pagerank(edges, vertices, weight_col="w")
+
+
+# the goldens above again on the DataFrame kernels (their default route
+# is the CSR route: every graph here is far below its threshold)
+test_pagerank_reference_parity_dataframe_route = on_dataframe_route(
+    test_pagerank_reference_parity)
+test_wcc_single_component_dataframe_route = on_dataframe_route(test_wcc_single_component)
+test_wcc_self_loops_only_dataframe_route = on_dataframe_route(test_wcc_self_loops_only)
+test_wcc_isolated_vertex_dataframe_route = on_dataframe_route(test_wcc_isolated_vertex)
+test_wcc_long_chain_pointer_jumping_dataframe_route = on_dataframe_route(
+    test_wcc_long_chain_pointer_jumping)
+test_lcc_goldens_dataframe_route = on_dataframe_route(test_lcc_goldens)
+test_lcc_empty_graph_dataframe_route = on_dataframe_route(test_lcc_empty_graph)
+test_lcc_star_graph_wedge_bound_dataframe_route = on_dataframe_route(
+    test_lcc_star_graph_wedge_bound)
+test_personalized_pagerank_numpy_golden_dataframe_route = on_dataframe_route(
+    test_personalized_pagerank_numpy_golden)
+test_personalized_pagerank_guards_dataframe_route = on_dataframe_route(
+    test_personalized_pagerank_guards)
+test_ppr_source_validation_dataframe_route = on_dataframe_route(test_ppr_source_validation)
+test_weighted_pagerank_numpy_golden_dataframe_route = on_dataframe_route(
+    test_weighted_pagerank_numpy_golden)
+test_weighted_pagerank_zero_weight_is_dangling_dataframe_route = on_dataframe_route(
+    test_weighted_pagerank_zero_weight_is_dangling)
+test_weighted_pagerank_rejects_negative_weights_dataframe_route = on_dataframe_route(
+    test_weighted_pagerank_rejects_negative_weights)

@@ -20,7 +20,7 @@ from duckpgq_extension_spark import PGQSession, algorithms
 from duckpgq_extension_spark.errors import PGQBinderError, PGQNotImplementedError
 from duckpgq_extension_spark.streaming import events as ev
 
-from .conftest import rows
+from .conftest import on_dataframe_route, rows
 
 
 @pytest.fixture(scope="session")
@@ -148,6 +148,10 @@ def test_wcc_restricted_to_vertex_domain(spark):
     # 4 rows exactly (no row for vertex 0); 1 and 2 connect through 0 but
     # the representative is the min IN-DOMAIN member (0 is never seeded)
     assert got == [(1, 1), (2, 1), (5, 5), (6, 5)]
+
+
+test_wcc_restricted_to_vertex_domain_dataframe_route = on_dataframe_route(
+    test_wcc_restricted_to_vertex_domain)
 
 
 def test_sessionize_microsecond_gap(spark):

@@ -355,6 +355,7 @@ def _operator_names(plan):
     return names
 
 
+@pytest.mark.usefixtures("dataframe_route")  # pins of the DataFrame kernels
 def test_fixpoint_round_plans(spark, tmp_path, monkeypatch):
     """Bellman-Ford and the temporal routes share one union/groupBy-min
     merge: a temporal round has no FullOuter join, and a steady-state
@@ -569,6 +570,7 @@ _KERNEL_PROFILES = {
 }
 
 
+@pytest.mark.usefixtures("dataframe_route")  # pins of the DataFrame kernels
 def test_fixpoint_kernels_keep_rounds_and_jobs(spark, monkeypatch):
     from duckpgq_extension_spark import algorithms as A
     from duckpgq_extension_spark.operators.paths import cheapest_path_distances
@@ -605,6 +607,7 @@ def test_fixpoint_kernels_keep_rounds_and_jobs(spark, monkeypatch):
     assert got == _KERNEL_PROFILES
 
 
+@pytest.mark.usefixtures("dataframe_route")  # pins of the DataFrame kernels
 def test_checkpoint_debug_records(spark, caplog):
     """Each observed checkpoint logs one DEBUG record with its label, wall
     seconds and metrics: pagerank's dangling probe, then one per round."""

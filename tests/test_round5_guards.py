@@ -190,24 +190,8 @@ def test_sql_graph_table_views_dropped_on_analysis_error(spark, pgq):
     assert after == before
 
 
-# ------------------------------------------------- Connect-safe helpers
+# ------------------------------------------------- kernel helpers
 
 
 def test_default_parallelism_classic(spark):
     assert default_parallelism(spark) == spark.sparkContext.defaultParallelism
-
-
-def test_default_parallelism_connect_fallback():
-    class _Conf:
-        def get(self, key, default=None):
-            assert key == "spark.sql.shuffle.partitions"
-            return "17"
-
-    class _FakeConnectSession:
-        conf = _Conf()
-
-        @property
-        def sparkContext(self):  # Spark Connect raises on access
-            raise AttributeError("sparkContext is not supported on Connect")
-
-    assert default_parallelism(_FakeConnectSession()) == 17

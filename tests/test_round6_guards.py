@@ -5,9 +5,6 @@
 - _INFOSCHEMA cache entries are weakref-validated so a recycled id() from
   a garbage-collected session can never serve a stale probe verdict.
 - constraint_foreign_keys schema-qualifies cross-schema referenced tables.
-- materialize()'s Spark Connect persist fallback bounds its cached-frame
-  residue (oldest unpersisted past a keep window).
-- default_parallelism tolerates a non-numeric shuffle-partitions conf.
 """
 
 from __future__ import annotations
@@ -73,65 +70,6 @@ def test_infoschema_cache_hit_for_same_session(spark):
         assert C._infoschema_available(spark, "") is first
     finally:
         C._INFOSCHEMA.pop((id(spark), ""), None)
-
-
-# --------------------------------------- Connect persist residue bound
-
-
-def test_connect_persist_residue_bounded():
-    class _Frame:
-        def __init__(self, log):
-            self.log = log
-            self.released = False
-
-        def unpersist(self):
-            self.released = True
-            self.log.append(self)
-
-    released: list = []
-    P._CONNECT_PERSISTED.clear()
-    try:
-        frames = [_Frame(released) for _ in range(P._CONNECT_PERSIST_KEEP + 3)]
-        for f in frames:
-            P._bound_connect_persist_residue(f)
-        # Oldest 3 released, most recent KEEP retained in order.
-        assert released == frames[:3]
-        assert P._CONNECT_PERSISTED == frames[3:]
-        assert not any(f.released for f in frames[3:])
-    finally:
-        P._CONNECT_PERSISTED.clear()
-
-
-def test_connect_persist_residue_swallows_unpersist_errors():
-    class _Torn:
-        def unpersist(self):
-            raise RuntimeError("session closed")
-
-    P._CONNECT_PERSISTED.clear()
-    try:
-        for _ in range(P._CONNECT_PERSIST_KEEP + 2):
-            P._bound_connect_persist_residue(_Torn())  # must not raise
-        assert len(P._CONNECT_PERSISTED) == P._CONNECT_PERSIST_KEEP
-    finally:
-        P._CONNECT_PERSISTED.clear()
-
-
-# --------------------------------------- non-numeric parallelism conf
-
-
-def test_default_parallelism_non_numeric_conf_falls_back():
-    class _Conf:
-        def get(self, key, default=None):
-            return "auto"  # AQE-managed platforms use sentinel strings
-
-    class _FakeConnectSession:
-        conf = _Conf()
-
-        @property
-        def sparkContext(self):
-            raise AttributeError("sparkContext is not supported on Connect")
-
-    assert P.default_parallelism(_FakeConnectSession()) == 200
 
 
 # --------------------------------------- session adjacency cache
