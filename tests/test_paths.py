@@ -567,12 +567,47 @@ _KERNEL_PROFILES = {
     "hits_fixed": (5, 46, []),
     "hits_tol": (36, 316, [(("hits", 10, 8, 6, 64), 1), (("hits", 8, 12, 6, 84), 16)]),
     "bellman_ford": (6, 29, [(("fix", 4, 1, 6, 22), 1), (("fix", 3, 1, 2, 19), 4)]),
+    # 38 levels: the anti-join's visited union grows one frame per level
+    # and is re-materialized after levels 10, 20 and 30
+    "bfs_chain": (44, 45, [(("ckpt", 2, 2, 2, 16), 1)] + [
+        (("ckpt", 3, 2, 2, n), 1) for n in [*range(20, 37, 2)]
+        + [17, *range(20, 37, 2)] * 2 + [17, *range(20, 35, 2)]]),
+    "bfs_track_paths": (7, 8, [(("ckpt", 2, 2, 2, 17), 1), (("ckpt", 3, 2, 2, 21), 1),
+                               (("ckpt", 3, 2, 2, 23), 1), (("ckpt", 3, 2, 2, 25), 1),
+                               (("ckpt", 3, 2, 2, 27), 1)]),
+    "bfs_k2": (10, 11, [(("ckpt", 2, 2, 2, 19), 1)] + [
+        (("ckpt", 3, 2, 2, n), 1) for n in range(23, 36, 2)]),
+    "bfs_all_shortest": (7, 8, [(("ckpt", 3, 2, 2, 17), 1), (("ckpt", 4, 2, 2, 21), 1),
+                                (("ckpt", 4, 2, 2, 23), 1), (("ckpt", 4, 2, 2, 25), 1),
+                                (("ckpt", 4, 2, 2, 27), 1)]),
+    "all_paths_acyclic": (8, 9, [(("ckpt", 0, 1, 0, 7), 1), (("ckpt", 1, 1, 0, 8), 5)]),
+    "all_paths_trail": (11, 12, [(("ckpt", 0, 1, 0, 7), 1), (("ckpt", 1, 1, 0, 8), 8)]),
+    "all_paths_simple": (8, 9, [(("ckpt", 0, 1, 0, 7), 1), (("ckpt", 1, 1, 0, 9), 5)]),
+    "bidirectional": (20, 21, [
+        (("ckpt", 1, 0, 2, 6), 1), (("bidir", 2, 0, 4, 15), 1),
+        (("ckpt", 3, 2, 2, 20), 1), (("bidir", 5, 2, 2, 24), 1),
+        (("ckpt", 6, 4, 4, 37), 1), (("bidir", 4, 2, 2, 21), 1),
+        (("ckpt", 6, 4, 4, 39), 1), (("bidir", 4, 2, 2, 21), 1),
+        (("ckpt", 6, 4, 4, 41), 1), (("bidir", 4, 2, 2, 21), 1),
+        (("ckpt", 6, 4, 4, 43), 1), (("ckpt", 9, 10, 10, 76), 1),
+        (("bidir", 4, 2, 2, 27), 1), (("ckpt", 6, 4, 4, 37), 1),
+        (("bidir", 4, 2, 2, 27), 1), (("ckpt", 6, 4, 4, 39), 1),
+        (("bidir", 4, 2, 2, 27), 1), (("ckpt", 6, 4, 4, 41), 1)]),
+    "shortest_path_counts": (7, 8, [(("ckpt", 2, 2, 2, 18), 1)] + [
+        (("ckpt", 3, 2, 2, n), 1) for n in range(22, 29, 2)]),
+    "betweenness": (12, 16, [(("ckpt", 0, 0, 2, 5), 1), (("ckpt", 1, 2, 2, 13), 1)] + [
+        (("ckpt", 3, 2, 2, n), 1) for n in range(20, 27, 2)]),
+    "scc": (23, 42, [(("ckpt", 2, 2, 0, 13), 1), (("ckpt", 0, 2, 0, 10), 1),
+                     (("scc", 1, 1, 2, 13), 4), (("ckpt", 3, 3, 2, 20), 5)]),
 }
 
 
 @pytest.mark.usefixtures("dataframe_route")  # pins of the DataFrame kernels
 def test_fixpoint_kernels_keep_rounds_and_jobs(spark, monkeypatch):
+    import functools
+
     from duckpgq_extension_spark import algorithms as A
+    from duckpgq_extension_spark.operators import paths as P
     from duckpgq_extension_spark.operators.paths import cheapest_path_distances
 
     ring = [(0, 1), (1, 2), (2, 0), (2, 3), (3, 4), (4, 2), (1, 5), (3, 1)]
@@ -597,11 +632,36 @@ def test_fixpoint_kernels_keep_rounds_and_jobs(spark, monkeypatch):
     # WCC's job count under AQE varies run to run with stage timing; with
     # AQE off the plan alone fixes it (a chain long enough for the
     # skeleton rounds)
+    ided = spark.createDataFrame(
+        [(s, d, i) for i, (s, d) in enumerate(ring)], "src long, dst long, edge_id long")
+    sources = spark.createDataFrame([(0,), (3,)], "src long")
+    pairs = spark.createDataFrame(
+        [(0, 4), (4, 5), (1, 1), (5, 0)], "src long, dst long")
+    # the frontier kernels (paths.frontier_loop), and WCC: job counts
+    # under AQE vary run to run with stage timing; with AQE off the plan
+    # alone fixes them (a chain long enough for the skeleton rounds and
+    # for the every-10-levels visited re-materialize)
+    frontier_kernels = {
+        "wcc_chain": lambda: A.weakly_connected_component(
+            chain, spark.range(39).toDF("vid")),
+        "bfs_chain": lambda: P.bfs_distances(chain),
+        "bfs_track_paths": lambda: P.bfs_distances(ided, sources, track_paths=True),
+        "bfs_k2": lambda: P.bfs_distances(ided, sources, track_paths=True, k=2),
+        "bfs_all_shortest": lambda: P.bfs_distances(
+            ided, sources, track_paths=True, all_shortest=True, max_rows=1000),
+        **{f"all_paths_{m.lower()}": functools.partial(
+            P.bfs_all_paths, ided, sources, mode=m, max_rows=1000)
+           for m in ("ACYCLIC", "TRAIL", "SIMPLE")},
+        "bidirectional": lambda: P.bidirectional_length(edges, pairs),
+        "shortest_path_counts": lambda: A.shortest_path_counts(edges, sources),
+        "betweenness": lambda: A.betweenness_centrality(edges, verts),
+        "scc": lambda: A.strongly_connected_component(edges, verts),
+    }
     aqe = spark.conf.get("spark.sql.adaptive.enabled")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try:
-        got["wcc_chain"] = _kernel_profile(spark, monkeypatch, lambda: A.weakly_connected_component(
-            chain, spark.range(39).toDF("vid")).collect())
+        for name, run in frontier_kernels.items():
+            got[name] = _kernel_profile(spark, monkeypatch, lambda: run().collect())
     finally:
         spark.conf.set("spark.sql.adaptive.enabled", aqe)
     assert got == _KERNEL_PROFILES
