@@ -45,7 +45,6 @@ import warnings
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from .errors import PGQCapacityError
 from .operators import csr
 from .operators import paths as pathops
 
@@ -1126,6 +1125,21 @@ def strongly_connected_component(edges: DataFrame, vertices: DataFrame) -> DataF
             )
         )
 
+    def reach(frontier, members, level):  # one backward level, same color
+        return (
+            frontier.alias("f")
+            .join(live.alias("e"), F.col("f.vid") == F.col("e.dst"))
+            .join(
+                colors.alias("c"),
+                (F.col("e.src") == F.col("c.vid"))
+                & (F.col("c.color") == F.col("f.color")),
+                "left_semi",
+            )
+            .select(F.col("f.color").alias("color"), F.col("e.src").alias("vid"))
+            .dropDuplicates(["color", "vid"])
+            .join(members, ["color", "vid"], "left_anti")
+        )
+
     changed = (
         F.sum(F.when(F.col("color") != F.col("__old"), 1).otherwise(0))
         .alias("changed"),
@@ -1188,29 +1202,12 @@ def strongly_connected_component(edges: DataFrame, vertices: DataFrame) -> DataF
             )
             # -- step 2: batched backward reach from every root, same color
             # member rows are (color, vid): vid reaches its color root
-            members = pathops.materialize(
-                colors.where(F.col("vid") == F.col("color")).select("color", "vid")
+            members, _ = pathops.frontier_loop(
+                pathops.materialize(
+                    colors.where(F.col("vid") == F.col("color")).select("color", "vid")
+                ),
+                reach, label="scc",
             )
-            frontier = members
-            while True:
-                step = (
-                    frontier.alias("f")
-                    .join(live.alias("e"), F.col("f.vid") == F.col("e.dst"))
-                    .join(
-                        colors.alias("c"),
-                        (F.col("e.src") == F.col("c.vid"))
-                        & (F.col("c.color") == F.col("f.color")),
-                        "left_semi",
-                    )
-                    .select(F.col("f.color").alias("color"), F.col("e.src").alias("vid"))
-                    .dropDuplicates(["color", "vid"])
-                    .join(members, ["color", "vid"], "left_anti")
-                )
-                step, n_new = pathops.checkpoint_with_count(step)
-                if not n_new:
-                    break
-                members = pathops.materialize(members.unionByName(step))
-                frontier = step
             scc = members.groupBy("color").agg(F.min("vid").alias("scc_id"))
             found = members.join(scc, "color").select("vid", "scc_id")
             out = found if out is None else out.unionByName(found)
@@ -2294,6 +2291,19 @@ def eccentricity(edges: DataFrame, seeds: DataFrame) -> DataFrame:
     return distance_report(edges, seeds).select("vid", "eccentricity", "reached")
 
 
+def _sigma_level(edges: DataFrame, frontier: DataFrame, visited: DataFrame) -> DataFrame:
+    """One level of the geodesic-counting BFS (shortest_path_counts and
+    the betweenness forward pass): the (src, dst) pairs first reached
+    from `frontier`, each with sigma = the sum of its predecessors'."""
+    return (
+        frontier.alias("f")
+        .join(edges.alias("e"), F.col("f.dst") == F.col("e.src"))
+        .groupBy(F.col("f.src").alias("src"), F.col("e.dst").alias("dst"))
+        .agg(F.sum("f.sigma").alias("sigma"))
+        .join(visited.select("src", "dst"), ["src", "dst"], "left_anti")
+    )
+
+
 def shortest_path_counts(
     edges: DataFrame, seeds: DataFrame, max_hops: int | None = None
 ) -> DataFrame:
@@ -2319,7 +2329,7 @@ def shortest_path_counts(
     # betweenness_centrality and every BFS kernel over the same edge plan,
     # so running the family back-to-back builds it once
     edges = pathops._prep_edges(edges.select("src", "dst"), None)
-    frontier = pathops.materialize(
+    seed = pathops.materialize(
         seeds.toDF("vid").distinct().select(
             F.col("vid").alias("src"),
             F.col("vid").alias("dst"),
@@ -2327,27 +2337,13 @@ def shortest_path_counts(
             F.lit(1).cast("decimal(38,0)").alias("sigma"),
         )
     )
-    visited = frontier
-    level = 0
-    while True:
-        if max_hops is not None and level >= max_hops:
-            break
-        level += 1
-        nxt = (
-            frontier.alias("f")
-            .join(edges.alias("e"), F.col("f.dst") == F.col("e.src"))
-            .groupBy(F.col("f.src").alias("src"), F.col("e.dst").alias("dst"))
-            .agg(F.sum("f.sigma").alias("sigma"))
-            .join(visited.select("src", "dst"), ["src", "dst"], "left_anti")
-            .select("src", "dst", F.lit(level).alias("dist"), "sigma")
-        )
-        nxt, n_new = pathops.checkpoint_with_count(nxt)
-        if not n_new:
-            break
-        visited = visited.unionByName(nxt)
-        if level % 10 == 0:
-            visited = pathops.materialize(visited)
-        frontier = nxt
+
+    def step(frontier, visited, level):
+        return _sigma_level(edges, frontier, visited).select(
+            "src", "dst", F.lit(level).alias("dist"), "sigma")
+
+    visited, _ = pathops.frontier_loop(
+        seed, step, label="pathcounts", max_hops=max_hops)
     return visited.select(
         "src", "dst", "dist", F.col("sigma").cast("long").alias("sigma")
     )
@@ -2447,39 +2443,18 @@ def betweenness_centrality(
                     "sample_sources=None for the exact sum.",
                     stacklevel=2,
                 )
-    levels = [frontier]
-    visited = frontier.select("src", "dst")
-    level = 0
-    state_rows = 0
-    while True:
-        if max_hops is not None and level >= max_hops:
-            break
-        level += 1
-        nxt = (
-            frontier.alias("f")
-            .join(edges.alias("e"), F.col("f.dst") == F.col("e.src"))
-            .groupBy(F.col("f.src").alias("src"), F.col("e.dst").alias("dst"))
-            .agg(F.sum("f.sigma").alias("sigma"))
-            .join(visited, ["src", "dst"], "left_anti")
-        )
-        nxt, n_new = pathops.checkpoint_with_count(nxt)
-        if not n_new:
-            break
-        state_rows += n_new
-        if max_state_rows is not None and state_rows > max_state_rows:
-            raise PGQCapacityError(
-                f"betweenness_centrality exceeded max_state_rows="
-                f"{max_state_rows} at level {level} ({state_rows} "
-                "(source, vertex) state rows): the seed set is too large "
-                "for this graph.  Use a SAMPLED seed set (source-sampled "
-                "Brandes estimator), bound the traversal with max_hops, "
-                "or pass max_state_rows=None on a cluster sized for it."
-            )
-        visited = visited.unionByName(nxt.select("src", "dst"))
-        if level % 10 == 0:
-            visited = pathops.materialize(visited)
-        levels.append(nxt)
-        frontier = nxt
+
+    cap = pathops.LevelCap(
+        "betweenness_centrality", "max_state_rows", max_state_rows,
+        "(source, vertex) state rows",
+        "the seed set is too large for this graph.  Use a SAMPLED seed set "
+        "(source-sampled Brandes estimator), bound the traversal with "
+        "max_hops, or pass max_state_rows=None on a cluster sized for it.",
+    )
+    _, levels = pathops.frontier_loop(
+        frontier, lambda f, visited, _: _sigma_level(edges, f, visited),
+        label="betweenness", max_hops=max_hops, cap=cap, keep=("src", "dst"),
+    )
     # backward accumulation, deepest level first.  Round 10: each level's
     # delta frame CARRIES that level's sigma (src, vid, sigma, delta) —
     # the delta frame at step L is exactly the level-L+1 pair set, so

@@ -335,9 +335,9 @@ def _round_plans(monkeypatch, run):
     plans = []
     real = paths.materialize
 
-    def record(df, eager=True):
+    def record(df):
         plans.append(df._jdf.queryExecution().executedPlan().toString())
-        return real(df, eager)
+        return real(df)
 
     monkeypatch.setattr(paths, "materialize", record)
     run()
@@ -528,9 +528,9 @@ def _kernel_profile(spark, monkeypatch, run):
     calls = []
     real = paths.materialize
 
-    def count(df, eager=True):
+    def count(df):
         calls.append(1)
-        return real(df, eager)
+        return real(df)
 
     monkeypatch.setattr(paths, "materialize", count)
     dag = spark.sparkContext._jsc.sc().dagScheduler()
@@ -551,10 +551,12 @@ def _kernel_profile(spark, monkeypatch, run):
     return len(calls), jobs, [(r, len(list(g))) for r, g in itertools.groupby(rounds)]
 
 
-# Measured on the hand-rolled loops the round driver replaced: moving a
-# kernel onto `paths.fixpoint` must keep its rounds, jobs and round plans.
-# pagerank and k_core count their vertex frame in its checkpoint job (the
-# leading "ckpt" round), not in a separate count() job.
+# Measured on the hand-rolled loops the round drivers replaced: moving a
+# kernel onto `paths.fixpoint` or `paths.frontier_loop` must keep its
+# rounds, jobs and round plans.  pagerank and k_core count their vertex
+# frame in its checkpoint job (the leading "ckpt" round), not in a
+# separate count() job.  The SCC backward reach no longer re-materializes
+# its members set per level (one job and one materialize less per level).
 _KERNEL_PROFILES = {
     "pagerank_tol": (40, 272, [(("ckpt", 0, 0, 2, 6), 1), (("pr", 2, 1, 2, 20), 1),
                                (("pr", 4, 3, 4, 36), 2), (("pr", 5, 3, 4, 38), 36)]),
@@ -569,36 +571,36 @@ _KERNEL_PROFILES = {
     "bellman_ford": (6, 29, [(("fix", 4, 1, 6, 22), 1), (("fix", 3, 1, 2, 19), 4)]),
     # 38 levels: the anti-join's visited union grows one frame per level
     # and is re-materialized after levels 10, 20 and 30
-    "bfs_chain": (44, 45, [(("ckpt", 2, 2, 2, 16), 1)] + [
-        (("ckpt", 3, 2, 2, n), 1) for n in [*range(20, 37, 2)]
+    "bfs_chain": (44, 45, [(("bfs", 2, 2, 2, 16), 1)] + [
+        (("bfs", 3, 2, 2, n), 1) for n in [*range(20, 37, 2)]
         + [17, *range(20, 37, 2)] * 2 + [17, *range(20, 35, 2)]]),
-    "bfs_track_paths": (7, 8, [(("ckpt", 2, 2, 2, 17), 1), (("ckpt", 3, 2, 2, 21), 1),
-                               (("ckpt", 3, 2, 2, 23), 1), (("ckpt", 3, 2, 2, 25), 1),
-                               (("ckpt", 3, 2, 2, 27), 1)]),
-    "bfs_k2": (10, 11, [(("ckpt", 2, 2, 2, 19), 1)] + [
-        (("ckpt", 3, 2, 2, n), 1) for n in range(23, 36, 2)]),
-    "bfs_all_shortest": (7, 8, [(("ckpt", 3, 2, 2, 17), 1), (("ckpt", 4, 2, 2, 21), 1),
-                                (("ckpt", 4, 2, 2, 23), 1), (("ckpt", 4, 2, 2, 25), 1),
-                                (("ckpt", 4, 2, 2, 27), 1)]),
-    "all_paths_acyclic": (8, 9, [(("ckpt", 0, 1, 0, 7), 1), (("ckpt", 1, 1, 0, 8), 5)]),
-    "all_paths_trail": (11, 12, [(("ckpt", 0, 1, 0, 7), 1), (("ckpt", 1, 1, 0, 8), 8)]),
-    "all_paths_simple": (8, 9, [(("ckpt", 0, 1, 0, 7), 1), (("ckpt", 1, 1, 0, 9), 5)]),
-    "bidirectional": (20, 21, [
-        (("ckpt", 1, 0, 2, 6), 1), (("bidir", 2, 0, 4, 15), 1),
-        (("ckpt", 3, 2, 2, 20), 1), (("bidir", 5, 2, 2, 24), 1),
-        (("ckpt", 6, 4, 4, 37), 1), (("bidir", 4, 2, 2, 21), 1),
-        (("ckpt", 6, 4, 4, 39), 1), (("bidir", 4, 2, 2, 21), 1),
-        (("ckpt", 6, 4, 4, 41), 1), (("bidir", 4, 2, 2, 21), 1),
-        (("ckpt", 6, 4, 4, 43), 1), (("ckpt", 9, 10, 10, 76), 1),
-        (("bidir", 4, 2, 2, 27), 1), (("ckpt", 6, 4, 4, 37), 1),
-        (("bidir", 4, 2, 2, 27), 1), (("ckpt", 6, 4, 4, 39), 1),
-        (("bidir", 4, 2, 2, 27), 1), (("ckpt", 6, 4, 4, 41), 1)]),
-    "shortest_path_counts": (7, 8, [(("ckpt", 2, 2, 2, 18), 1)] + [
-        (("ckpt", 3, 2, 2, n), 1) for n in range(22, 29, 2)]),
-    "betweenness": (12, 16, [(("ckpt", 0, 0, 2, 5), 1), (("ckpt", 1, 2, 2, 13), 1)] + [
-        (("ckpt", 3, 2, 2, n), 1) for n in range(20, 27, 2)]),
-    "scc": (23, 42, [(("ckpt", 2, 2, 0, 13), 1), (("ckpt", 0, 2, 0, 10), 1),
-                     (("scc", 1, 1, 2, 13), 4), (("ckpt", 3, 3, 2, 20), 5)]),
+    "bfs_track_paths": (7, 8, [(("bfs", 2, 2, 2, 17), 1)] + [
+        (("bfs", 3, 2, 2, n), 1) for n in range(21, 28, 2)]),
+    "bfs_k2": (10, 11, [(("bfs", 2, 2, 2, 19), 1)] + [
+        (("bfs", 3, 2, 2, n), 1) for n in range(23, 36, 2)]),
+    "bfs_all_shortest": (7, 8, [(("bfs", 3, 2, 2, 17), 1)] + [
+        (("bfs", 4, 2, 2, n), 1) for n in range(21, 28, 2)]),
+    "all_paths_acyclic": (8, 9, [(("allpaths", 0, 1, 0, 7), 1), (("allpaths", 1, 1, 0, 8), 5)]),
+    "all_paths_trail": (11, 12, [(("allpaths", 0, 1, 0, 7), 1), (("allpaths", 1, 1, 0, 8), 8)]),
+    "all_paths_simple": (8, 9, [(("allpaths", 0, 1, 0, 7), 1), (("allpaths", 1, 1, 0, 9), 5)]),
+    # seeds, then side levels alternating with meet merges; an exhausted
+    # side's empty level is not merged into its visited set
+    "bidirectional": (20, 21, [(("ckpt", 1, 0, 2, 6), 1)] + [
+        (("bidir", *r), 1) for r in [
+            (2, 0, 4, 15), (3, 2, 2, 20), (5, 2, 2, 24), (6, 4, 4, 37),
+            (4, 2, 2, 21), (6, 4, 4, 39), (4, 2, 2, 21), (6, 4, 4, 41),
+            (4, 2, 2, 21), (6, 4, 4, 43), (9, 10, 10, 76), (4, 2, 2, 26),
+            (6, 4, 4, 37), (4, 2, 2, 26), (6, 4, 4, 39), (4, 2, 2, 26),
+            (6, 4, 4, 41)]]),
+    "shortest_path_counts": (7, 8, [(("pathcounts", 2, 2, 2, 18), 1)] + [
+        (("pathcounts", 3, 2, 2, n), 1) for n in range(22, 29, 2)]),
+    "betweenness": (12, 16, [(("ckpt", 0, 0, 2, 5), 1), (("betweenness", 1, 2, 2, 13), 1)] + [
+        (("betweenness", 3, 2, 2, n), 1) for n in range(20, 27, 2)]),
+    # trim, colouring rounds, then the backward reach, whose members set
+    # is a union of checkpointed levels
+    "scc": (19, 38, [(("ckpt", 2, 2, 0, 13), 1), (("ckpt", 0, 2, 0, 10), 1),
+                     (("scc", 1, 1, 2, 13), 4)] + [
+        (("scc", 3, 3, 2, n), 1) for n in (20, 22, 23, 24, 25)]),
 }
 
 
@@ -681,3 +683,48 @@ def test_checkpoint_debug_records(spark, caplog):
     recs = [r for r in caplog.records if getattr(r, "label", None) == "pr"]
     assert [sorted(r.metrics) for r in recs] == [["n_dang"]] + [["delta"]] * 4
     assert all(r.seconds >= 0 and r.name == "duckpgq_extension_spark" for r in recs)
+
+
+def test_frontier_levels_log_kernel_labels(spark, caplog):
+    """Each BFS level is one observed checkpoint, logged at DEBUG under
+    the kernel's own label with the level's row count; the last record
+    is the empty level that stops the loop."""
+    import logging
+
+    from duckpgq_extension_spark import algorithms as A
+    from duckpgq_extension_spark.operators.paths import bfs_distances
+
+    edges = spark.createDataFrame([(i, i + 1) for i in range(5)], "src long, dst long")
+    seeds = spark.createDataFrame([(0,)], "vid long")
+
+    def records(run):
+        caplog.clear()
+        with caplog.at_level(logging.DEBUG, logger="duckpgq_extension_spark"):
+            run()
+        return [(r.label, r.metrics["n"]) for r in caplog.records
+                if r.getMessage().startswith("checkpoint ")]
+
+    levels = [1, 1, 1, 1, 1, 0]
+    assert records(lambda: bfs_distances(edges, seeds).collect()) == [
+        ("bfs", n) for n in levels]
+    # the seed frame's count, then the forward pass
+    assert records(lambda: A.betweenness_centrality(edges, seeds).collect()) == [
+        ("ckpt", 1)] + [("betweenness", n) for n in levels]
+
+
+def test_bidirectional_long_chain_plan_stops_growing(spark, monkeypatch):
+    """A point query over a 25-edge chain expands one side 25 levels: the
+    length is exact, and the visited set's re-materialize every
+    VISITED_EVERY levels keeps the per-level expansion plan from growing
+    past its level-10 size."""
+    from duckpgq_extension_spark.operators.paths import VISITED_EVERY, bidirectional_length
+
+    chain = spark.createDataFrame([(i, i + 1) for i in range(25)], "src long, dst long")
+    pair = spark.createDataFrame([(0, 25)], "src long, dst long")
+    got = []
+    plans = _round_plans(monkeypatch, lambda: got.extend(
+        bidirectional_length(chain, pair).collect()))
+    assert [tuple(r) for r in got] == [(0, 25, 25)]
+    sizes = [len(_operator_names(p)) for p in plans if "LeftAnti" in p]
+    assert len(sizes) == 25
+    assert max(sizes[VISITED_EVERY:]) <= max(sizes[:VISITED_EVERY]), sizes
