@@ -1,26 +1,42 @@
 """Benchmark harness: runs the headline queries at $SPARK_GRAFT_SF_DIR
-(default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints ONE
-JSON line:
+(default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS], then the
+scale tiers (sf1 = 10x, sf10 = 100x; SPARK_GRAFT_SF1=0 / SPARK_GRAFT_SF10=0
+skip one), and prints ONE JSON line:
 
     {"metric": "...", "value": N, "unit": "sec", "queries": {...}, "sf": ...}
 
 Query set: one representative per operator class of SURVEY.md §2 —
 fixed-length match (1-3 hops), variable-length {1,2}, ANY SHORTEST,
 pagerank/wcc/lcc, summarize, plus the pipeline operators (dedup,
-similarity, text, as-of, windows).  Each timing is the median of REPS
-full executions (count() actions) per BASELINE.md §B's median-of-N
-protocol; the first (cold) run is reported alongside.  The Spark session
-and the testdata views are warmed once before timing so we measure the
-operators, not session startup.
+similarity, text, as-of, windows).
+
+One timing protocol for every tier (`measure`).  A unit is one query,
+one CONCURRENT_GROUPS group or one SNB query.  It runs one cold pass,
+recorded under `<tier>_cold` and left out of the median, then REPS timed
+passes; Spark blocks are released before every pass.  A row whose spread
+(max - min) is above UNSTABLE_ABOVE of its median gets up to EXTRA_REPS
+more passes, and is listed under `<tier>_unstable` if it stays above.  A
+cold pass above the tier's single-pass bound is the row's only pass
+(passes 1, spread null).  Every row records its median (`<tier>`), spread
+(`<tier>_spread`) and pass count (`<tier>_passes`); no reading replaces
+another.  Each tier runs in fresh Spark sessions, one every K units
+(TIERS), warmed untimed so the numbers measure the operators, not
+session startup.  SPARK_GRAFT_BENCH_ONLY=q1,q2 restricts every tier to
+those queries and writes no BENCH_local file.
 """
 
 from __future__ import annotations
 
+import functools
 import gc
 import json
 import os
+import statistics
+import subprocess
 import sys
 import time
+from concurrent.futures import ThreadPoolExecutor
+from typing import NamedTuple
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
@@ -154,14 +170,14 @@ BENCH_QUERIES = [
     "temporal_reach_index",
 ]
 
-
-# BASELINE.md §B's protocol is median-of-5 wall-clock; a single cold shot
-# per query is hostage to JIT warmup, page-cache state and host noise
-# (measured: identical code, same data, totals 55 s -> 196 s across runs).
-# Median-of-REPS per query keeps the recorded number a property of the
-# PLAN, not of the minute it ran in; REPS=3 keeps the whole bench under
-# ~5 min (set SPARK_GRAFT_BENCH_REPS=5 for the full protocol).
-REPS = int(os.environ.get("SPARK_GRAFT_BENCH_REPS", "3"))
+# The protocol (module docstring): a cold pass, then REPS timed passes;
+# a row whose spread is above UNSTABLE_ABOVE of its median gets up to
+# EXTRA_REPS more.  Spread (max - min) never shrinks as passes are added,
+# so the extra passes buy a median that tolerates two outliers; the row
+# leaves the unstable list only if that median rises.
+REPS = 3
+EXTRA_REPS = 2
+UNSTABLE_ABOVE = 0.5
 
 # FROZEN as of round 11 (VERDICT r10 "What's wrong" 1): this list may not
 # grow or shrink again — a membership change moves the headline total with
@@ -175,12 +191,13 @@ REPS = int(os.environ.get("SPARK_GRAFT_BENCH_REPS", "3"))
 # the same measured effect that makes the composed centrality_report
 # (4 kernels) 2.6x faster than running them back-to-back.  Semantics and
 # result hashes are untouched (every query still runs exactly its own
-# plan); what changes is the accounting: `queries` records each member's
-# thread-wall latency UNDER CONCURRENCY, `concurrent_groups` records the
-# group wall, and the bench total counts each group ONCE by its wall —
-# the number a user running the suite actually waits.  Groups pair
+# plan); what changes is the accounting: each member's row is its
+# thread-wall latency UNDER CONCURRENCY, the group's wall is the row named
+# "member+member", and the bench total counts each group ONCE by its wall
+# — the number a user running the suite actually waits.  Groups pair
 # kernels of similar depth/duration so no member idles long after the
-# others finish.  Disable with SPARK_GRAFT_BENCH_CONCURRENCY=0.
+# others finish.  A group runs as one unit in every tier that holds two or
+# more of its members.
 CONCURRENT_GROUPS: list[tuple[str, ...]] = [
     ("pagerank", "personalized_pagerank"),
     ("hits", "eigenvector", "katz"),
@@ -194,15 +211,6 @@ CONCURRENT_GROUPS: list[tuple[str, ...]] = [
     # the profile the group protocol was built for.
     ("cheapest_path", "cheapest_path_vertices", "match_cheapest"),
 ]
-
-# Queries whose sf0.1 median lands above this are re-measured in FRESH
-# sessions at the end (median-of-3): >5 s kernels showed 5.4-7.7 s warm
-# swings inside a long session (temporal_latest, BENCH_r08 vs PERF.md),
-# which reads as round-over-round regression when it is session history.
-# The re-measured fresh number replaces the in-run one in `queries` (and
-# the original is kept under `tail_in_run`), so PERF.md and BENCH agree
-# on a reproducible protocol.  Disable with SPARK_GRAFT_TAIL_REMEASURE=0.
-TAIL_REMEASURE_ABOVE = 5.0
 
 # LDBC SNB SF0.003 headline queries (BASELINE.md §B; reference
 # test/sql/snb/snb.test:55-130 and bi.test:57-62).  Fixed scale — the SNB
@@ -288,22 +296,22 @@ SNB_QUERIES = {
     "snb_is3": _snb_is3,
 }
 
+
+@functools.lru_cache(maxsize=1)
+def _snb_graph(spark):
+    """The SNB graph of one session, built by the first SNB unit's cold
+    pass (left out of the median, like EQ.setup's untimed warm-up)."""
+    return _snb_setup(spark)
+
+
 # Order-of-magnitude scale tier: 10x id-shifted replication of sf0.1
 # written as real parquet (tools/make_scale_tier.py), so the same entry
 # queries run the full path — scan, pushdown, graph DDL — at 10x data.
-# The section reports wall seconds AND the growth factor vs this run's
+# The tier reports wall seconds AND the growth factor vs this run's
 # sf0.1 median: sub-linear growth (<10x at 10x data) is the direct
 # evidence that the iterative kernels are floor-bound at sf0.1 and
 # amortize with scale; anything super-linear is a red flag.  Generated
-# on first use (~3 s, 177 MB, gitignored); disable with
-# SPARK_GRAFT_SF1=0.  Timing protocol: ADAPTIVE reps — two timed passes
-# per query, a third only when the first two disagree by >25%, report
-# the median.  Rationale (round 8): single-shot tier numbers swung with
-# host load (cheapest_path recorded 38.6 s in r06 and 71.9 s in r07;
-# isolated fresh-session runs the same day measured 42/26/30 s), and a
-# fixed median-of-3 across the tier would add ~5 min for queries that
-# repeat within noise anyway.  The adaptive rule pays the third run
-# only where the signal needs it.
+# on first use (~3 s, 177 MB, gitignored).
 SF1_DIR = os.path.join(os.path.dirname(os.path.abspath(__file__)),
                        "data", "scale", "sf1")
 SF1_QUERIES = [
@@ -343,13 +351,13 @@ SF1_QUERIES = [
 
 # 100x tier (sf10, ~1.7 GB — orders 15M / lineitem 60M / documents 500k):
 # the official second-decade record, promoted from PERF.md's one-off
-# sweep sessions (round-8, VERDICT item 7).  Same adaptive-rep protocol
-# as sf1.  The set is the heaviest queries whose sf10 single pass lands
-# under ~80 s (PERF.md two-decade tables) so the tier costs ~10 min of
-# bench wall; the four genuinely-long kernels (dedup_clusters 693 s,
+# sweep sessions (round-8, VERDICT item 7).  The set is the heaviest
+# queries whose sf10 single pass lands under ~80 s (PERF.md two-decade
+# tables); the four genuinely-long kernels (dedup_clusters 693 s,
 # betweenness 217 s, k_truss 141 s, wcc 104 s at sf10) stay PERF.md
-# one-offs — re-paying 3x their wall every round buys no new signal.
-# Disable with SPARK_GRAFT_SF10=0.
+# one-offs — re-paying 4x their wall every round buys no new signal.
+# cheapest_path runs last (~3 min at sf10, so one pass); its growth
+# factor comes out of the sf1 tier either way.
 SF10_DIR = os.path.join(os.path.dirname(os.path.abspath(__file__)),
                         "data", "scale", "sf10")
 SF10_QUERIES = [
@@ -371,37 +379,130 @@ SF10_QUERIES = [
 ]
 
 
+class Tier(NamedTuple):
+    key: str  # record key of the tier's medians; `<key>_spread` etc.
+    queries: list[str]
+    refresh_every: int  # a fresh session every K units
+    data_dir: str | None = None  # None: $SPARK_GRAFT_SF_DIR
+    scale: int = 1  # x the sf0.1 main tier, generated on first use
+    switch: str | None = None  # env var; "0" skips the tier
+    # a cold pass above this many seconds is the row's only pass: repeating
+    # a minutes-long kernel buys noise reduction the growth factor does not
+    # need at that magnitude, and keeps the tier's wall bounded
+    single_pass_above: float | None = None
+    # units past this tier wall are dropped and named, never silently absent
+    budget_s: float | None = None
+    growth: tuple[str, str] | None = None  # (record key, base tier key)
+
+
+# Fresh sessions every K units: after ~25 queries' passes the JVM's
+# codegen-cache + storage-block history inflates later queries 20-50%
+# (measured round 5: k_truss 17.9 s at position 59 vs 3.9 s fresh; sf1
+# pagerank 66 s late-session vs 19 s fresh, pipeline_corpus 85 s at
+# position 15 vs 31 s), so each number measures the PLAN, not the
+# unit's position in the list.  The scale tiers run only when the main
+# tier is sf0.1.
+TIERS = [
+    Tier("queries", BENCH_QUERIES, 25),
+    Tier("sf1", SF1_QUERIES, 5, SF1_DIR, 10, "SPARK_GRAFT_SF1",
+         single_pass_above=90, growth=("sf1_growth_at_10x", "queries")),
+    Tier("sf10", SF10_QUERIES, 3, SF10_DIR, 100, "SPARK_GRAFT_SF10",
+         single_pass_above=60, budget_s=600,
+         growth=("sf10_growth_at_10x_vs_sf1", "sf1")),
+]
+
+# Rows timed by another action than count().  The noop sink computes
+# every output column.  Under count() Catalyst drops dedup_paragraphs'
+# owner aggregate and both its joins (optimized plan: 0 joins, 1
+# aggregate, against 2 and 2), since no joined column is read and the
+# left join cannot change the row count.
+ACTIONS = {
+    "dedup_paragraphs": lambda df: df.write.format("noop").mode("overwrite").save(),
+}
+
+
+def measure(name, run, *, single_pass_above=None, release=lambda: None,
+            clock=time.perf_counter):
+    """Time one unit under the bench protocol (module docstring).
+
+    `run(clock)` executes the unit once: a group returns its members'
+    thread walls `{member: seconds}`, a single query None.  Every pass
+    also times the whole unit as row `name`.  `clock` is a parameter only
+    so a test can pass a fake.  Returns `{row: {"median", "spread",
+    "passes", "cold", "unstable"}}`; extra passes run while any row of
+    the unit is above the unstable ratio."""
+
+    def one_pass():
+        release()
+        t0 = clock()
+        rows = run(clock) or {}
+        rows[name] = clock() - t0
+        return rows
+
+    cold = one_pass()
+    if single_pass_above is not None and cold[name] > single_pass_above:
+        return {row: {"median": round(t, 3), "spread": None, "passes": 1,
+                      "cold": round(t, 3), "unstable": False}
+                for row, t in cold.items()}
+    passes = [one_pass() for _ in range(REPS)]
+
+    def unstable(row):
+        ts = [p[row] for p in passes]
+        return max(ts) - min(ts) > UNSTABLE_ABOVE * statistics.median(ts)
+
+    while len(passes) < REPS + EXTRA_REPS and any(map(unstable, cold)):
+        passes.append(one_pass())
+    out = {}
+    for row, c in cold.items():
+        ts = [p[row] for p in passes]
+        out[row] = {"median": round(statistics.median(ts), 3),
+                    "spread": round(max(ts) - min(ts), 3), "passes": len(ts),
+                    "cold": round(c, 3), "unstable": unstable(row)}
+    return out
+
+
+def _units(queries: list[str], snb: bool):
+    """The units of one tier, in query order: (name, {row: query}), where
+    a query is `(spark, data_dir) -> DataFrame`.  A CONCURRENT_GROUPS
+    group with two or more members in the tier is one unit named
+    "a+b", placed at its first member."""
+    present = set(queries)
+    group_of = {}
+    for g in CONCURRENT_GROUPS:
+        g = tuple(q for q in g if q in present)
+        if len(g) >= 2:
+            group_of.update(dict.fromkeys(g, g))
+    units, seen = [], set()
+    for q in queries:
+        if q not in seen:
+            g = group_of.get(q, (q,))
+            seen.update(g)
+            units.append(("+".join(g), {m: EQ.QUERIES[m] for m in g}))
+    if snb:
+        units += [(n, {n: lambda spark, _d, fn=fn: fn(_snb_graph(spark))})
+                  for n, fn in SNB_QUERIES.items()]
+    return units
+
+
 def main() -> None:
-    global BENCH_QUERIES, SF1_QUERIES, SF10_QUERIES
     only = os.environ.get("SPARK_GRAFT_BENCH_ONLY")
-    if only:
-        # debug filter: comma-separated query names; restricts every tier
-        # to the intersection (for measuring one query through the real
-        # harness protocol without paying the full bench)
-        keep = {q.strip() for q in only.split(",")}
-        BENCH_QUERIES = [q for q in BENCH_QUERIES if q in keep]
-        SF1_QUERIES = [q for q in SF1_QUERIES if q in keep]
-        SF10_QUERIES = [q for q in SF10_QUERIES if q in keep]
+    keep = {q.strip() for q in only.split(",")} if only else None
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = float(os.path.basename(sf_dir.rstrip("/")).replace("sf", "") or 0.1)
-    spark = get_spark(app_name="duckpgq_spark_bench")
-    # warm up: register views + build the property graph (not timed)
-    EQ.setup(spark, sf_dir)
-    # ...and warm the execution machinery once (not timed): a fixed-hop
-    # match (codegen + broadcast-join paths) and one BFS level (the
-    # checkpoint/Observation kernel).  On a freshly booted host the first
-    # queries otherwise pay JVM JIT + parquet footer reads — measured
-    # match_1hop cold 11.2 s vs 2.5 s median on the same session; without
-    # this the first BENCH_QUERIES entries charge session warmup to their
-    # median while later ones do not.
-    EQ.QUERIES["match_1hop"](spark, sf_dir).count()
-    EQ.QUERIES["var_length_1_2"](
-        spark, os.path.join(os.path.dirname(sf_dir.rstrip("/")), "sf0.001")
-    ).count()
-    # CRITICAL: the sf0.001 warmup re-pointed every temp view at the small
-    # dataset (createOrReplaceTempView); re-register the bench scale or
-    # every timed query silently measures sf0.001.
-    EQ.setup(spark, sf_dir, force=True)
+    spark = None
+    data_dir = sf_dir
+
+    def fresh_session():
+        # untimed: views + property graph, then one fixed-hop match (codegen
+        # + broadcast-join paths; on a freshly booted host the first query
+        # otherwise pays JVM JIT + parquet footer reads)
+        nonlocal spark
+        if spark is not None:
+            spark.stop()
+        spark = get_spark(app_name="duckpgq_spark_bench")
+        EQ.setup(spark, data_dir, force=True)
+        EQ.QUERIES["match_1hop"](spark, data_dir).count()
+
     def release_blocks():
         # release the dropped query's localCheckpoint/persist blocks NOW:
         # Python gc drops the py4j handles, then a JVM gc lets Spark's
@@ -411,329 +512,87 @@ def main() -> None:
         gc.collect()
         spark.sparkContext._jvm.System.gc()
 
-    def timed(run) -> tuple[float, float, int]:
-        """(median, cold_first_run, rows) over REPS executions."""
-        runs, n = [], 0
-        for _ in range(REPS):
-            t0 = time.perf_counter()
-            n = run()
-            runs.append(time.perf_counter() - t0)
-            release_blocks()
-        med = sorted(runs)[len(runs) // 2]
-        return round(med, 3), round(runs[0], 3), n
+    def run_unit(members, clock):
+        def one(q):
+            t0 = clock()
+            df = members[q](spark, data_dir)
+            ACTIONS.get(q, lambda d: d.count())(df)
+            return q, clock() - t0
 
-    def timed_group(names: tuple[str, ...]):
-        """Run a concurrency group: all members launched together on
-        threads (Spark schedules their jobs into each other's barrier
-        gaps), REPS passes.  Returns per-member thread-wall medians,
-        per-member cold walls, the group-wall median, and row counts."""
-        from concurrent.futures import ThreadPoolExecutor
+        if len(members) == 1:
+            one(*members)
+            return None
+        # members on threads: Spark schedules their jobs into each other's
+        # barrier gaps (CONCURRENT_GROUPS)
+        with ThreadPoolExecutor(len(members)) as ex:
+            return dict(ex.map(one, members))
 
-        per: dict[str, list[float]] = {n: [] for n in names}
-        walls: list[float] = []
-        rows: dict[str, int] = {}
-
-        def one(name):
-            fn = EQ.QUERIES[name]
-            t0 = time.perf_counter()
-            r = fn(spark, sf_dir).count()
-            return name, time.perf_counter() - t0, r
-
-        for _ in range(REPS):
-            release_blocks()
-            t0 = time.perf_counter()
-            with ThreadPoolExecutor(len(names)) as ex:
-                for name, dt, r in ex.map(one, names):
-                    per[name].append(dt)
-                    rows[name] = r
-            walls.append(time.perf_counter() - t0)
-        med = {n: round(sorted(v)[len(v) // 2], 3) for n, v in per.items()}
-        cold_g = {n: round(v[0], 3) for n, v in per.items()}
-        return med, cold_g, round(sorted(walls)[len(walls) // 2], 3), rows
-
-    concurrency_on = os.environ.get("SPARK_GRAFT_BENCH_CONCURRENCY", "1") != "0"
-    bench_set = set(BENCH_QUERIES)
-    groups = [
-        tuple(q for q in g if q in bench_set)
-        for g in (CONCURRENT_GROUPS if concurrency_on else [])
-    ]
-    groups = [g for g in groups if len(g) >= 2]
-    group_of = {q: g for g in groups for q in g}
-    group_walls: dict[str, float] = {}  # "+".join(names) -> wall median
-
-    timings: dict[str, float] = {}
-    cold: dict[str, float] = {}
-    done: set[str] = set()
-    for i, name in enumerate(BENCH_QUERIES):
-        if name in done:
-            continue
-        if i and i % 25 == 0:
-            # Session refresh (untimed), same rationale as the sf1 tier's
-            # fresh session below: after ~25 queries x REPS the JVM's
-            # codegen-cache + storage-block history inflates later
-            # queries 20-50% (measured round 5: k_truss 17.9 s at
-            # position 59 vs 3.9 s fresh-session, harmonic 4.7 vs 2.7).
-            # Restarting every 25 makes each median a property of the
-            # PLAN, not of the query's position in the list.
-            spark.stop()
-            spark = get_spark(app_name=f"duckpgq_spark_bench_{i}")
-            EQ.setup(spark, sf_dir, force=True)
-            EQ.QUERIES["match_1hop"](spark, sf_dir).count()
-        g = group_of.get(name)
-        if g is not None:
-            med, cold_g, wall, rows = timed_group(g)
-            timings.update(med)
-            cold.update(cold_g)
-            group_walls["+".join(g)] = wall
-            done.update(g)
-            print(
-                f"# group {'+'.join(g)}: wall {wall}s | "
-                + ", ".join(f"{q} {med[q]}s ({rows[q]} rows)" for q in g),
-                file=sys.stderr,
-            )
-            continue
-        fn = EQ.QUERIES[name]
-        med, c, n = timed(lambda: fn(spark, sf_dir).count())
-        timings[name], cold[name] = med, c
-        done.add(name)
-        print(f"# {name}: median {med}s / cold {c}s ({n} rows)", file=sys.stderr)
-    # SNB SF0.003 headline queries (graph build untimed, like EQ.setup)
-    if os.path.isdir(SNB_DIR):
-        snb = _snb_setup(spark)
-        for name, fn in SNB_QUERIES.items():
-            med, c, n = timed(lambda: fn(snb).count())
-            timings[name], cold[name] = med, c
-            print(f"# {name}: median {med}s / cold {c}s ({n} rows)", file=sys.stderr)
-
-    # fresh-session re-measure of the >5 s tail (see TAIL_REMEASURE_ABOVE):
-    # ungrouped tail queries re-run solo; a group with any member in the
-    # tail re-runs as a group (same concurrency protocol, fresh session)
-    tail_in_run: dict[str, float] = {}
-    if os.environ.get("SPARK_GRAFT_TAIL_REMEASURE", "1") != "0":
-        tail_solo = [
-            q for q in BENCH_QUERIES
-            if timings.get(q, 0) > TAIL_REMEASURE_ABOVE and q not in group_of
-        ]
-        tail_groups = [
-            g for g in groups
-            if any(timings.get(q, 0) > TAIL_REMEASURE_ABOVE for q in g)
-        ]
-        units: list = tail_solo + tail_groups
-        for j, unit in enumerate(units):
-            if j % 4 == 0:
-                spark.stop()
-                spark = get_spark(app_name=f"duckpgq_spark_bench_tail_{j}")
-                EQ.setup(spark, sf_dir, force=True)
-                EQ.QUERIES["match_1hop"](spark, sf_dir).count()
-            if isinstance(unit, tuple):
-                med, _, wall, _ = timed_group(unit)
-                for q in unit:
-                    tail_in_run[q] = timings[q]
-                timings.update(med)
-                group_walls["+".join(unit)] = wall
-                print(
-                    f"# tail group {'+'.join(unit)}: fresh wall {wall}s | "
-                    + ", ".join(f"{q} {med[q]}s" for q in unit),
-                    file=sys.stderr,
-                )
-            else:
-                fn = EQ.QUERIES[unit]
-                med, _, n = timed(lambda: fn(spark, sf_dir).count())
-                tail_in_run[unit] = timings[unit]
-                timings[unit] = med
-                print(
-                    f"# tail {unit}: fresh median {med}s "
-                    f"(was {tail_in_run[unit]}s in-run)",
-                    file=sys.stderr,
-                )
-
-    # total = what a user waits for the whole suite: every ungrouped
-    # query's median plus each concurrency group counted ONCE by its wall
-    total = sum(v for q, v in timings.items() if q not in group_of)
-    total += sum(group_walls.values())
-    def timed_adaptive(run, single_pass_above=None) -> tuple[float, int]:
-        """Tier protocol: two passes; a third only if they disagree by
-        >25%; report the median of the passes taken (see SF1 comment).
-        A first pass longer than `single_pass_above` seconds is recorded
-        as-is — repeating a 3-minute kernel buys noise reduction the
-        growth-factor signal doesn't need at that magnitude, and keeps
-        the tier's wall bounded."""
-        runs, n = [], 0
-        for _ in range(2):
-            release_blocks()
-            t0 = time.perf_counter()
-            n = run()
-            runs.append(time.perf_counter() - t0)
-            # the tier-wall bound only makes sense after the FIRST pass
-            # (after the second, the work is already spent and the check
-            # was dead code — ADVICE r8); a long second pass still gets
-            # the disagreement-triggered third below
-            if len(runs) == 1 and single_pass_above and runs[0] > single_pass_above:
-                return round(runs[0], 3), n
-        # sub-resolution timings (min == 0) can't disagree meaningfully
-        if min(runs) > 0 and abs(runs[0] - runs[1]) / min(runs) > 0.25:
-            release_blocks()
-            t0 = time.perf_counter()
-            n = run()
-            runs.append(time.perf_counter() - t0)
-        runs.sort()
-        med = runs[1] if len(runs) == 3 else (runs[0] + runs[1]) / 2
-        return round(med, 3), n
-
-    def timed_median3(run, single_pass_above=None) -> tuple[float, int, float | None]:
-        """sf1-tier protocol (VERDICT r10 item 9 / r9 item 7): exact
-        median-of-3 like the sf0.1 suite, because the sf1 rows feed the
-        convergence tables and adaptive-2 left them noisier than the
-        numbers they are compared against.  Returns (median, rows,
-        spread) where spread = max-min across the passes — the recorded
-        variance.  A first pass above `single_pass_above` seconds is
-        still recorded as-is (same wall-bound rationale as
-        timed_adaptive), with spread None: one pass measures none."""
-        runs, n = [], 0
-        for _ in range(3):
-            release_blocks()
-            t0 = time.perf_counter()
-            n = run()
-            runs.append(time.perf_counter() - t0)
-            if len(runs) == 1 and single_pass_above and runs[0] > single_pass_above:
-                return round(runs[0], 3), n, None
-        runs.sort()
-        return round(runs[1], 3), n, round(runs[-1] - runs[0], 3)
-
-    def run_tier(tier_name, tier_dir, tier_queries, refresh_every,
-                 budget_s=None, single_pass_above=None, median3=False,
-                 spread_out=None):
-        """Run a scale tier in fresh sessions (see the rationale comments
-        at SF1_QUERIES): restart the session every `refresh_every`
-        queries so each number measures the PLAN, not the session's
-        codegen/storage-block history (measured: sf1 pagerank 66 s
-        late-session vs 19 s fresh, pipeline_corpus 85 s at position 15
-        vs 31 s fresh-session)."""
-        nonlocal spark
-        out: dict[str, float] = {}
-        growth: dict[str, float] = {}
-        tier_t0 = time.perf_counter()
-        spark.stop()
-        spark = get_spark(app_name=f"duckpgq_spark_bench_{tier_name}")
-        EQ.setup(spark, tier_dir, force=True)
-        EQ.QUERIES["match_1hop"](spark, tier_dir).count()  # warm the tier
-        for j, name in enumerate(tier_queries):
-            if budget_s and time.perf_counter() - tier_t0 > budget_s:
-                # no silent caps: name what the budget dropped
-                print(
-                    f"# {tier_name} tier wall budget ({budget_s}s) reached;"
-                    f" dropped: {tier_queries[j:]}",
-                    file=sys.stderr,
-                )
-                break
-            if j and j % refresh_every == 0:
-                spark.stop()
-                spark = get_spark(
-                    app_name=f"duckpgq_spark_bench_{tier_name}_{j}"
-                )
-                EQ.setup(spark, tier_dir, force=True)
-                EQ.QUERIES["match_1hop"](spark, tier_dir).count()
-            fn = EQ.QUERIES[name]
-            if median3:
-                out[name], n, spr = timed_median3(
-                    lambda: fn(spark, tier_dir).count(),
-                    single_pass_above=single_pass_above,
-                )
-                if spread_out is not None:
-                    spread_out[name] = spr
-            else:
-                out[name], n = timed_adaptive(
-                    lambda: fn(spark, tier_dir).count(),
-                    single_pass_above=single_pass_above,
-                )
-            if timings.get(name):
-                growth[name] = round(out[name] / timings[name], 2)
-            print(
-                f"# {tier_name} {name}: {out[name]}s ({n} rows, "
-                f"{growth.get(name, '?')}x vs sf0.1 median)",
-                file=sys.stderr,
-            )
-        return out, growth
-
-    # sf1 scale tier (growth factors vs this run's sf0.1 medians)
-    sf1: dict[str, float] = {}
-    sf1_growth: dict[str, float] = {}
-    if os.environ.get("SPARK_GRAFT_SF1", "1") != "0" and abs(sf - 0.1) < 1e-9:
-        if not os.path.isdir(SF1_DIR):
-            from tools.make_scale_tier import make_scale_tier
-
-            make_scale_tier(10, sf_dir, SF1_DIR)
-        sf1_spread: dict[str, float | None] = {}
-        sf1, sf1_growth = run_tier("sf1", SF1_DIR, SF1_QUERIES, 5,
-                                    single_pass_above=90, median3=True,
-                                    spread_out=sf1_spread)
-    # sf10 scale tier (second decade, growth vs this run's sf1 numbers)
-    sf10: dict[str, float] = {}
-    sf10_growth: dict[str, float] = {}
-    if os.environ.get("SPARK_GRAFT_SF10", "1") != "0" and abs(sf - 0.1) < 1e-9:
-        if not os.path.isdir(SF10_DIR):
-            from tools.make_scale_tier import make_scale_tier
-
-            make_scale_tier(100, sf_dir, SF10_DIR)
-        # wall budget: the tier is scale EVIDENCE, not the primary
-        # record (sf0.1 medians are); 10 min of second-decade signal is
-        # the right spend per round, and queries past the budget are
-        # named in stderr, never silently absent.  cheapest_path runs
-        # LAST and single-pass (~3 min at sf10): its one-off sweeps
-        # live in PERF.md and its growth factor comes out of the sf1
-        # tier either way.
-        sf10, _ = run_tier("sf10", SF10_DIR, SF10_QUERIES, 3,
-                           budget_s=int(os.environ.get(
-                               "SPARK_GRAFT_SF10_BUDGET", "600")),
-                           single_pass_above=60)
-        sf10_growth = {
-            k: round(v / sf1[k], 2) for k, v in sf10.items() if sf1.get(k)
-        }
-    # Record provenance (VERDICT r10 item 2): which core count and which
-    # commit produced this record — without these, a later scaling run at a
-    # different SPARK_GRAFT_CPUS is indistinguishable from the headline run.
     from duckpgq_extension_spark.session import DEFAULT_CPUS as _CPUS
 
-    try:
-        import subprocess
-
-        _sha = subprocess.run(
-            ["git", "rev-parse", "--short", "HEAD"],
-            cwd=os.path.dirname(os.path.abspath(__file__)),
-            capture_output=True, text=True, timeout=10,
-        ).stdout.strip() or None
-    except Exception:  # noqa: BLE001 - no git / not a checkout
-        _sha = None
     full = {
         "metric": "total_bench_wall_clock",
-        "value": round(total, 3),
+        "value": None,  # the main tier's total, set below
         "unit": "sec",
-        "protocol": f"median_of_{REPS}",
+        "protocol": f"cold_pass_then_median_of_{REPS}_to_{REPS + EXTRA_REPS}",
         "cpus": _CPUS,
-        "git_sha": _sha,
-        "queries": timings,
-        "queries_cold": cold,
+        "git_sha": _git_sha(),
         "sf": sf,
     }
-    if group_walls:
-        full["concurrent_groups"] = group_walls
-    if tail_in_run:
-        full["tail_in_run"] = tail_in_run
-    if sf1:
-        full["sf1"] = sf1
-        full["sf1_growth_at_10x"] = sf1_growth
-        full["sf1_protocol"] = "median_of_3_fresh_sessions"
-        full["sf1_spread"] = sf1_spread
-    if sf10:
-        full["sf10"] = sf10
-        full["sf10_growth_at_10x_vs_sf1"] = sf10_growth
+    total = 0.0
+    for tier in TIERS:
+        if tier.switch and (os.environ.get(tier.switch, "1") == "0"
+                            or abs(sf - 0.1) > 1e-9):
+            continue
+        data_dir = tier.data_dir or sf_dir
+        if not os.path.isdir(data_dir):
+            from tools.make_scale_tier import make_scale_tier
+
+            make_scale_tier(tier.scale, sf_dir, data_dir)
+        queries = [q for q in tier.queries if keep is None or q in keep]
+        main_tier = tier.data_dir is None
+        units = _units(queries, snb=main_tier and os.path.isdir(SNB_DIR))
+        rec = {f: {} for f in ("median", "cold", "spread", "passes", "unstable")}
+        tier_t0 = time.perf_counter()
+        for j, (name, members) in enumerate(units):
+            if tier.budget_s and time.perf_counter() - tier_t0 > tier.budget_s:
+                dropped = [q for _, m in units[j:] for q in m]
+                full[f"{tier.key}_dropped"] = dropped
+                print(f"# {tier.key} tier wall budget ({tier.budget_s}s) "
+                      f"reached; dropped: {dropped}", file=sys.stderr)
+                break
+            if j % tier.refresh_every == 0:
+                fresh_session()
+            got = measure(name, functools.partial(run_unit, members),
+                          single_pass_above=tier.single_pass_above,
+                          release=release_blocks)
+            total += got[name]["median"] if main_tier else 0.0
+            for row, r in got.items():
+                for field, v in r.items():
+                    rec[field][row] = v
+                print(f"# {tier.key} {row}: median {r['median']}s spread "
+                      f"{r['spread']}s passes {r['passes']} cold {r['cold']}s"
+                      + (" UNSTABLE" if r["unstable"] else ""), file=sys.stderr)
+        full[tier.key] = rec["median"]
+        for field in ("cold", "spread", "passes"):
+            full[f"{tier.key}_{field}"] = rec[field]
+        full[f"{tier.key}_unstable"] = [r for r, u in rec["unstable"].items() if u]
+        if tier.growth:
+            key, base = tier.growth
+            full[key] = {q: round(m / full[base][q], 2)
+                         for q, m in rec["median"].items()
+                         if full.get(base, {}).get(q)}
+    if spark is not None:
+        spark.stop()
+    # total = what a user waits for the whole main tier: every unit's wall
+    # median, so a concurrency group counts ONCE
+    full["value"] = round(total, 3)
     # Full record (incl. cold timings) to stderr for PERF.md bookkeeping,
     # AND to BENCH_local.json in the repo — the driver's BENCH_r{N}.json
     # keeps only a 2000-char stdout tail, so the on-disk copy is the
     # single non-truncated source every per-query median is traceable to
     # (VERDICT r9 "What's wrong" 2).
     print(json.dumps(full), file=sys.stderr)
-    if os.environ.get("SPARK_GRAFT_BENCH_ONLY"):
+    if only:
         # debug-subset run: never clobber the full-bench record on disk
         print("# BENCH_local.json not written (subset run)", file=sys.stderr)
     else:
@@ -756,25 +615,35 @@ def main() -> None:
     # The driver records only a 2000-char TAIL of stdout (BENCH_r4.parsed
     # was null because the 63-query + cold dict blew past it and the JSON
     # got front-truncated).  Emit a compact line as the LAST stdout line:
-    # medians at 2 decimals, no cold dict; if still too long, keep only the
-    # slowest queries so the line always fits whole in the tail.
-    compact = dict(full, queries={k: round(v, 2) for k, v in timings.items()})
-    compact.pop("queries_cold")
-    if sf1:
-        compact["sf1"] = {k: round(v, 2) for k, v in sf1.items()}
-    if sf10:
-        compact["sf10"] = {k: round(v, 2) for k, v in sf10.items()}
+    # medians at 2 decimals, no cold/spread/passes dicts; if still too
+    # long, keep only the slowest main-tier rows so the line fits whole.
+    compact = {k: v for k, v in full.items()
+               if not k.endswith(("_cold", "_spread", "_passes"))}
+    for tier in TIERS:
+        if tier.key in compact:
+            compact[tier.key] = {k: round(v, 2) for k, v in full[tier.key].items()}
     line = json.dumps(compact, separators=(",", ":"))
-    for keep in (40, 30, 22, 15):
+    for n in (40, 30, 22, 15):
         if len(line) <= 1900:
             break
-        slowest = dict(
-            sorted(timings.items(), key=lambda kv: -kv[1])[:keep]
-        )
-        compact["queries"] = {k: round(v, 2) for k, v in slowest.items()}
-        compact["queries_truncated_to_slowest"] = len(slowest)
+        slowest = sorted(full["queries"].items(), key=lambda kv: -kv[1])[:n]
+        compact["queries"] = {k: round(v, 2) for k, v in slowest}
+        compact["queries_truncated_to_slowest"] = n
         line = json.dumps(compact, separators=(",", ":"))
     print(line)
+
+
+def _git_sha():
+    """Record provenance (VERDICT r10 item 2): the commit that produced
+    this record, None outside a git checkout."""
+    try:
+        return subprocess.run(
+            ["git", "rev-parse", "--short", "HEAD"],
+            cwd=os.path.dirname(os.path.abspath(__file__)),
+            capture_output=True, text=True, timeout=10,
+        ).stdout.strip() or None
+    except Exception:  # noqa: BLE001 - no git / not a checkout
+        return None
 
 
 if __name__ == "__main__":

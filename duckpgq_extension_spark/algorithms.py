@@ -1094,7 +1094,8 @@ def strongly_connected_component(edges: DataFrame, vertices: DataFrame) -> DataF
     joins/groupBys over frames partitioned by the propagation key;
     nothing is collected.
     """
-    vertices = pathops.materialize(vertices.toDF("vid").distinct())
+    vertices, n_remaining = pathops.checkpoint_with_count(
+        vertices.toDF("vid").distinct())
     parts = pathops.default_parallelism(edges.sparkSession)
     all_edges = (
         edges.select("src", "dst")
@@ -1104,7 +1105,6 @@ def strongly_connected_component(edges: DataFrame, vertices: DataFrame) -> DataF
         .persist()
     )
     remaining = vertices
-    n_remaining = remaining.count()
     out = None
     live = None  # this outer round's trimmed edge set
 
@@ -1212,10 +1212,8 @@ def strongly_connected_component(edges: DataFrame, vertices: DataFrame) -> DataF
             found = members.join(scc, "color").select("vid", "scc_id")
             out = found if out is None else out.unionByName(found)
             out = pathops.materialize(out)
-            remaining = pathops.materialize(
-                remaining.join(out.select("vid"), "vid", "left_anti")
-            )
-            n_remaining = remaining.count()
+            remaining, n_remaining = pathops.checkpoint_with_count(
+                remaining.join(out.select("vid"), "vid", "left_anti"))
         if out is None:
             return vertices.select("vid", F.col("vid").alias("scc_id")).limit(0)
         return out

@@ -596,11 +596,13 @@ _KERNEL_PROFILES = {
         (("pathcounts", 3, 2, 2, n), 1) for n in range(22, 29, 2)]),
     "betweenness": (12, 16, [(("ckpt", 0, 0, 2, 5), 1), (("betweenness", 1, 2, 2, 13), 1)] + [
         (("betweenness", 3, 2, 2, n), 1) for n in range(20, 27, 2)]),
-    # trim, colouring rounds, then the backward reach, whose members set
-    # is a union of checkpointed levels
-    "scc": (19, 38, [(("ckpt", 2, 2, 0, 13), 1), (("ckpt", 0, 2, 0, 10), 1),
-                     (("scc", 1, 1, 2, 13), 4)] + [
-        (("scc", 3, 3, 2, n), 1) for n in (20, 22, 23, 24, 25)]),
+    # the vertex count, trim, colouring rounds, the backward reach (whose
+    # members set is a union of checkpointed levels), then the count of
+    # the remaining vertices; both counts ride their checkpoint's job
+    "scc": (19, 36, [(("ckpt", 0, 0, 2, 5), 1), (("ckpt", 2, 2, 0, 13), 1),
+                     (("ckpt", 0, 2, 0, 10), 1), (("scc", 1, 1, 2, 13), 4)] + [
+        (("scc", 3, 3, 2, n), 1) for n in (20, 22, 23, 24, 25)] + [
+        (("ckpt", 1, 1, 0, 7), 1)]),
 }
 
 
