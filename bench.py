@@ -615,12 +615,12 @@ def main() -> None:
     # The driver records only a 2000-char TAIL of stdout (BENCH_r4.parsed
     # was null because the 63-query + cold dict blew past it and the JSON
     # got front-truncated).  Emit a compact line as the LAST stdout line:
-    # medians at 2 decimals, no cold/spread/passes dicts; if still too
-    # long, keep only the slowest main-tier rows so the line fits whole.
-    compact = {k: v for k, v in full.items()
-               if not k.endswith(("_cold", "_spread", "_passes"))}
+    # each tier's medians at 2 decimals and no other per-row dict (cold,
+    # spread, passes, growth); if still too long, keep only the slowest
+    # main-tier rows so the line fits whole.
+    compact = {k: v for k, v in full.items() if not isinstance(v, dict)}
     for tier in TIERS:
-        if tier.key in compact:
+        if tier.key in full:
             compact[tier.key] = {k: round(v, 2) for k, v in full[tier.key].items()}
     line = json.dumps(compact, separators=(",", ":"))
     for n in (40, 30, 22, 15):
