@@ -1,8 +1,9 @@
 """Time every bench query's DuckDB oracle at a given scale (default
 sf0.1, 32 threads) — the denominator of PERF.md's Spark-vs-DuckDB table.
 
-Median-of-REPS per query (same protocol as bench.py), one fresh
-connection per query so nothing is cached across queries.  Slow oracles
+Median of ORACLE_REPS runs per query (default 3), each in a fresh
+connection so nothing is cached across runs; unlike bench.py there is no
+separate cold pass, so the first run counts toward the median.  Slow oracles
 (the unrolled iterative CTEs: pagerank at sf0.1 ran 447 s in round 2)
 are interrupted at TIMEOUT seconds via con.interrupt() and reported as
 ">Ns" — the comparison point is then a lower bound on the oracle's cost.
