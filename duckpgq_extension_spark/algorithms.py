@@ -1,5 +1,6 @@
-"""Whole-graph algorithms: DataFrame iteration, plus a single-task CSR
-route for pagerank, WCC and LCC on graphs that fit one task.
+"""Whole-graph algorithms: DataFrame iteration, plus the single-task CSR
+route (shared with the path kernels) for pagerank, WCC and LCC on graphs
+that fit one task.
 
 Reference parity:
 - pagerank: damping 0.85, convergence threshold 1e-6 on max per-vertex
@@ -21,25 +22,17 @@ step inside Catalyst/Tungsten with explicit partitioning — edges
 hash-partitioned by src once, ranks/labels co-partitioned,
 pathops.materialize per iteration to truncate lineage.
 
-CSR route: the reference builds a transient CSR and runs pagerank, WCC
-and LCC in one process, where each DataFrame round here pays Spark's
-per-job driver cost.  When the adjacency frame those three kernels read
-from the session cache has at most `spark.duckpgq.csrMaxEdges` rows
-(default CSR_MAX_EDGES; 0 keeps every call on the DataFrame kernels),
-the call is one `mapInArrow` task over the vertex ids and that frame,
-coalesced to one partition (no shuffle), running the numpy kernels of
-operators/csr.py.  The row count comes from the cache, so a warm call
-launches one Spark job.  Every call logs one DEBUG record naming its
-route (`route`, `reason`, `n_vertices`, `n_edges`, `threshold` and
-`seconds` attributes on the package logger).
+CSR route: graphs whose cached adjacency fits one task run pagerank,
+WCC and LCC as one `mapInArrow` task over the vertex ids and that frame
+(operators/csr.py), on the route the path kernels share
+(operators/paths.routed: one threshold, `spark.duckpgq.csrMaxEdges`, and
+one DEBUG record per call naming the route).
 """
 
 from __future__ import annotations
 
 import functools
-import logging
 import math
-import time
 import warnings
 
 from pyspark.sql import DataFrame, Window
@@ -51,69 +44,7 @@ from .operators import paths as pathops
 DAMPING = 0.85
 TOLERANCE = 1e-6
 
-CSR_MAX_EDGES_CONF = "spark.duckpgq.csrMaxEdges"
-# the CSR route was faster at every size measured up to 6e6 adjacency rows,
-# and a pagerank task over 1e7 rows holds about 1 GB (PERF.md "Single-task
-# CSR route")
-CSR_MAX_EDGES = 6_000_000
-
-_log = logging.getLogger("duckpgq_extension_spark")
-
-
-def _routed(kernel: str, adjacency: DataFrame, keys: list, run_csr, run_spark):
-    """Run `run_csr()` when the cached `adjacency` frame has at most the
-    conf's threshold rows and every frame in `keys` (frame, key columns)
-    has integral keys, else `run_spark()`; both return (frame, vertex
-    count or None).  Logs the call's DEBUG record."""
-    t0 = time.perf_counter()
-    threshold = int(adjacency.sparkSession.conf.get(CSR_MAX_EDGES_CONF, str(CSR_MAX_EDGES)))
-    n_edges = pathops.known_rows(adjacency)
-    if threshold <= 0:
-        reason = "forced"
-    elif not all(pathops.integral_keys(df, cols) for df, cols in keys):
-        reason = "non-integral keys"
-    else:
-        reason = "threshold"
-        n_edges = pathops.row_count(adjacency)
-    route = "csr" if reason == "threshold" and n_edges <= threshold else "spark"
-    out, n_vertices = run_csr() if route == "csr" else run_spark()
-    if _log.isEnabledFor(logging.DEBUG):
-        secs = time.perf_counter() - t0
-        _log.debug(
-            "%s: %s route (%s), %s vertices, %s edges, threshold %d, %.3f s",
-            kernel, route, reason, n_vertices, n_edges, threshold, secs,
-            extra={"kernel": kernel, "route": route, "reason": reason,
-                   "n_vertices": n_vertices, "n_edges": n_edges,
-                   "threshold": threshold, "seconds": secs})
-    return out
-
-
-def _csr_task(vertices: DataFrame, edges: DataFrame, kernel, out: str,
-              w: str = "NULL", sources: DataFrame | None = None) -> DataFrame:
-    """`kernel` (an operators/csr.py function) as one mapInArrow task with
-    output schema `out` over the vertex ids, the (src, dst) edges with
-    weight expression `w` and the optional sources, unioned and coalesced
-    to one partition."""
-    def tagged(df, kind, a, b="NULL", weight="NULL"):
-        return df.selectExpr(f"CAST({kind} AS TINYINT) AS kind", f"CAST({a} AS BIGINT) AS a",
-                             f"CAST({b} AS BIGINT) AS b", f"CAST({weight} AS DOUBLE) AS w")
-
-    rows = tagged(vertices.toDF("vid"), csr.VERTEX, "vid").union(
-        tagged(edges, csr.EDGE, "src", "dst", w))
-    if sources is not None:
-        rows = rows.union(tagged(sources.toDF("vid"), csr.SOURCE, "vid"))
-    return rows.coalesce(1).mapInArrow(kernel, out)
-
-
 _INTEGRAL_WIDTH = ["tinyint", "smallint", "int", "bigint"]
-
-
-def _as_type(df: DataFrame, vid_type: str, *ids: str) -> DataFrame:
-    """`df` with its vertex-id columns `ids` cast from bigint to `vid_type`."""
-    if vid_type == "bigint":
-        return df
-    return df.selectExpr(*(f"CAST({c} AS {vid_type}) AS {c}" if c in ids else c
-                           for c in df.columns))
 
 
 def pagerank(
@@ -185,15 +116,16 @@ def pagerank(
             raise ValueError(_NO_SOURCES)
         task = functools.partial(csr.pagerank, damping=damping, tol=tol, max_iter=max_iter,
                                  phantom_vertices=phantom_vertices)
-        ranks = _csr_task(vertices, edges, task, "vid bigint, pagerank double", "__w", sources)
+        ranks = pathops.csr_task(task, "vid bigint, pagerank double", edges, w="__w",
+                                 vertices=vertices, sources=sources)
         # phantom ids are bigint, and a union with them widens the id type
         vid_type = "bigint" if phantom_vertices else vertices.schema[0].dataType.simpleString()
-        return _as_type(ranks, vid_type, "vid"), None
+        return pathops.as_type(ranks, vid_type, "vid"), None
 
     keys = [(vertices, vertices.columns[:1]), (edges, ["src", "dst"])]
     if sources is not None:
         keys.append((sources, sources.columns[:1]))
-    return _routed("pagerank", edges, keys, run_csr, lambda: _pagerank_spark(
+    return pathops.routed("pagerank", edges, keys, run_csr, lambda: _pagerank_spark(
         edges, vertices, damping, tol, max_iter, phantom_vertices, sources))
 
 
@@ -408,15 +340,15 @@ def weakly_connected_component(
     und = _doubled_neighbors(edges)  # cached-persisted, shared with lcc etc.
 
     def run_csr():
-        comp = _csr_task(vertices, und, csr.weakly_connected_component,
-                         "vid bigint, component_id bigint")
+        comp = pathops.csr_task(csr.weakly_connected_component,
+                                "vid bigint, component_id bigint", und, vertices=vertices)
         # the DataFrame kernel's union of edge-side and vertex-side ids
         # widens to the wider of their types
         vid_type = max(vertices.schema[0].dataType.simpleString(),
                        und.schema["src"].dataType.simpleString(), key=_INTEGRAL_WIDTH.index)
-        return _as_type(comp, vid_type, "vid", "component_id"), None
+        return pathops.as_type(comp, vid_type, "vid", "component_id"), None
 
-    return _routed("weakly_connected_component", und,
+    return pathops.routed("weakly_connected_component", und,
                    [(vertices, vertices.columns[:1]), (und, ["src", "dst"])],
                    run_csr, lambda: (_wcc_spark(und, vertices), None))
 
@@ -680,11 +612,12 @@ def local_clustering_coefficient(edges: DataFrame, vertices: DataFrame) -> DataF
     nbr = _doubled_neighbors(edges)  # cache-owned persist
 
     def run_csr():
-        lcc = _csr_task(vertices, nbr, csr.local_clustering_coefficient,
-                        "vid bigint, local_clustering_coefficient double")
-        return _as_type(lcc, vertices.schema[0].dataType.simpleString(), "vid"), None
+        lcc = pathops.csr_task(csr.local_clustering_coefficient,
+                               "vid bigint, local_clustering_coefficient double", nbr,
+                               vertices=vertices)
+        return pathops.as_type(lcc, vertices.schema[0].dataType.simpleString(), "vid"), None
 
-    return _routed("local_clustering_coefficient", nbr,
+    return pathops.routed("local_clustering_coefficient", nbr,
                    [(vertices, vertices.columns[:1]), (nbr, ["src", "dst"])],
                    run_csr, lambda: (_lcc_spark(nbr, vertices), None))
 

@@ -50,6 +50,7 @@ Scale notes (100 TB / 1000 executors):
 
 from __future__ import annotations
 
+import functools
 import itertools
 import logging
 import os
@@ -63,6 +64,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 from ..errors import PGQCapacityError, PGQNotImplementedError
+from . import csr
 
 _INTEGRAL_TYPES = {"tinyint", "smallint", "int", "bigint"}
 
@@ -368,9 +370,12 @@ def dir_cached(kind: str, path: str, load):
 
 
 def session_cached(df: DataFrame, kind: str, params: tuple, cap: int, build):
-    """`build()` once per (params, file fingerprint of `df`, analyzed plan
-    of `df`) in df's session, keeping the newest `cap` entries of `kind`.
-    A hit returns the same frame object."""
+    """`build()` once per (params, column names, file fingerprint of `df`,
+    analyzed plan of `df`) in df's session, keeping the newest `cap`
+    entries of `kind`.  A hit returns the same frame object.  The names
+    are part of the key because sameResult ignores them: `weight` and
+    `edge_id` copies of one column are the same plan."""
+    params = (params, tuple(df.columns))
     jplan = df._jdf.queryExecution().analyzed()
     spark = df.sparkSession
     hit = _SESSION_CACHE.get(id(spark))
@@ -474,6 +479,113 @@ def row_count(df: DataFrame) -> int:
     return n
 
 
+# Single-task CSR route (operators/csr.py): the reference builds a
+# transient CSR and runs pagerank, WCC, LCC, its multi-lane BFS and its
+# multi-lane Bellman-Ford in one process, where each DataFrame round here
+# pays Spark's per-job driver cost.  When the cached adjacency frame a
+# kernel reads has at most `spark.duckpgq.csrMaxEdges` rows (default
+# CSR_MAX_EDGES; 0 keeps every call on the DataFrame kernels), the call
+# is one `mapInArrow` task over that frame and the call's vertex or
+# source rows, coalesced to one partition (no shuffle).
+CSR_MAX_EDGES_CONF = "spark.duckpgq.csrMaxEdges"
+# the CSR route was faster at every size measured up to 6e6 adjacency rows,
+# and a pagerank task over 1e7 rows holds about 1 GB (PERF.md "Single-task
+# CSR route")
+CSR_MAX_EDGES = 6_000_000
+
+
+def routed(kernel: str, adjacency: DataFrame, keys: list, run_csr, run_spark,
+           unsupported: str | None = None) -> DataFrame:
+    """Run `run_csr()` when the cached `adjacency` frame has at most the
+    conf's threshold rows, every frame in `keys` (frame, key columns) has
+    integral keys and the caller names no `unsupported` reason, else
+    `run_spark()`; both return (frame, vertex count or None).  The row
+    count comes from the cache, so a warm call counts nothing.  Logs the
+    call's one DEBUG record (`kernel`, `route`, `reason`, `n_vertices`,
+    `n_edges`, `threshold` and `seconds` attributes on the package
+    logger)."""
+    t0 = time.perf_counter()
+    threshold = int(adjacency.sparkSession.conf.get(CSR_MAX_EDGES_CONF, str(CSR_MAX_EDGES)))
+    n_edges = known_rows(adjacency)
+    if threshold <= 0:
+        reason = "forced"
+    elif unsupported:
+        reason = unsupported
+    elif not all(integral_keys(df, cols) for df, cols in keys):
+        reason = "non-integral keys"
+    else:
+        reason = "threshold"
+        n_edges = row_count(adjacency)
+    route = "csr" if reason == "threshold" and n_edges <= threshold else "spark"
+    out, n_vertices = run_csr() if route == "csr" else run_spark()
+    if _log.isEnabledFor(logging.DEBUG):
+        secs = time.perf_counter() - t0
+        _log.debug(
+            "%s: %s route (%s), %s vertices, %s edges, threshold %d, %.3f s",
+            kernel, route, reason, n_vertices, n_edges, threshold, secs,
+            extra={"kernel": kernel, "route": route, "reason": reason,
+                   "n_vertices": n_vertices, "n_edges": n_edges,
+                   "threshold": threshold, "seconds": secs})
+    return out
+
+
+def csr_task(kernel, out: str, edges: DataFrame, *, w: str | None = None,
+             vertices: DataFrame | None = None,
+             sources: DataFrame | None = None) -> DataFrame:
+    """`kernel` (an operators/csr.py function) as one mapInArrow task with
+    output schema `out` over the tagged union of the vertex ids, the
+    (src, dst) edges with weight expression `w` (no `w` column when None)
+    and the sources (a second column is each source's target), coalesced
+    to one partition."""
+    def tagged(df, kind, a, b="NULL", weight="NULL"):
+        cols = [f"CAST({kind} AS TINYINT) AS kind", f"CAST({a} AS BIGINT) AS a",
+                f"CAST({b} AS BIGINT) AS b"]
+        return df.selectExpr(*cols, *([] if w is None else [f"CAST({weight} AS DOUBLE) AS w"]))
+
+    rows = tagged(edges, csr.EDGE, "src", "dst", w)
+    if vertices is not None:
+        rows = tagged(vertices.toDF("vid"), csr.VERTEX, "vid").union(rows)
+    if sources is not None:
+        pair = len(sources.columns) == 2
+        rows = rows.union(tagged(sources.toDF(*("a", "b")[:1 + pair]), csr.SOURCE,
+                                 "a", "b" if pair else "NULL"))
+    return rows.coalesce(1).mapInArrow(kernel, out)
+
+
+def as_type(df: DataFrame, vid_type: str, *ids: str) -> DataFrame:
+    """`df` with its vertex-id columns `ids` cast from bigint to `vid_type`."""
+    if vid_type == "bigint":
+        return df
+    return df.selectExpr(*(f"CAST({c} AS {vid_type}) AS {c}" if c in ids else c
+                           for c in df.columns))
+
+
+def _sources_routed(kernel: str, edges: DataFrame, sources: DataFrame | None, task,
+                    out: str, run_spark, unsupported: str | None = None,
+                    w: str | None = None) -> DataFrame:
+    """`routed` for a kernel from `sources` (every edge endpoint when
+    None) over the prepared `edges`: the CSR route runs `task`, an
+    operators/csr.py function taking `all_sources`, with output schema
+    `out`.  The DataFrame kernels' output id types follow the source and
+    edge key types, and widen in a union only when a level is non-empty,
+    so the CSR route takes only inputs with one shared id type."""
+    types = {edges.schema["src"].dataType.simpleString(),
+             edges.schema["dst"].dataType.simpleString()}
+    keys = [(edges, ["src", "dst"])]
+    if sources is not None:
+        types.add(sources.schema[0].dataType.simpleString())
+        keys.append((sources, sources.columns[:1]))
+    if len(types) > 1:
+        unsupported = unsupported or "key types differ"
+
+    def run_csr():
+        rows = csr_task(functools.partial(task, all_sources=sources is None), out, edges,
+                        w=w, sources=sources)
+        return as_type(rows, min(types), "src", "dst"), None
+
+    return routed(kernel, edges, keys, run_csr, lambda: (run_spark(), None), unsupported)
+
+
 _PATH_REMEDY = (
     "Bound the traversal with max_hops / a quantifier upper bound, restrict "
     "the source set, or raise max_rows."
@@ -523,6 +635,11 @@ def bfs_distances(
     at the end of the offending level — a loud, catchable failure instead
     of an executor OOM.  The count rides the per-level checkpoint
     Observation, so the cap adds no extra Spark job.
+
+    The plain mode (no paths, no max_rows) takes the single-task CSR
+    route (see `routed`) when the adjacency fits one task and the source
+    and edge ids share one integral type: operators/csr.bfs_distances, a
+    level-synchronous multi-lane BFS with the same rows and types.
     """
     if k > 1 and not track_paths:
         raise ValueError("k > 1 requires track_paths (paths break ties)")
@@ -531,6 +648,18 @@ def bfs_distances(
     if track_paths and "edge_id" not in edges.columns:
         raise ValueError("track_paths requires an edge_id column (use edge_frame)")
     edges = _prep_edges(edges, num_partitions)
+    return _sources_routed(
+        "bfs_distances", edges, sources,
+        functools.partial(csr.bfs_distances, max_hops=max_hops),
+        "src bigint, dst bigint, dist int NOT NULL",
+        lambda: _bfs_spark(edges, sources, max_hops, track_paths, k, all_shortest, max_rows),
+        "track_paths" if track_paths else None if max_rows is None else "max_rows")
+
+
+def _bfs_spark(edges: DataFrame, sources: DataFrame | None, max_hops: int | None,
+               track_paths: bool, k: int, all_shortest: bool,
+               max_rows: int | None) -> DataFrame:
+    """bfs_distances' DataFrame kernel over the prepared `edges`."""
     if sources is None:
         srcs = edges.select("src").union(edges.select(F.col("dst").alias("src"))).distinct()
     else:
@@ -762,14 +891,33 @@ def bidirectional_length(
     so per-level joins shuffle only the frontier side; `best` stays
     bounded by the input pair count and rides each meet update's
     checkpoint job via an Observation (no extra count jobs).
+
+    When the forward adjacency fits one task (see `routed`), the call is
+    operators/csr.pair_distances instead: one BFS lane per distinct pair
+    source that stops at its last target, with no reversed adjacency.
     """
+    fwd = _prep_edges(edges.select("src", "dst"), num_partitions)
+
+    def run_csr():
+        task = functools.partial(csr.pair_distances, max_hops=max_hops)
+        return csr_task(task, "src bigint, dst bigint, dist int", fwd,
+                        sources=pairs.select("src", "dst")), None
+
+    return routed("bidirectional_length", fwd, [(fwd, ["src", "dst"])], run_csr,
+                  lambda: (_bidirectional_spark(edges, fwd, pairs, max_hops, num_partitions),
+                           None))
+
+
+def _bidirectional_spark(edges: DataFrame, fwd: DataFrame, pairs: DataFrame,
+                         max_hops: int | None, num_partitions: int | None) -> DataFrame:
+    """bidirectional_length's DataFrame kernel over the prepared forward
+    adjacency `fwd`."""
     pairs = (
         pairs.select(F.col("src").cast("long"), F.col("dst").cast("long"))
         .where(F.col("src").isNotNull() & F.col("dst").isNotNull())
         .distinct()
     )
     pairs, n_pairs = checkpoint_with_count(pairs)
-    fwd = _prep_edges(edges.select("src", "dst"), num_partitions)
     bwd = _prep_edges(
         edges.select(F.col("dst").alias("src"), F.col("src").alias("dst")),
         num_partitions,
@@ -1034,10 +1182,26 @@ def cheapest_path_distances(
     tie-breaking relies on exact cost equality — use integer-valued
     weights (float summation order can perturb equal costs by 1 ulp and
     flip which path is 'the' minimum).
+
+    Without paths, when the adjacency fits one task and the source and
+    edge ids share one integral type (see `routed`), the call is
+    operators/csr.cheapest_path_distances: the same Jacobi rounds in
+    numpy, so `max_iters` counts the same rounds.
     """
     if "weight" not in edges.columns:
         raise ValueError("cheapest_path_distances requires a weight column")
     edges = _prep_edges(edges, num_partitions)
+    return _sources_routed(
+        "cheapest_path_distances", edges, sources,
+        functools.partial(csr.cheapest_path_distances, max_iters=max_iters),
+        "src bigint, dst bigint, cost double",
+        lambda: _cheapest_spark(edges, sources, max_iters, track_paths),
+        "track_paths" if track_paths else None, w="weight")
+
+
+def _cheapest_spark(edges: DataFrame, sources: DataFrame | None, max_iters: int | None,
+                    track_paths: bool) -> DataFrame:
+    """cheapest_path_distances' DataFrame kernel over the prepared `edges`."""
     if track_paths and max_iters is None:
         # Termination guard: with a ZERO-weight cycle the lexicographic
         # tie-break can descend forever (each lap through the cycle can

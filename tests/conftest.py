@@ -4,7 +4,7 @@ import pytest
 from pyspark.sql import Row
 
 from duckpgq_extension_spark import PGQSession, get_spark
-from duckpgq_extension_spark.algorithms import CSR_MAX_EDGES_CONF
+from duckpgq_extension_spark.operators.paths import CSR_MAX_EDGES_CONF
 
 
 @pytest.fixture(scope="session")
@@ -80,8 +80,9 @@ def rows(df, *, sort=True):
 
 @pytest.fixture
 def dataframe_route(spark):
-    """pagerank, WCC and LCC on their DataFrame kernels: the CSR route's
-    edge threshold set to 0 for the test."""
+    """pagerank, WCC, LCC and the path kernels (bfs_distances,
+    bidirectional_length, cheapest_path_distances) on their DataFrame
+    kernels: the CSR route's edge threshold set to 0 for the test."""
     spark.conf.set(CSR_MAX_EDGES_CONF, "0")
     yield
     spark.conf.unset(CSR_MAX_EDGES_CONF)

@@ -13,7 +13,7 @@ from pyspark.sql import functions as F
 
 from duckpgq_extension_spark.operators import paths as P
 
-from .conftest import rows
+from .conftest import on_dataframe_route, rows
 
 SF = "/root/testdata/sf0.001"
 
@@ -136,3 +136,7 @@ def test_random_graphs_agree_with_batched_bfs(spark):
                 if r["dist"] is not None
             }
             assert bi == uni, (seed, max_hops, bi, uni)
+
+
+test_random_graphs_agree_with_batched_bfs_dataframe_route = on_dataframe_route(
+    test_random_graphs_agree_with_batched_bfs)

@@ -230,6 +230,7 @@ def test_any_shortest_k_parse_error(eid_pg):
         )
 
 
+@pytest.mark.usefixtures("dataframe_route")  # the CSR route checkpoints no levels
 def test_reliable_checkpoint_switch(eid_pg, tmp_path):
     """set_checkpoint_dir flips iterative kernels to reliable .checkpoint()
     (files land under the dir, results unchanged); None flips back."""

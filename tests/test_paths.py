@@ -13,7 +13,7 @@ from pyspark.sql import Row
 from duckpgq_extension_spark import PGQSession
 from duckpgq_extension_spark.errors import PGQBinderError, PGQConstraintError
 
-from .conftest import rows
+from .conftest import on_dataframe_route, rows
 
 
 @pytest.fixture(scope="session")
@@ -299,6 +299,10 @@ def test_bfs_max_hops_clamps_exactly(spark):
         got = {(r.src, r.dst): r.dist
                for r in bfs_distances(edges, max_hops=mh).collect()}
         assert got == capped, f"max_hops={mh} not exact"
+
+
+test_bfs_max_hops_clamps_exactly_dataframe_route = on_dataframe_route(
+    test_bfs_max_hops_clamps_exactly)
 
 
 def test_temporal_index_route_exact(spark, tmp_path):
@@ -687,6 +691,7 @@ def test_checkpoint_debug_records(spark, caplog):
     assert all(r.seconds >= 0 and r.name == "duckpgq_extension_spark" for r in recs)
 
 
+@pytest.mark.usefixtures("dataframe_route")  # levels of the DataFrame kernels
 def test_frontier_levels_log_kernel_labels(spark, caplog):
     """Each BFS level is one observed checkpoint, logged at DEBUG under
     the kernel's own label with the level's row count; the last record
@@ -714,6 +719,7 @@ def test_frontier_levels_log_kernel_labels(spark, caplog):
         ("ckpt", 1)] + [("betweenness", n) for n in levels]
 
 
+@pytest.mark.usefixtures("dataframe_route")  # plans of the DataFrame kernel
 def test_bidirectional_long_chain_plan_stops_growing(spark, monkeypatch):
     """A point query over a 25-edge chain expands one side 25 levels: the
     length is exact, and the visited set's re-materialize every

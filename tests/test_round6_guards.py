@@ -91,6 +91,11 @@ def test_prep_edges_cache_hits_same_plan(spark):
     # a semantically different frame misses
     d = P._prep_edges(df.where(F.col("src") > 1), 4)
     assert d is not a
+    # plans that compute the same values under other column names
+    # (sameResult ignores names) are different entries
+    w = P._prep_edges(df.withColumn("weight", F.col("src")), 4)
+    i = P._prep_edges(df.withColumn("edge_id", F.col("src")), 4)
+    assert i is not w and i.columns == ["src", "dst", "edge_id"]
     P.clear_prep_cache(spark)
     e = P._prep_edges(df, 4)
     assert e is not a, "clear_prep_cache must drop the entry"
